@@ -639,8 +639,7 @@ class CheckpointRunner:
         """Checkpointed execution of one row_condition domain:
         per-group single-pass partials (resumable), then the domain's
         finalize — stats merge, leftover aggregates, the deferred
-        (z-score) second pass, violation harvest for deferred checks,
-        and EVRs.
+        (z-score) job for their counts and samples, and EVRs.
 
         Incremental mode: ``grid_df`` (the appended files only) feeds
         the per-group partial pass while ``df`` stays the FULL domain
@@ -654,13 +653,10 @@ class CheckpointRunner:
         )
 
         # one shared plan-construction path with the in-process
-        # validator (planner._plan_domain); force_single because the
-        # group grid ALWAYS runs the per-partition partial plan —
-        # deferred (z-score) conditions are handled at this finalize,
-        # not per group
+        # validator (planner._plan_domain); deferred (z-score)
+        # conditions are handled at this finalize, not per group
         plan = validator._plan_domain(
-            df.sparkSession, map_checks, agg_checks, job_checks,
-            force_single=True,
+            df.sparkSession, map_checks, agg_checks, job_checks
         )
         partials = plan.partials or {}
         merges = plan.merges or {}
@@ -736,32 +732,6 @@ class CheckpointRunner:
             for i, k in enumerate(keys):
                 stats[k] = row[f"s{i}"]
 
-        # deferred second pass (planner phase 1b): conditions built
-        # against the now-final stats, one fused scan for the counts
-        deferred = [c for c in map_checks if c.deferred]
-        if deferred and stats.get("table.row_count", 0):
-            exprs = []
-            for chk in deferred:
-                cond, _ = chk.build(stats)
-                full = (
-                    (chk.consider() & cond)
-                    if chk.consider is not None
-                    else cond
-                )
-                exprs.append(
-                    F.sum(F.when(full, 1).otherwise(0)).alias(
-                        f"u{chk.index}"
-                    )
-                )
-            row = df.agg(*exprs).first()
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = (
-                    row[f"u{chk.index}"] or 0
-                )
-        else:
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = 0
-
         unexpected_lists: Dict[int, List[Any]] = {}
         for chk in map_checks:
             cap = caps.get(chk.index)
@@ -777,12 +747,16 @@ class CheckpointRunner:
             unexpected_lists[chk.index] = [
                 chk.value_decoder(json.loads(v)) for v in merged[:cap]
             ]
-        if any(
-            stats.get(f"unexpected:{c.index}", 0) for c in deferred
-        ):
-            unexpected_lists.update(
-                validator._harvest_violations(df, deferred, stats)
+        # deferred pass (planner phase 1b): conditions built against
+        # the now-final stats, counts and samples in one job over the
+        # full domain. n_parts describes the grid, which is the domain
+        # itself unless this run is incremental.
+        unexpected_lists.update(
+            validator._run_deferred(
+                df, [c for c in map_checks if c.deferred], stats,
+                n_parts if grid_df is None else None,
             )
+        )
 
         # EVRs
         for chk in schema_checks:

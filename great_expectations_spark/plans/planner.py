@@ -6,28 +6,38 @@ sparkdf_execution_engine.py:669-747), we compile the whole suite into a
 fixed small number of Spark jobs:
 
   phase 0  schema checks               driver-only, 0 jobs
-  phase 1  ONE fused df.agg(...)       row count, per-column nonnull /
+  phase 1  ONE per-partition agg job  (plans/single_pass.py) row
+                                       count, per-column nonnull /
                                        considered counts, min/max/mean/
-                                       stddev/sum/countDistinct, and the
+                                       stddev/sum partials, the
                                        unexpected-count of every
-                                       non-deferred map condition
-  phase 1b deferred-condition agg      only if a condition needs fused
-                                       stats first (z-score): 1 more job
-  phase 2  violations harvest          ONE scan for ALL map checks with
-                                       violations: array-of-struct →
-                                       explode → two-level BOUNDED
-                                       collect (per-partition slice K,
-                                       then global slice K) — memory is
+                                       non-deferred map condition AND
+                                       its bounded violation sample —
+                                       payloads decode once; memory is
                                        O(K × checks × partitions), never
                                        O(rows), unlike the reference's
                                        full collects
                                        (map_metric_provider.py:2589-2601)
+                                       + a column-pruned leftover agg
+                                       for non-mergeable stats
+  phase 1b deferred job                only if a condition needs merged
+                                       stats first (z-score): ONE more
+                                       per-partition job returning the
+                                       deferred counts and samples,
+                                       column-pruned to their columns
+                                       (_run_deferred; shared with the
+                                       checkpoint runner's finalize)
   phase 3  job checks                  uniqueness (two-phase hash agg),
                                        referential anti-joins, value
                                        metrics (quantiles/value_counts/
                                        histograms) — deduped via a
                                        shared MetricCache
   driver   mostly / bounds / drift math → EVRs → suite result
+
+``strategy="classic"`` is kept only as the equivalence oracle the
+tests compare against: phase 1 becomes one plain fused ``df.agg`` and
+the non-deferred samples come from a separate phase-2 harvest scan
+(two-level bounded collect), so payloads decode twice.
 
 Catalyst handles predicate pushdown + column pruning from the fused
 expression set; the stats pass never references unneeded columns (at
@@ -128,6 +138,30 @@ def collect_agg_exprs(
         for k, e in chk.needs.items():
             agg_exprs.setdefault(k, e)
     return agg_exprs
+
+
+def _concat_samples(
+    rows: List[Any], map_checks: List[MapCheck], caps: Dict[int, int]
+) -> Dict[int, List[Any]]:
+    """Each check's violation sample from single-pass rows: partition
+    slices concatenated in ascending pid order (deterministic), capped
+    and decoded. Checks without a cap (BOOLEAN_ONLY) get []."""
+    rows_sorted = sorted(rows, key=lambda r: r["__pid"])
+    out: Dict[int, List[Any]] = {}
+    for chk in map_checks:
+        cap = caps.get(chk.index)
+        if cap is None:
+            out[chk.index] = []
+            continue
+        merged: List[Any] = []
+        for r in rows_sorted:
+            merged.extend(r[f"v{chk.index}"] or [])
+            if len(merged) >= cap:
+                break
+        out[chk.index] = [
+            chk.value_decoder(json.loads(s)) for s in merged[:cap]
+        ]
+    return out
 
 
 class DomainPlan:
@@ -357,28 +391,21 @@ class SparkValidator:
         return exc_entries, domains
 
     def _plan_domain(
-        self, spark, map_checks, agg_checks, job_checks,
-        force_single: bool = False,
+        self, spark, map_checks, agg_checks, job_checks
     ) -> DomainPlan:
         """Build one domain's DomainPlan: the fused stat expressions,
         their partial/merge split for the single-pass executor, and the
         bounded violation collectors. Schema- and option-dependent
-        only — reusable across every batch with the same schema.
-
-        ``force_single`` is for callers that always execute the
-        per-partition partial plan and handle deferred conditions at
-        their own finalize (the checkpoint runner's per-group grid).
-        """
+        only — reusable across every batch with the same schema."""
         agg_exprs = collect_agg_exprs(map_checks, agg_checks, job_checks)
 
-        # strategy: the single-pass executor computes the fused stats
+        # strategy: "auto" is always the single pass — the fused stats
         # AND the bounded violation samples in ONE per-partition agg
-        # job (payloads decode once); deferred conditions (z-score)
-        # need resolved stats first, so they force the classic plan.
-        use_single = force_single or (
-            self.strategy in ("auto", "single_pass")
-            and not any(c.deferred for c in map_checks)
-        )
+        # job (payloads decode once). Deferred conditions (z-score)
+        # contribute their stat needs (mergeable mean/stddev partials)
+        # here and run in phase 1b (_run_deferred) against the merged
+        # stats. "classic" survives only as the tests' oracle.
+        use_single = self.strategy != "classic"
 
         partials = merges = leftover = None
         violation_exprs: List[Any] = []
@@ -469,8 +496,9 @@ class SparkValidator:
 
         stats: Dict[str, Any] = {}
         unexpected_lists: Optional[Dict[int, List[Any]]] = None
+        n_parts: Optional[int] = None
         if use_single and agg_exprs:
-            stats, unexpected_lists = self._clock(
+            stats, unexpected_lists, n_parts = self._clock(
                 "single_pass",
                 lambda: self._run_single_pass(df, plan, map_checks),
             )
@@ -490,32 +518,25 @@ class SparkValidator:
                 ):
                     stats[k] = 0
 
-        # phase 1b: deferred map conditions (need stats first)
+        # phase 1b: deferred map conditions (need merged stats first)
         deferred = [c for c in map_checks if c.deferred]
-        if deferred and stats.get("table.row_count", 0) > 0:
-            exprs = []
-            for chk in deferred:
-                cond, _ = chk.build(stats)
-                full = (
-                    (chk.consider() & cond) if chk.consider is not None else cond
-                )
-                exprs.append(
-                    F.sum(F.when(full, 1).otherwise(0)).alias(f"u{chk.index}")
-                )
-            row = df.agg(*exprs).first()
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = row[f"u{chk.index}"] or 0
-        else:
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = 0
-
-        # phase 2: violations harvest — already produced by the
-        # single-pass job, else one dedicated scan for ALL map checks
-        if unexpected_lists is None:
-            unexpected_lists = self._clock(
-                "harvest",
-                lambda: self._harvest_violations(df, map_checks, stats),
+        deferred_lists: Dict[int, List[Any]] = {}
+        if deferred:
+            deferred_lists = self._clock(
+                "deferred",
+                lambda: self._run_deferred(df, deferred, stats, n_parts),
             )
+
+        # phase 2 (classic only): violations harvest — the single-pass
+        # job already produced the non-deferred samples
+        if unexpected_lists is None:
+            unexpected_lists = {} if use_single else self._clock(
+                "harvest",
+                lambda: self._harvest_violations(
+                    df, [c for c in map_checks if not c.deferred], stats
+                ),
+            )
+        unexpected_lists.update(deferred_lists)
 
         # map-check EVRs
         for chk in map_checks:
@@ -572,7 +593,9 @@ class SparkValidator:
         See plans/single_pass.py. Non-mergeable stats (countDistinct)
         run in a leftover df.agg — Catalyst column-prunes it, so it
         stays a cheap scalar scan that never reads payload columns.
-        All expressions come precompiled from the DomainPlan.
+        All expressions come precompiled from the DomainPlan. Returns
+        (stats, violation samples, partition count); the count is
+        reused by the deferred job.
         """
         partials, merges, leftover = plan.partials, plan.merges, plan.leftover
         caps, violation_exprs = plan.caps, plan.violation_exprs
@@ -601,12 +624,14 @@ class SparkValidator:
             )
             leftover_thread.start()
 
+        n_parts = df.rdd.getNumPartitions()
         rows = run_single_pass(
             df,
             partials,
             violation_exprs,
             merges=merges,
             viol_caps={f"v{i}": cap for i, cap in caps.items()},
+            n_parts=n_parts,
         )
         stats = merge_stat_rows(rows, merges)
 
@@ -618,23 +643,56 @@ class SparkValidator:
             for i, k in enumerate(keys):
                 stats[k] = row[f"s{i}"]
 
-        # deterministic concat order across partitions, then cap
-        rows_sorted = sorted(rows, key=lambda r: r["__pid"])
-        unexpected_lists: Dict[int, List[Any]] = {}
-        for chk in map_checks:
-            cap = caps.get(chk.index)
-            if cap is None:
-                unexpected_lists[chk.index] = []
+        return stats, _concat_samples(rows, map_checks, caps), n_parts
+
+    def _run_deferred(
+        self,
+        df: DataFrame,
+        deferred: List[MapCheck],
+        stats: Dict[str, Any],
+        n_parts: Optional[int] = None,
+    ) -> Dict[int, List[Any]]:
+        """Phase 1b: ONE per-partition job for every deferred (z-score)
+        condition, built against the already-merged ``stats``. Writes
+        each check's unexpected count into ``stats`` and returns its
+        bounded violation sample. Catalyst column-prunes the job to the
+        conditions' columns, so it never decodes payloads. Used by
+        every strategy and by the checkpoint runner's finalize;
+        ``n_parts`` reuses the main pass's partition count."""
+        if not deferred or not stats.get("table.row_count", 0):
+            for chk in deferred:
+                stats[f"unexpected:{chk.index}"] = 0
+            return {chk.index: [] for chk in deferred}
+        spark = df.sparkSession
+        counts: Dict[str, Any] = {}
+        violation_exprs: List[Any] = []
+        caps: Dict[int, int] = {}
+        for chk in deferred:
+            cond, value = chk.build(stats)
+            full = (chk.consider() & cond) if chk.consider is not None else cond
+            counts[f"unexpected:{chk.index}"] = F.sum(
+                F.when(full, 1).otherwise(0)
+            )
+            rf = self._rf_for(chk)
+            if rf["result_format"] == "BOOLEAN_ONLY":
                 continue
-            merged: List[Any] = []
-            for r in rows_sorted:
-                merged.extend(r[f"v{chk.index}"] or [])
-                if len(merged) >= cap:
-                    break
-            unexpected_lists[chk.index] = [
-                chk.value_decoder(json.loads(s)) for s in merged[:cap]
-            ]
-        return stats, unexpected_lists
+            caps[chk.index] = self._cap_for(chk, rf)
+            violation_exprs.append(
+                violation_collect_expr(
+                    spark, full, value, caps[chk.index], f"v{chk.index}"
+                )
+            )
+        partials, merges, _ = plan_stat_partials(counts)
+        rows = run_single_pass(
+            df,
+            partials,
+            violation_exprs,
+            merges=merges,
+            viol_caps={f"v{i}": cap for i, cap in caps.items()},
+            n_parts=n_parts,
+        )
+        stats.update(merge_stat_rows(rows, merges))
+        return _concat_samples(rows, deferred, caps)
 
     def _harvest_violations(
         self, df: DataFrame, map_checks: List[MapCheck], stats: Dict[str, Any]

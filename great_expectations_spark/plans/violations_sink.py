@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.config import ExpectationSuite
-from ..operators.checks import MapCheck
 from ..operators.registry import get_compiler
 from .planner import split_checks
 
@@ -37,19 +36,33 @@ def violations_frame(
     suite's map checks — write it wherever you like. Non-map checks
     (aggregates, uniqueness, referential) don't emit per-row
     violations here; uniqueness violations are obtainable exactly
-    from the two-phase agg, referential ones from the anti-join."""
+    from the two-phase agg, referential ones from the anti-join.
+
+    Deferred checks (z-score) need resolved stats for their condition:
+    those stats come from one eager, column-pruned ``df.agg`` here."""
     compiled = []
     for i, cfg in enumerate(suite.expectations):
         compiled.append(get_compiler(cfg.expectation_type)(i, cfg, df.schema))
     _, map_checks, _, _ = split_checks(compiled)
-    map_checks = [c for c in map_checks if not c.deferred]
     if not map_checks:
         raise ValueError("suite has no exportable map conditions")
+
+    stats: Dict[str, Any] = {}
+    needs = {
+        k: e for c in map_checks if c.deferred
+        for k, e in c.stat_needs.items()
+    }
+    if needs:
+        keys = list(needs)
+        row = df.agg(
+            *[needs[k].alias(f"s{i}") for i, k in enumerate(keys)]
+        ).first()
+        stats = {k: row[f"s{i}"] for i, k in enumerate(keys)}
 
     entries = []
     meta: Dict[int, Any] = {}
     for chk in map_checks:
-        cond, value = chk.build({})
+        cond, value = chk.build(stats)
         full = (chk.consider() & cond) if chk.consider is not None else cond
         entries.append(
             F.when(

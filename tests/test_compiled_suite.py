@@ -48,7 +48,7 @@ def wide_suite():
                 min_value=0, max_value=11)
         .expect("expect_column_value_lengths_to_be_between", column="s",
                 min_value=2, max_value=3)
-        # deferred map check (z-score needs stats first → classic plan)
+        # deferred map check (z-score needs merged stats → phase 1b job)
         .expect("expect_column_value_z_scores_to_be_less_than", column="y",
                 threshold=1.5, double_sided=True)
         # agg checks

@@ -125,18 +125,190 @@ def test_single_pass_all_null_column(spark):
     assert_equivalent(classic, single)
     assert single.results[0].success  # vacuous truth
 
-def test_deferred_zscore_falls_back(spark):
-    # z-score needs resolved stats first -> auto strategy must still
-    # produce correct results (classic fallback)
-    df = images_df(spark, n_rows=1000, seed=11)
-    s = ges.suite("z").expect(
-        "expect_column_value_z_scores_to_be_less_than",
-        column="w",
-        threshold=10,
-        double_sided=True,
+def zscore_suite(**kwargs):
+    """Two deferred z-score checks (one double-, one single-sided)
+    beside a plain map check and an agg check; ``kwargs`` (e.g. a
+    row_condition) apply to every expectation."""
+    return (
+        ges.suite("z")
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="w", threshold=1.0, double_sided=True,
+                mostly=0.5, **kwargs)
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="h", threshold=0.5, double_sided=False,
+                mostly=0.5, **kwargs)
+        .expect("expect_column_values_to_be_in_set", column="fmt",
+                value_set=["jpeg", "png"], mostly=0.5, **kwargs)
+        .expect("expect_column_mean_to_be_between", column="w",
+                min_value=8, max_value=40, **kwargs)
     )
-    res = ges.validate(df, s, result_format="BASIC")
-    assert res.results[0].success
+
+
+@pytest.fixture(scope="module")
+def zdf(spark):
+    """8-partition scalar image table (payloads dropped, cached) whose
+    z-score violations span at least 4 partitions."""
+    df = images_df(spark, n_rows=2400, seed=21, num_partitions=8).drop(
+        "bytes"
+    ).cache()
+    st = df.agg(F.mean("w").alias("m"), F.stddev_samp("w").alias("s")).first()
+    violating = df.where(F.abs((F.col("w") - st["m"]) / st["s"]) >= 1.0)
+    assert (
+        violating.select(F.spark_partition_id()).distinct().count() >= 4
+    )
+    yield df
+    df.unpersist()
+
+
+def test_deferred_zscore_runs_in_single_pass(spark, tmp_path, monkeypatch):
+    """An image + z-score suite under "auto" runs the single pass plus
+    ONE deferred job; that job is column-pruned to the z-score column,
+    so it neither reads nor decodes payloads."""
+    from great_expectations_spark.data.images import write_images_table
+    from great_expectations_spark.plans import planner as pl
+
+    path = str(tmp_path / "images")
+    write_images_table(spark, path, n_rows=1000, seed=11)
+    df = spark.read.parquet(path)
+    s = (
+        ges.suite("z-img")
+        .expect("expect_image_phash_to_match", column="bytes",
+                max_hamming_distance=0, mostly=0.95)
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="w", threshold=1.0, double_sided=True,
+                mostly=0.5)
+    )
+
+    # spy on the deferred helper: record the plans of the jobs it runs
+    plans = []
+    orig_helper = pl.SparkValidator._run_deferred
+    orig_run = pl.run_single_pass
+
+    def run_spy(df_, partials, violation_exprs, **kw):
+        job = df_.groupBy(F.spark_partition_id().alias("__pid")).agg(
+            *[e.alias(a) for a, e in partials.items()], *violation_exprs
+        )
+        qe = job._jdf.queryExecution()
+        plans.append(
+            (qe.optimizedPlan().toString(), qe.executedPlan().toString())
+        )
+        return orig_run(df_, partials, violation_exprs, **kw)
+
+    def helper_spy(self, *a, **kw):
+        monkeypatch.setattr(pl, "run_single_pass", run_spy)
+        try:
+            return orig_helper(self, *a, **kw)
+        finally:
+            monkeypatch.setattr(pl, "run_single_pass", orig_run)
+
+    monkeypatch.setattr(pl.SparkValidator, "_run_deferred", helper_spy)
+    res = ges.validate(df, s, result_format="SUMMARY")
+
+    times = res.meta["phase_times"]
+    assert "single_pass" in times and "deferred" in times
+    assert "fused_agg" not in times and "harvest" not in times
+    assert len(plans) == 1
+    optimized, executed = plans[0]
+    # the leaf Relation lists every table column; nothing above it
+    # may reference the payload, and the scan must not read it
+    above_leaf = [
+        ln for ln in optimized.splitlines() if "Relation" not in ln
+    ]
+    assert not any("bytes" in ln for ln in above_leaf), optimized
+    assert "ArrowEvalPython" not in optimized
+    read_schemas = [
+        ln for ln in executed.splitlines() if "ReadSchema" in ln
+    ]
+    assert read_schemas and not any(
+        "bytes" in ln for ln in read_schemas
+    ), executed
+    z = res.results[1].result
+    assert z["unexpected_count"] > 0
+    assert len(z["partial_unexpected_list"]) == min(
+        20, z["unexpected_count"]
+    )
+
+
+@pytest.mark.parametrize(
+    "rf", ["BOOLEAN_ONLY", "BASIC", "SUMMARY", "COMPLETE"]
+)
+def test_zscore_matches_classic_result_formats(zdf, rf):
+    classic, single = run_both(zdf, zscore_suite(), rf=rf)
+    assert_equivalent(classic, single)
+    if rf == "COMPLETE":
+        # both strategies share the deferred job: check it directly
+        z = single.results[0].result
+        st = zdf.agg(F.mean("w"), F.stddev_samp("w")).first()
+        expected = zdf.where(
+            F.abs((F.col("w") - st[0]) / st[1]) >= 1.0
+        ).count()
+        assert expected > 0
+        assert z["unexpected_count"] == expected
+        assert len(z["unexpected_list"]) == expected
+
+
+def test_zscore_matches_classic_row_condition(zdf):
+    s = zscore_suite(row_condition="fmt = 'jpeg'",
+                     condition_parser="spark")
+    classic, single = run_both(zdf, s)
+    assert_equivalent(classic, single)
+    z = single.results[0].result
+    assert 0 < z["element_count"] < zdf.count()
+    assert z["unexpected_count"] > 0
+
+
+def test_zscore_matches_classic_constant_and_all_null(zdf):
+    df = zdf.withColumn("c", F.lit(5)).withColumn(
+        "n", F.lit(None).cast("double")
+    )
+    s = (
+        ges.suite("z-degenerate")
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="c", threshold=1.0)
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="n", threshold=1.0)
+    )
+    classic, single = run_both(df, s)
+    assert_equivalent(classic, single)
+    for r in single.results:  # std 0 / no values: nothing is unexpected
+        assert r.success and r.result["unexpected_count"] == 0
+
+
+def test_zscore_matches_classic_empty_frame(zdf):
+    classic, single = run_both(zdf.where(F.lit(False)), zscore_suite())
+    assert_equivalent(classic, single)
+    assert "deferred" in single.meta["phase_times"]
+    assert single.results[0].success  # vacuous truth
+
+
+def test_zscore_matches_classic_unexpected_rows(zdf):
+    rf = {"result_format": "SUMMARY", "include_unexpected_rows": True}
+    classic, single = run_both(zdf, zscore_suite(), rf=rf)
+    assert_equivalent(classic, single)
+    rows = single.results[0].result["unexpected_rows"]
+    assert 0 < len(rows) <= 20
+
+
+def test_zscore_second_level_merge_matches_classic(zdf, monkeypatch):
+    """Forced two-level merge for the deferred job too: every
+    single-pass job hands the driver at most fan_in rows."""
+    from great_expectations_spark.plans import planner as pl
+    from great_expectations_spark.plans import single_pass as sp
+
+    monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
+    n_rows = []
+    orig = sp.run_single_pass
+
+    def spy(df_, partials, violation_exprs, **kw):
+        rows = orig(df_, partials, violation_exprs, **kw)
+        n_rows.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(pl, "run_single_pass", spy)
+    classic, single = run_both(zdf, zscore_suite(), rf="COMPLETE")
+    assert_equivalent(classic, single)
+    # main pass + deferred job under single_pass, deferred under classic
+    assert len(n_rows) == 3 and max(n_rows) <= 3
 
 
 def test_second_level_merge_matches_direct_collect(spark, monkeypatch):

@@ -49,3 +49,28 @@ def test_sink_requires_map_conditions(spark):
     )
     with pytest.raises(ValueError, match="no exportable map conditions"):
         violations_frame(df, s)
+
+
+def test_sink_exports_zscore_violations(spark):
+    """Deferred (z-score) checks are exported too: their conditions
+    are built from stats resolved by one column-pruned agg, and the
+    exported rows per check equal validate()'s unexpected_count."""
+    df = images_df(spark, 2000, 13)
+    s = (
+        ges.suite("vz")
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="w", threshold=1.0, double_sided=True)
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="h", threshold=0.5, double_sided=False)
+        .expect("expect_column_values_to_be_in_set", column="fmt",
+                value_set=["jpeg", "png", "webp"])
+    )
+    out = violations_frame(df, s, id_columns=["image_id"])
+    sink_counts = {
+        r["check_index"]: r["count"]
+        for r in out.groupBy("check_index").count().collect()
+    }
+    res = ges.validate(df, s, result_format="BASIC")
+    for i, r in enumerate(res.results):
+        assert sink_counts.get(i, 0) == r.result["unexpected_count"], i
+    assert sink_counts[0] > 0 and sink_counts[1] > 0
