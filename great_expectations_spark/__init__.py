@@ -24,6 +24,11 @@ from .context import DataContext
 from .operators.registry import list_expectation_types
 from .plans.planner import CompiledSuite, SparkValidator, compile_suite, validate
 from .profile import profile_table, suite_from_baseline
+from .functions import pyworker
+
+# In a PySpark worker, stop each later task from re-reading every
+# zip archive on sys.path (see functions/pyworker.py).
+pyworker.install_in_worker()
 
 __version__ = "0.1.0"
 

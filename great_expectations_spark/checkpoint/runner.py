@@ -408,7 +408,7 @@ class CheckpointRunner:
         self, df: DataFrame, group: Any, partials, violation_exprs,
         merges=None, viol_caps=None, tag: str = "", n_parts=None,
     ) -> Dict[str, Any]:
-        t0 = time.time()
+        t0 = time.perf_counter()
         if self.group_col is None:
             gdf = df
         elif group is None:
@@ -425,7 +425,7 @@ class CheckpointRunner:
             "group": group if not tag else f"{group}{tag}",
             "tag": tag,
             "status": "done",
-            "duration_s": round(time.time() - t0, 3),
+            "duration_s": round(time.perf_counter() - t0, 3),
             "finished_at": time.time(),
             "partition_rows": [
                 {k: _jsonable(r[k]) for k in r.asDict()} for r in rows

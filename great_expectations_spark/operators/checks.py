@@ -7,12 +7,15 @@ fuse their Spark work:
 
 - SchemaCheck  — driver-only, evaluated from ``df.schema`` (no job).
 - MapCheck     — a per-row boolean *unexpected* condition; its
-                 considered/unexpected counts are fused into ONE
-                 ``df.agg(...)`` for the whole suite, and its
-                 violation values are harvested in ONE shared
-                 explode+bounded-collect pass.
+                 considered/unexpected counts AND its bounded
+                 violation sample are fused into the suite's ONE
+                 per-partition pass (plans/single_pass.py).
+                 Deferred conditions (z-score) need merged stats
+                 first and run in one extra column-pruned pass.
 - AggCheck     — needs named aggregate expressions (fused into the
-                 same single ``df.agg``) and finalizes driver-side.
+                 same single pass as mergeable partials; the rest,
+                 e.g. countDistinct, into one column-pruned leftover
+                 agg) and finalizes driver-side.
 - JobCheck     — needs its own Spark job(s) (two-phase uniqueness,
                  anti-join referential, quantiles, value_counts,
                  monotonicity with partition-boundary exchange, ...).

@@ -15,9 +15,10 @@ additions for the image+caption table (BASELINE.json north_star):
                                                real decoder — see codec)
 
 All run as pandas UDFs over Arrow batches (never per-row Python), and
-are compiled as MapChecks so their counts fuse into the single suite
-agg and their violations ride the shared harvest pass. Columns are
-pruned so suites WITHOUT payload checks never read `bytes`.
+are compiled as MapChecks so their counts and bounded violation
+samples fuse into the suite's single per-partition pass, where each
+payload is decoded once. Columns are pruned so suites WITHOUT payload
+checks never read `bytes`.
 """
 
 from __future__ import annotations

@@ -247,18 +247,18 @@ class SparkValidator:
     def _clock(self, phase: str, fn):
         """Record wall time of one engine phase into phase_times
         (exposed in suite-result meta for plan diagnostics)."""
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             return fn()
         finally:
             self.phase_times[phase] = round(
-                self.phase_times.get(phase, 0.0) + time.time() - t0, 3
+                self.phase_times.get(phase, 0.0) + time.perf_counter() - t0, 3
             )
 
     # -- public ---------------------------------------------------------------
 
     def validate(self) -> ExpectationSuiteValidationResult:
-        t0 = time.time()
+        t0 = time.perf_counter()
         evrs: Dict[int, ExpectationValidationResult] = {}
 
         if self._compiled is not None:
@@ -323,7 +323,7 @@ class SparkValidator:
         return ExpectationSuiteValidationResult.from_results(
             ordered,
             meta={
-                "validation_time_s": round(time.time() - t0, 3),
+                "validation_time_s": round(time.perf_counter() - t0, 3),
                 "phase_times": dict(self.phase_times),
                 "expectation_suite_name": self.suite.name,
                 "engine": "great_expectations_spark",

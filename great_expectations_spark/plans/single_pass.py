@@ -546,9 +546,11 @@ def run_single_pass(
     fan_in: Optional[int] = None,
     n_parts: Optional[int] = None,
 ) -> List[Any]:
-    """ONE Spark job: per-partition partial aggregation. No shuffle —
-    the grouping key is spark_partition_id(), so Catalyst plans a
-    partition-local hash agg.
+    """ONE per-partition partial aggregation over one scan. The
+    grouping key is spark_partition_id(), so the partial hash agg
+    before the ``hashpartitioning(__pid)`` Exchange already emits ONE
+    row per input partition; the shuffle moves only those rows (AQE
+    runs it as a map-stage job plus a result stage).
 
     When the input has more partitions than `fan_in` (and the caller
     supplies the merge recipes), a second-level aggregation re-groups
