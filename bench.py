@@ -154,36 +154,6 @@ DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 ARROW_BATCH = os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000")
 
 
-_JAR_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    "tools", "jvm", "ges-spark-udaf.jar",
-)
-
-
-def _ensure_udaf_jar() -> str:
-    """Build tools/jvm/ges-spark-udaf.jar if missing (javac against
-    the installed pyspark's jars, ~2 s) so every bench session runs
-    the true O(K) violation buffer — the production classpath shape
-    (spark.jars on submit). Returns '' when javac is unavailable; the
-    engine then uses the slice(collect_list) fallback, byte-identical
-    results (tests/test_jvm_udaf.py)."""
-    if os.path.exists(_JAR_PATH):
-        return _JAR_PATH
-    import shutil as _shutil
-    import subprocess
-
-    if _shutil.which("javac") is None:
-        return ""
-    try:
-        subprocess.run(
-            ["sh", os.path.join(os.path.dirname(_JAR_PATH), "build.sh")],
-            capture_output=True, timeout=300, check=True,
-        )
-    except Exception:  # noqa: BLE001 - fallback path is equivalent
-        return ""
-    return _JAR_PATH if os.path.exists(_JAR_PATH) else ""
-
-
 def make_session(
     cores: int, data_path: str = None, split_cores: int = None
 ) -> SparkSession:
@@ -224,11 +194,6 @@ def make_session(
         .config("spark.sql.files.maxPartitionBytes", str(mpb))
         .config("spark.sql.files.openCostInBytes", "64k")
     )
-    jar = _ensure_udaf_jar()
-    if jar:
-        builder = builder.config("spark.jars", jar).config(
-            "spark.driver.extraClassPath", jar
-        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -512,7 +477,7 @@ def _engine_fingerprint() -> str:
         f"levels={SCALE_LEVELS}|rows={IMG_ROWS}|gc={GC_OPTS}|"
         f"mem={DRIVER_MEM}|arrow={ARROW_BATCH}|"
         f"spc={os.environ.get('SPARK_GRAFT_SPLITS_PER_CORE', '6')}|"
-        f"jar={bool(_ensure_udaf_jar())}|host={_host_id()}"
+        f"host={_host_id()}"
     )
     h.update(knobs.encode())
     return h.hexdigest()[:16]

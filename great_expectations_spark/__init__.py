@@ -3,9 +3,9 @@
 Brand-new Spark-first implementation of the validation semantics of
 Great Expectations 0.15.39 (reference: tanelk/great_expectations).
 Declarative constraint suites are compiled by a driver-side planner
-into a minimal number of Spark jobs: one fused multi-aggregate pass for
-all per-column stats and map-condition counts, one bounded violations
-harvest, two-phase hash aggregation for uniqueness, and anti-joins for
+into a minimal number of Spark jobs: one fused per-partition pass for
+all per-column stats, map-condition counts and bounded violation
+samples, two-phase hash aggregation for uniqueness, and anti-joins for
 referential integrity. See SURVEY.md for the full design rationale.
 """
 

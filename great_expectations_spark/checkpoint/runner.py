@@ -655,12 +655,8 @@ class CheckpointRunner:
         # one shared plan-construction path with the in-process
         # validator (planner._plan_domain); deferred (z-score)
         # conditions are handled at this finalize, not per group
-        plan = validator._plan_domain(
-            df.sparkSession, map_checks, agg_checks, job_checks
-        )
-        partials = plan.partials or {}
-        merges = plan.merges or {}
-        leftover = plan.leftover or {}
+        plan = validator._plan_domain(map_checks, agg_checks, job_checks)
+        partials, merges, leftover = plan.partials, plan.merges, plan.leftover
         caps = plan.caps
         violation_exprs = plan.violation_exprs
 
@@ -722,7 +718,7 @@ class CheckpointRunner:
         all_rows: List[Dict[str, Any]] = []
         for gs in group_states:
             all_rows.extend(gs["partition_rows"])
-        stats = merge_stat_rows(all_rows, merges)
+        stats = merge_stat_rows(all_rows, merges, self.spark)
 
         if leftover:  # global-only aggregates (e.g. exact countDistinct)
             keys = list(leftover)

@@ -82,10 +82,9 @@ def _distinct_count_need(column: str, cfg, schema=None):
     MERGEABLE Datasketches sketch partial — fused into the one
     per-partition pass (no extra scan) and union-mergeable across
     second-level buckets AND incremental checkpoint runs. Other types
-    (and the classic strategy) use approx_count_distinct (HLL++) as a
-    leftover aggregate. No reference counterpart (its Spark engine is
-    exact-only, column_distinct_values.py:126-137); opt-in, default
-    exact."""
+    use approx_count_distinct (HLL++) as a leftover aggregate. No
+    reference counterpart (its Spark engine is exact-only,
+    column_distinct_values.py:126-137); opt-in, default exact."""
     c = F.col(column)
     if cfg.kwargs.get("approximate"):
         rsd = float(cfg.kwargs.get("rsd", 0.05))

@@ -34,11 +34,6 @@ fixed small number of Spark jobs:
                                        shared MetricCache
   driver   mostly / bounds / drift math → EVRs → suite result
 
-``strategy="classic"`` is kept only as the equivalence oracle the
-tests compare against: phase 1 becomes one plain fused ``df.agg`` and
-the non-deferred samples come from a separate phase-2 harvest scan
-(two-level bounded collect), so payloads decode twice.
-
 Catalyst handles predicate pushdown + column pruning from the fused
 expression set; the stats pass never references unneeded columns (at
 scale: never reads the image `bytes` column unless a payload check is
@@ -173,7 +168,6 @@ class DomainPlan:
 
     __slots__ = (
         "agg_exprs",
-        "use_single",
         "partials",
         "merges",
         "leftover",
@@ -181,10 +175,9 @@ class DomainPlan:
         "caps",
     )
 
-    def __init__(self, agg_exprs, use_single, partials, merges, leftover,
+    def __init__(self, agg_exprs, partials, merges, leftover,
                  violation_exprs, caps):
         self.agg_exprs = agg_exprs
-        self.use_single = use_single
         self.partials = partials
         self.merges = merges
         self.leftover = leftover
@@ -218,7 +211,6 @@ class SparkValidator:
         result_format: Any = "BASIC",
         complete_cap: int = 100_000,
         catch_exceptions: bool = True,
-        strategy: str = "auto",
         evaluation_parameters: Optional[Dict[str, Any]] = None,
         schema: Any = None,
         _compiled: "Optional[CompiledSuite]" = None,
@@ -239,9 +231,6 @@ class SparkValidator:
         self.result_format = parse_result_format(result_format)
         self.complete_cap = complete_cap
         self.catch_exceptions = catch_exceptions
-        if strategy not in ("auto", "single_pass", "classic"):
-            raise ValueError(f"unknown strategy {strategy!r}")
-        self.strategy = strategy
         self.phase_times: Dict[str, float] = {}
 
     def _clock(self, phase: str, fn):
@@ -390,49 +379,34 @@ class SparkValidator:
             domains.append(dom)
         return exc_entries, domains
 
-    def _plan_domain(
-        self, spark, map_checks, agg_checks, job_checks
-    ) -> DomainPlan:
+    def _plan_domain(self, map_checks, agg_checks, job_checks) -> DomainPlan:
         """Build one domain's DomainPlan: the fused stat expressions,
         their partial/merge split for the single-pass executor, and the
-        bounded violation collectors. Schema- and option-dependent
-        only — reusable across every batch with the same schema."""
+        bounded violation collectors. Deferred conditions (z-score)
+        contribute only their stat needs (mergeable mean/stddev
+        partials) here; they run in phase 1b (_run_deferred) against
+        the merged stats. Schema- and option-dependent only — reusable
+        across every batch with the same schema."""
         agg_exprs = collect_agg_exprs(map_checks, agg_checks, job_checks)
-
-        # strategy: "auto" is always the single pass — the fused stats
-        # AND the bounded violation samples in ONE per-partition agg
-        # job (payloads decode once). Deferred conditions (z-score)
-        # contribute their stat needs (mergeable mean/stddev partials)
-        # here and run in phase 1b (_run_deferred) against the merged
-        # stats. "classic" survives only as the tests' oracle.
-        use_single = self.strategy != "classic"
-
-        partials = merges = leftover = None
+        partials, merges, leftover = plan_stat_partials(agg_exprs)
         violation_exprs: List[Any] = []
         caps: Dict[int, int] = {}
-        if use_single and agg_exprs:
-            partials, merges, leftover = plan_stat_partials(agg_exprs)
-            for chk in map_checks:
-                if chk.deferred:
-                    continue
-                rf = self._rf_for(chk)
-                if rf["result_format"] == "BOOLEAN_ONLY":
-                    continue
-                caps[chk.index] = self._cap_for(chk, rf)
-                cond, value = chk.build({})
-                full = (
-                    (chk.consider() & cond)
-                    if chk.consider is not None
-                    else cond
+        for chk in map_checks:
+            if chk.deferred:
+                continue
+            rf = self._rf_for(chk)
+            if rf["result_format"] == "BOOLEAN_ONLY":
+                continue
+            caps[chk.index] = self._cap_for(chk, rf)
+            cond, value = chk.build({})
+            full = (chk.consider() & cond) if chk.consider is not None else cond
+            violation_exprs.append(
+                violation_collect_expr(
+                    full, value, caps[chk.index], f"v{chk.index}"
                 )
-                violation_exprs.append(
-                    violation_collect_expr(
-                        spark, full, value, caps[chk.index], f"v{chk.index}"
-                    )
-                )
+            )
         return DomainPlan(
-            agg_exprs, use_single, partials, merges, leftover,
-            violation_exprs, caps,
+            agg_exprs, partials, merges, leftover, violation_exprs, caps
         )
 
     def _validate_domain(
@@ -461,12 +435,8 @@ class SparkValidator:
         if plan is None:
             plan = self._clock(
                 "compile",
-                lambda: self._plan_domain(
-                    df.sparkSession, map_checks, agg_checks, job_checks
-                ),
+                lambda: self._plan_domain(map_checks, agg_checks, job_checks),
             )
-        agg_exprs = plan.agg_exprs
-        use_single = plan.use_single
 
         # shared metric cache, created BEFORE phase 1 so JobCheck
         # prefetches can overlap the single-pass scan: Spark schedules
@@ -495,48 +465,23 @@ class SparkValidator:
             prefetch_threads.append(t)
 
         stats: Dict[str, Any] = {}
-        unexpected_lists: Optional[Dict[int, List[Any]]] = None
+        unexpected_lists: Dict[int, List[Any]] = {}
         n_parts: Optional[int] = None
-        if use_single and agg_exprs:
+        if plan.agg_exprs:
             stats, unexpected_lists, n_parts = self._clock(
                 "single_pass",
                 lambda: self._run_single_pass(df, plan, map_checks),
             )
-        elif agg_exprs:
-            keys = list(agg_exprs)
-            row = self._clock(
-                "fused_agg",
-                lambda: df.agg(
-                    *[agg_exprs[k].alias(f"s{i}") for i, k in enumerate(keys)]
-                ).first(),
-            )
-            stats = {k: row[f"s{i}"] for i, k in enumerate(keys)}
-            # sums over empty frames come back NULL — normalize to 0
-            for k, v in stats.items():
-                if v is None and (
-                    k.startswith(("nonnull:", "considered:", "unexpected:"))
-                ):
-                    stats[k] = 0
 
         # phase 1b: deferred map conditions (need merged stats first)
         deferred = [c for c in map_checks if c.deferred]
-        deferred_lists: Dict[int, List[Any]] = {}
         if deferred:
-            deferred_lists = self._clock(
-                "deferred",
-                lambda: self._run_deferred(df, deferred, stats, n_parts),
+            unexpected_lists.update(
+                self._clock(
+                    "deferred",
+                    lambda: self._run_deferred(df, deferred, stats, n_parts),
+                )
             )
-
-        # phase 2 (classic only): violations harvest — the single-pass
-        # job already produced the non-deferred samples
-        if unexpected_lists is None:
-            unexpected_lists = {} if use_single else self._clock(
-                "harvest",
-                lambda: self._harvest_violations(
-                    df, [c for c in map_checks if not c.deferred], stats
-                ),
-            )
-        unexpected_lists.update(deferred_lists)
 
         # map-check EVRs
         for chk in map_checks:
@@ -633,7 +578,7 @@ class SparkValidator:
             viol_caps={f"v{i}": cap for i, cap in caps.items()},
             n_parts=n_parts,
         )
-        stats = merge_stat_rows(rows, merges)
+        stats = merge_stat_rows(rows, merges, df.sparkSession)
 
         if leftover_thread is not None:
             self._clock("leftover_join", leftover_thread.join)
@@ -657,13 +602,12 @@ class SparkValidator:
         each check's unexpected count into ``stats`` and returns its
         bounded violation sample. Catalyst column-prunes the job to the
         conditions' columns, so it never decodes payloads. Used by
-        every strategy and by the checkpoint runner's finalize;
-        ``n_parts`` reuses the main pass's partition count."""
+        validate and by the checkpoint runner's finalize; ``n_parts``
+        reuses the main pass's partition count."""
         if not deferred or not stats.get("table.row_count", 0):
             for chk in deferred:
                 stats[f"unexpected:{chk.index}"] = 0
             return {chk.index: [] for chk in deferred}
-        spark = df.sparkSession
         counts: Dict[str, Any] = {}
         violation_exprs: List[Any] = []
         caps: Dict[int, int] = {}
@@ -679,7 +623,7 @@ class SparkValidator:
             caps[chk.index] = self._cap_for(chk, rf)
             violation_exprs.append(
                 violation_collect_expr(
-                    spark, full, value, caps[chk.index], f"v{chk.index}"
+                    full, value, caps[chk.index], f"v{chk.index}"
                 )
             )
         partials, merges, _ = plan_stat_partials(counts)
@@ -691,73 +635,8 @@ class SparkValidator:
             viol_caps={f"v{i}": cap for i, cap in caps.items()},
             n_parts=n_parts,
         )
-        stats.update(merge_stat_rows(rows, merges))
+        stats.update(merge_stat_rows(rows, merges, df.sparkSession))
         return _concat_samples(rows, deferred, caps)
-
-    def _harvest_violations(
-        self, df: DataFrame, map_checks: List[MapCheck], stats: Dict[str, Any]
-    ) -> Dict[int, List[Any]]:
-        """One scan collecting bounded per-check violation values.
-
-        Builds array<struct<c:int,v:string>> of per-check violating
-        JSON values, explodes the non-null entries, then bounds memory
-        with a two-level slice(collect_list): per (spark partition,
-        check) first, then per check. Replaces the reference's
-        per-metric filter+collect jobs
-        (map_metric_provider.py:2555-2601) with a single pass.
-        """
-        wanted: List[MapCheck] = []
-        caps: Dict[int, int] = {}
-        for chk in map_checks:
-            rf = self._rf_for(chk)
-            if rf["result_format"] == "BOOLEAN_ONLY":
-                continue
-            if stats.get(f"unexpected:{chk.index}", 0) == 0:
-                continue
-            wanted.append(chk)
-            caps[chk.index] = self._cap_for(chk, rf)
-        if not wanted:
-            return {chk.index: [] for chk in map_checks}
-
-        k_max = max(caps.values())
-        entries = []
-        for chk in wanted:
-            cond, value = chk.build(stats)
-            full = (chk.consider() & cond) if chk.consider is not None else cond
-            entries.append(
-                F.when(
-                    full,
-                    F.struct(
-                        F.lit(chk.index).cast("int").alias("c"), value.alias("v")
-                    ),
-                )
-            )
-        arr = F.array(*entries)
-        exploded = df.select(
-            F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("e")
-        ).select(
-            F.col("e.c").alias("c"),
-            F.col("e.v").alias("v"),
-            F.spark_partition_id().alias("p"),
-        )
-        lvl1 = exploded.groupBy("p", "c").agg(
-            F.slice(F.collect_list("v"), 1, k_max).alias("vs")
-        )
-        rows = (
-            lvl1.groupBy("c")
-            .agg(F.slice(F.flatten(F.collect_list("vs")), 1, k_max).alias("vs"))
-            .collect()
-        )
-        by_index = {r["c"]: r["vs"] for r in rows}
-        out: Dict[int, List[Any]] = {}
-        for chk in map_checks:
-            raw = by_index.get(chk.index, [])
-            cap = caps.get(chk.index, 0)
-            decoded = [
-                chk.value_decoder(json.loads(s)) for s in raw[:cap]
-            ]
-            out[chk.index] = decoded
-        return out
 
     def _finalize_map_check(
         self,
@@ -847,7 +726,6 @@ class CompiledSuite:
         result_format: Any = "BASIC",
         complete_cap: int = 100_000,
         catch_exceptions: bool = True,
-        strategy: str = "auto",
         evaluation_parameters: Optional[Dict[str, Any]] = None,
     ):
         self.suite = suite
@@ -868,7 +746,6 @@ class CompiledSuite:
             result_format=result_format,
             complete_cap=complete_cap,
             catch_exceptions=catch_exceptions,
-            strategy=strategy,
             evaluation_parameters=evaluation_parameters,
         )
         tmpl = SparkValidator(None, suite, schema=schema, **self._opts)
@@ -878,7 +755,7 @@ class CompiledSuite:
                 continue
             try:
                 _, map_c, agg_c, job_c = split_checks(dom.checks)
-                dom.plan = tmpl._plan_domain(spark, map_c, agg_c, job_c)
+                dom.plan = tmpl._plan_domain(map_c, agg_c, job_c)
             except Exception as exc:  # noqa: BLE001 - surfaced as EVRs per batch
                 dom.error = (exc, traceback.format_exc())
 

@@ -1,9 +1,7 @@
 """Single-pass per-partition suite execution.
 
-The classic plan (plans/planner.py) runs phase 1 (fused df.agg) and
-phase 2 (violations harvest) as two separate scans. For payload-heavy
-tables that means decoding every image twice. This module compiles the
-same work into ONE Spark job:
+The suite's stats AND its bounded violation samples come from ONE
+Spark job, so every payload is decoded once:
 
     df.groupBy(spark_partition_id()).agg(
         <partial stats: counts / sums / mins / maxs / (n, mean, M2)>,
@@ -16,18 +14,13 @@ parallel variance merge for stddev; above SECOND_LEVEL_FAN_IN
 partitions, an executor-side second-level merge first, so the driver
 receives O(fan_in) rows regardless of partition count).
 
-Violation memory: two tiers. With the ges-spark-udaf jar on the
-session classpath (tools/jvm — a 100-line typed Aggregator, built by
-tools/jvm/build.sh and shipped via spark.jars), the sample aggregates
-in a TRUE O(K) buffer that stops accumulating at the cap
-(violation_collect_expr). Without it, the fallback
-slice(collect_list(when(cond, value))) bounds what each partition
-EMITS (K values) but its buffer grows to O(violating values in the
-partition) before the slice applies — capped by the split size (a
-128 MB split cannot buffer more than ~3x 128 MB of JSON-encoded
-values, per check), survivable but not O(K). Both paths produce
-byte-identical samples (tests/test_jvm_udaf.py); a Python UDAF was
-never an option (it would drag every row through Arrow).
+Violation memory: each partition's collect_list buffer holds that
+partition's violating values (bounded by the split size, not by K),
+and only the first K of them are emitted per partition and check.
+The slice applies after the final aggregate, so the partial buffer
+crosses the one-row-per-partition Exchange whole. Spark has no
+bounded collect aggregate, and a Python UDAF would drag every row
+through Arrow.
 
 Aggregates that cannot be merged from partition partials
 (countDistinct) go to a LEFTOVER df.agg job — which Catalyst
@@ -85,17 +78,12 @@ def _lgk_for_rsd(rsd: float) -> int:
     return max(4, min(21, math.ceil(2 * math.log2(1.04 / rsd))))
 
 
-def _hll_estimate(sketches: List[bytes]) -> int:
+def _hll_estimate(spark, sketches: List[bytes]) -> int:
     """Union + estimate collected partition sketches as one tiny local
     Spark job (len(sketches) rows — at most the second-level fan-in),
     so the driver needs no datasketches Python dependency."""
     if not sketches:
         return 0
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for HLL merge")
     row = (
         spark.createDataFrame([(s,) for s in sketches], "s binary")
         .agg(F.hll_sketch_estimate(F.hll_union_agg("s")).alias("e"))
@@ -117,7 +105,7 @@ def _parse_kll_key(key: str) -> Tuple[int, str, List[float]]:
 
 
 def _kll_quantiles(
-    sketches: List[bytes], qs: List[float]
+    spark, sketches: List[bytes], qs: List[float]
 ) -> Optional[List[float]]:
     """Merge collected partition KLL sketches and extract quantiles as
     one tiny local Spark job (len(sketches) rows — at most the
@@ -125,11 +113,6 @@ def _kll_quantiles(
     (all-null column)."""
     if not sketches:
         return None
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for KLL merge")
     merged = F.kll_merge_agg_double("s")
     row = (
         spark.createDataFrame([(s,) for s in sketches], "s binary")
@@ -199,11 +182,10 @@ def plan_stat_partials(
             # driver, and across incremental checkpoint runs — so the
             # stat needs NO extra scan (exact countDistinct and
             # approx_count_distinct are leftover full-scan aggregates
-            # here). The classic strategy keeps approx_count_distinct
-            # (HLL++); both are exact at small cardinality and agree
-            # within rsd elsewhere. Only emitted for the types
-            # hll_sketch_agg supports (library_agg._distinct_count_need
-            # gates on the schema).
+            # here). Only emitted for the types hll_sketch_agg
+            # supports (library_agg._distinct_count_need gates on the
+            # schema); other types keep a leftover
+            # approx_count_distinct (HLL++).
             rsd = float(
                 key[len("column.distinct_values.count~hll"):].split(
                     ":", 1
@@ -261,9 +243,12 @@ def plan_stat_partials(
 
 
 def merge_stat_rows(
-    rows: List[Any], merges: Dict[str, _Merge]
+    rows: List[Any], merges: Dict[str, _Merge], spark
 ) -> Dict[str, Any]:
-    """Driver-side merge of the collected per-partition partials."""
+    """Driver-side merge of the collected per-partition partials.
+    ``spark`` runs the sketch merges; it is passed explicitly because
+    SparkSession.getActiveSession() is None on threads other than the
+    one that built the session."""
     stats: Dict[str, Any] = {}
     for key, m in merges.items():
         vals = [[r[a] for a in m.aliases] for r in rows]
@@ -290,7 +275,7 @@ def merge_stat_rows(
                 for b in (_unbox_bytes(v[0]) for v in vals)
                 if b is not None
             ]
-            stats[key] = _hll_estimate(sketches)
+            stats[key] = _hll_estimate(spark, sketches)
         elif m.kind == "kll":
             _kk, _c, qs = _parse_kll_key(key)
             sketches = [
@@ -298,7 +283,7 @@ def merge_stat_rows(
                 for b in (_unbox_bytes(v[0]) for v in vals)
                 if b is not None
             ]
-            stats[key] = _kll_quantiles(sketches, qs)
+            stats[key] = _kll_quantiles(spark, sketches, qs)
         elif m.kind == "stddev":
             # Chan et al. pairwise merge of (n, mean, M2) partials —
             # numerically stable across any partition count
@@ -322,92 +307,16 @@ def merge_stat_rows(
     return stats
 
 
-def violation_slice_expr(
+def violation_collect_expr(
     cond: Column, value: Column, cap: int, alias: str
 ) -> Column:
     """Per-partition violation sample: the collect_list only ever
     holds values for rows matching cond; the slice caps what the
     partition EMITS at K (the in-scan buffer is bounded by the
-    partition's violating values, not by K — see module docstring).
-    This is the always-available fallback; violation_collect_expr
-    upgrades to a true O(K) buffer when the ges-spark-udaf jar is on
-    the session classpath."""
+    partition's violating values, not by K — see module docstring)."""
     return F.slice(
         F.collect_list(F.when(cond, value)), 1, cap
     ).alias(alias)
-
-
-# session key -> whether ges.spark.CappedCollect is reachable (the
-# reflection probe costs a py4j round-trip; memoize per session).
-# Keyed by the SparkContext applicationId, NOT id(spark): a
-# garbage-collected session's address can be reused by a new session,
-# which would silently inherit a stale False verdict and permanently
-# downgrade it to the O(partition-violations) fallback even with the
-# jar present. applicationId is unique per JVM-backed context.
-_JVM_UDAF_AVAILABLE: Dict[str, bool] = {}
-
-
-def _session_key(spark) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # noqa: BLE001 - stopped context: don't cache
-        return f"__no_context_{id(spark)}"
-
-
-def _jvm_capped_collect(spark, col: Column, cap: int) -> Optional[Column]:
-    """Column invoking ges.spark.CappedCollect (tools/jvm) if the jar
-    is reachable in the driver JVM, else None. Two lookup paths: the
-    py4j root class loader (jar supplied via spark.jars /
-    spark.driver.extraClassPath at launch) and the thread context
-    class loader (jar supplied via sparkContext.addJar in local
-    mode)."""
-    if spark is None:
-        return None
-    key = _session_key(spark)
-    # NEVER memoize under the no-context fallback key: it embeds
-    # id(spark), and a recycled address would hand a later session a
-    # stale verdict — the exact corruption applicationId keying fixed
-    memoize = not key.startswith("__no_context_")
-    if _JVM_UDAF_AVAILABLE.get(key) is False:
-        return None
-    jvm = spark._jvm
-    jcol = None
-    try:
-        jcol = jvm.ges.spark.CappedCollect.cappedCollect(col._jc, cap)
-    except Exception:  # noqa: BLE001 - not on the root class loader
-        try:
-            loader = jvm.Thread.currentThread().getContextClassLoader()
-            cls = loader.loadClass("ges.spark.CappedCollect")
-            col_cls = jvm.java.lang.Class.forName(
-                "org.apache.spark.sql.Column"
-            )
-            m = cls.getMethod(
-                "cappedCollect", col_cls, jvm.java.lang.Integer.TYPE
-            )
-            jcol = m.invoke(None, col._jc, cap)
-        except Exception:  # noqa: BLE001 - jar absent: use fallback
-            if memoize:
-                _JVM_UDAF_AVAILABLE[key] = False
-            return None
-    if memoize:
-        _JVM_UDAF_AVAILABLE[key] = True
-    return Column(jcol)
-
-
-def violation_collect_expr(
-    spark, cond: Column, value: Column, cap: int, alias: str
-) -> Column:
-    """Violation sample with a true O(K) aggregation buffer when the
-    ges-spark-udaf jar (tools/jvm) is on the classpath: the JVM
-    aggregator stops ACCUMULATING at cap, closing the
-    buffer-grows-with-partition-violations bound of the fallback
-    slice(collect_list(...)). Output shape is identical to the
-    fallback (array<string> of transport JSON), so every downstream
-    consumer — driver concat, second-level merge — is unchanged."""
-    jcol = _jvm_capped_collect(spark, F.when(cond, value), cap)
-    if jcol is None:
-        return violation_slice_expr(cond, value, cap, alias)
-    return F.from_json(jcol, "array<string>").alias(alias)
 
 
 # Max rows the driver receives from the single-pass job. At 10^12

@@ -1,8 +1,7 @@
 """Declarative ANN-recall gate (expect_ann_recall_to_be_greater_than):
 the label-vs-geometry failure the ann_recall audit query exposed
 (random label buckets -> recall@3 ~0.17; learned k-means buckets ->
-~0.80) must be suite-failable, with classic/single_pass-identical
-EVRs. Runs on the driver-generated sf0.001 embeddings parquet, whose
+~0.80) must be suite-failable, with deterministic EVRs. Runs on the driver-generated sf0.001 embeddings parquet, whose
 `label` column is deliberately non-geometric."""
 
 import os
@@ -35,16 +34,6 @@ def _gate_suite(method, min_recall):
     )
 
 
-def _run_both(df, suite):
-    classic = ges.SparkValidator(
-        df, suite, strategy="classic"
-    ).validate()
-    single = ges.SparkValidator(
-        df, suite, strategy="single_pass"
-    ).validate()
-    return classic, single
-
-
 def test_label_buckets_fail_kmeans_passes(embeddings):
     """The r4 audit finding as a gate: non-geometric label buckets
     must FAIL a 0.5-recall gate while learned k-means buckets PASS
@@ -70,14 +59,20 @@ def test_label_buckets_fail_kmeans_passes(embeddings):
     assert det["hits"] <= det["exact_neighbors"]
 
 
-def test_classic_single_pass_identical_evrs(embeddings):
+def test_repeated_runs_identical_evrs(embeddings):
     for method in ("bucket", "kmeans"):
-        classic, single = _run_both(
-            embeddings, _gate_suite(method, 0.5)
+        suite = _gate_suite(method, 0.5)
+        a, b = (
+            ges.SparkValidator(embeddings, suite).validate().results[0]
+            for _ in range(2)
         )
-        c, s = classic.results[0], single.results[0]
-        assert c.success == s.success
-        assert c.result == s.result
+        assert a.success == b.success
+        assert a.result == b.result
+        direct = ann_recall_at_k(
+            embeddings, method=method, k=3, n_queries=10, kmeans_k=8,
+            kmeans_iters=2,
+        )
+        assert a.result["observed_value"] == direct["recall"]
 
 
 def test_strict_greater_and_unmeasurable_sample(spark):

@@ -246,7 +246,7 @@ def test_compiled_sketch_partials(spark):
     compiled = ges.compile_suite(suite, b1.schema, spark)
     for b in (b1, b2):
         got = compiled.validate(b)
-        ref = ges.validate(b, suite, strategy="single_pass")
+        ref = ges.validate(b, suite)
         assert [r.success for r in got.results] == [
             r.success for r in ref.results
         ]

@@ -102,6 +102,47 @@ def test_concurrent_validations_isolate_failures(spark):
     assert isinstance(out_seq[1], RuntimeError)
 
 
+def test_threaded_sketch_merges_match_sequential(spark):
+    """HLL/KLL sketch merges run a small Spark job of their own. On a
+    pool thread SparkSession.getActiveSession() is None, so the merge
+    must use the validated frame's session: the threaded results equal
+    the sequential ones and no EVR is an exception. The HLL estimate is
+    deterministic and 160 rows keep the KLL sketch exact, so the values
+    compare with ==."""
+    df = images_df(spark, n_rows=160, seed=31)
+    s = (
+        ges.suite("sketch-threads")
+        .expect("expect_column_values_to_not_be_null", column="caption")
+        .expect("expect_column_unique_value_count_to_be_between",
+                column="image_id", min_value=1, max_value=10**9,
+                approximate=True)
+        .expect("expect_column_median_to_be_between", column="w",
+                min_value=0, max_value=10**6, approximate=True)
+    )
+
+    def view(res):
+        return [
+            (e.success, (e.exception_info or {}).get("raised_exception"),
+             e.result)
+            for e in res.results
+        ]
+
+    thunks = [lambda: ges.validate(df, s)] * 2
+    seq = run_validations(thunks, max_concurrency=1)
+    conc = run_validations(thunks, max_concurrency=2, spark=spark)
+    assert not any(isinstance(r, Exception) for r in seq + conc)
+    for res in seq + conc:
+        assert not any(raised for _, raised, _ in view(res)), [
+            (e.exception_info or {}).get("exception_message")
+            for e in res.results
+        ]
+    assert [view(r) for r in conc] == [view(r) for r in seq]
+    exact = df.select("image_id").distinct().count()
+    assert abs(seq[0].results[1].result["observed_value"] - exact) <= (
+        4 * 0.05 * exact
+    )
+
+
 def test_checkpoint_concurrent_groups_matches_sequential(spark, tmp_path):
     path = str(tmp_path / "images")
     images_df(spark, n_rows=6000, seed=42).write.partitionBy(

@@ -141,21 +141,12 @@ def test_expect_not_contain_pii_violations_and_strategies(spark):
         "expect_column_values_to_not_contain_pii", column="note",
         mostly=0.9,
     )
-    classic = ges.SparkValidator(
-        df, suite, result_format="SUMMARY", strategy="classic"
-    ).validate()
-    single = ges.SparkValidator(
-        df, suite, result_format="SUMMARY", strategy="single_pass"
-    ).validate()
-    for res in (classic, single):
-        r = res.results[0]
-        assert r.success is False
-        assert r.result["unexpected_count"] == 2
-        assert r.result["element_count"] == 5
-    assert (
-        classic.results[0].result["unexpected_count"]
-        == single.results[0].result["unexpected_count"]
-    )
+    r = ges.SparkValidator(
+        df, suite, result_format="SUMMARY"
+    ).validate().results[0]
+    assert r.success is False
+    assert r.result["unexpected_count"] == 2
+    assert r.result["element_count"] == 5
 
 
 def test_expect_not_contain_pii_class_subset_and_extras(spark):

@@ -57,7 +57,6 @@ def test_stats_only_suite_never_reads_bytes(spark):
         .expect("expect_column_mean_to_be_between", column="w",
                 min_value=0, max_value=100)
     )
-    v = ges.SparkValidator(df, s, strategy="single_pass")
     compiled = []
     from great_expectations_spark.operators.registry import get_compiler
     from great_expectations_spark.plans.planner import (

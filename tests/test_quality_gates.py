@@ -185,29 +185,17 @@ def test_metadata_gate_expectation_strategies_agree(spark):
     s = ges.suite("gate").expect(
         "expect_image_metadata_to_pass_quality_gate", mostly=0.5
     )
-    results = {}
-    for strategy in ("classic", "single_pass"):
-        res = ges.SparkValidator(
-            df, s, result_format="SUMMARY", strategy=strategy
-        ).validate()
-        r = res.results[0].result
-        results[strategy] = (
-            res.results[0].success,
-            r["element_count"],
-            r["unexpected_count"],
-        )
+
+    def view(res):
+        r = res.results[0]
+        return r.success, r.result["element_count"], r.result["unexpected_count"]
+
+    oneshot = ges.SparkValidator(df, s, result_format="SUMMARY").validate()
     compiled = ges.compile_suite(
         s, df.schema, spark, result_format="SUMMARY"
     ).validate(df)
-    r = compiled.results[0].result
-    results["compiled"] = (
-        compiled.results[0].success,
-        r["element_count"],
-        r["unexpected_count"],
-    )
-    assert len(set(results.values())) == 1, results
     # 5 of 7 fail the gate; mostly=0.5 -> unexpected 71% -> failure
-    assert results["classic"] == (False, 7, 5)
+    assert view(oneshot) == view(compiled) == (False, 7, 5)
 
 
 def test_metadata_gate_suite_never_reads_bytes(spark):

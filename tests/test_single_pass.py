@@ -1,15 +1,23 @@
-"""Single-pass executor equivalence: the per-partition fused pass
-(plans/single_pass.py) must produce identical EVRs to the classic
-two-scan plan on a defect-rich table, including violation samples,
-merged means/stddevs, and vacuous-truth edge cases."""
+"""Single-pass executor correctness: every EVR of the per-partition
+fused pass (plans/single_pass.py) must equal an answer computed
+directly in the test — plain DataFrame filters and aggregates, and
+the payload codec over collected rows. The expected violation sample
+is the first K values of ``df.filter(pred)`` collected in partition
+order, which is exactly the pass's pid-ordered concat, so sample
+order is checked too."""
 
-import math
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 import great_expectations_spark as ges
+from great_expectations_spark.core.config import parse_result_format
 from great_expectations_spark.data.images import images_df
+from great_expectations_spark.payload.codec import (
+    decode_image,
+    phash_from_pixels,
+)
 
 
 def suite_rich():
@@ -40,73 +48,145 @@ def suite_rich():
     )
 
 
-def run_both(df, suite, rf="SUMMARY"):
-    classic = ges.SparkValidator(
-        df, suite, result_format=rf, strategy="classic"
-    ).validate()
-    single = ges.SparkValidator(
-        df, suite, result_format=rf, strategy="single_pass"
-    ).validate()
-    return classic, single
+# -- the direct oracle ---------------------------------------------------------
 
 
-def assert_equivalent(classic, single):
-    assert len(classic.results) == len(single.results)
-    for c, s in zip(classic.results, single.results):
-        typ = c.expectation_config.expectation_type
-        assert c.success == s.success, typ
-        cr, sr = c.result or {}, s.result or {}
-        assert set(cr) == set(sr), typ
-        for k in cr:
-            cv, sv = cr[k], sr[k]
-            if k == "partial_unexpected_counts":
-                # derived from the (possibly truncated) sample —
-                # subject to the same truncation caveat as the list
-                if len(cr.get("partial_unexpected_list") or []) < (
-                    cr.get("unexpected_count") or 0
-                ):
-                    continue
-                assert cv == sv, (typ, k)
-            elif k == "partial_unexpected_list":
-                # sample membership may differ by partition visit
-                # order when the cap truncates (classic's second-level
-                # collect_list order is shuffle-dependent); the
-                # multiset must match only when the list is exhaustive
-                assert len(cv) == len(sv), typ
-                if len(cv) == (cr.get("unexpected_count") or 0):
-                    assert sorted(map(str, cv)) == sorted(
-                        map(str, sv)
-                    ), typ
-            elif isinstance(cv, float) and isinstance(sv, float):
-                if math.isnan(cv):
-                    assert math.isnan(sv), typ
-                else:
-                    assert cv == pytest.approx(sv, rel=1e-9), (typ, k)
+def map_answer(df, pred, value, column=None, mostly=1.0):
+    """Direct answer for one map check: element count, rows considered
+    (non-null ``column``; every row when None, the not_be_null
+    denominator) and the violating values of ``df.filter(pred)`` in
+    partition order."""
+    n = df.count()
+    if column is not None:
+        pred = F.col(column).isNotNull() & pred
+    considered = df.where(F.col(column).isNotNull()).count() if column else n
+    values = [r[0] for r in df.filter(pred).select(value).collect()]
+    return {"kind": "map", "n": n, "considered": considered,
+            "values": values, "mostly": mostly, "total": column is None}
+
+
+def phash_answer(df, mostly=1.0):
+    """expect_image_phash_to_match at hamming 0, row by row with the
+    package's codec over collected rows (as perfbench's payload_facts
+    does): a non-null payload violates when it does not decode or its
+    recomputed phash differs from the stored one."""
+    rows = df.select("image_id", "bytes", "phash").collect()
+    considered, values = 0, []
+    for r in rows:
+        if r["bytes"] is None:
+            continue
+        considered += 1
+        try:
+            px = decode_image(bytes(r["bytes"]))[3]
+        except ValueError:
+            values.append(r["image_id"])
+            continue
+        if r["phash"] is None or phash_from_pixels(px) != r["phash"]:
+            values.append(r["image_id"])
+    return {"kind": "map", "n": len(rows), "considered": considered,
+            "values": values, "mostly": mostly, "total": False}
+
+
+def zscore_answer(df, column, threshold, double_sided=True, mostly=1.0):
+    st = df.agg(F.mean(column), F.stddev_samp(column)).first()
+    if st[0] is None or st[1] is None or st[1] == 0:
+        pred = F.lit(False)
+    else:
+        z = (F.col(column) - F.lit(st[0])) / F.lit(st[1])
+        pred = (F.abs(z) if double_sided else z) >= F.lit(threshold)
+    return map_answer(df, pred, column, column=column, mostly=mostly)
+
+
+def agg_answer(observed, lo, hi):
+    return {"kind": "agg", "observed": observed, "lo": lo, "hi": hi}
+
+
+def rich_answers(df):
+    c, fmt, w, h = (F.col(x) for x in ("caption", "fmt", "w", "h"))
+    st = df.agg(
+        F.mean(w), F.stddev_samp(h), F.min(h), F.max(w), F.sum(w),
+        F.countDistinct(fmt),
+    ).first()
+    return [
+        map_answer(df, c.isNull(), "caption", mostly=0.99),
+        map_answer(df, ~fmt.isin("jpeg", "png", "webp"), "fmt",
+                   column="fmt", mostly=0.99),
+        map_answer(df, ~w.between(1, 64), "w", column="w"),
+        map_answer(df, ~F.length(c).between(1, 200), "caption",
+                   column="caption", mostly=0.99),
+        agg_answer(st[0], 8, 40),
+        agg_answer(st[1], 0, 100),
+        agg_answer(st[2], 0, 16),
+        agg_answer(st[3], 16, 64),
+        agg_answer(st[4], 1, 10**9),
+        agg_answer(st[5], 1, 10),
+        phash_answer(df, mostly=0.95),
+    ]
+
+
+def assert_matches_direct(res, answers, rf="SUMMARY", complete_cap=100_000):
+    rf = parse_result_format(rf)
+    level = rf["result_format"]
+    k = rf["partial_unexpected_count"]
+    assert len(res.results) == len(answers)
+    for evr, want in zip(res.results, answers):
+        typ = evr.expectation_config.expectation_type
+        assert not (evr.exception_info or {}).get("raised_exception"), (
+            typ, evr.exception_info,
+        )
+        r = evr.result or {}
+        if want["kind"] == "agg":
+            obs = want["observed"]
+            assert evr.success == (
+                obs is not None and want["lo"] <= obs <= want["hi"]
+            ), typ
+            if isinstance(obs, float):
+                assert r["observed_value"] == pytest.approx(obs, rel=1e-9)
             else:
-                assert cv == sv, (typ, k)
+                assert r["observed_value"] == obs, typ
+            continue
+        n, m, values = want["n"], want["considered"], want["values"]
+        assert evr.success == (
+            n == 0 or m == 0 or (m - len(values)) / m >= want["mostly"]
+        ), typ
+        if level == "BOOLEAN_ONLY":
+            assert r == {}, typ
+            continue
+        assert r["element_count"] == n, typ
+        assert r["unexpected_count"] == len(values), typ
+        if not want["total"]:
+            assert r["missing_count"] == n - m, typ
+        sample = values[: complete_cap if level == "COMPLETE" else k]
+        assert r["partial_unexpected_list"] == sample[:k], typ
+        if level == "COMPLETE":
+            assert r["unexpected_list"] == sample, typ
+        if level in ("SUMMARY", "COMPLETE"):
+            counts = Counter(sample)
+            got = r["partial_unexpected_counts"]
+            assert len(got) == min(k, len(counts)), typ
+            assert all(d["count"] == counts[d["value"]] for d in got), typ
 
 
-def test_single_pass_matches_classic_rich_table(spark):
+def samples(res):
+    return [(r.result or {}).get("partial_unexpected_list") for r in res.results]
+
+
+def test_single_pass_matches_direct_rich_table(spark):
     df = images_df(spark, n_rows=3000, seed=42)
-    classic, single = run_both(df, suite_rich())
-    assert_equivalent(classic, single)
+    res = ges.validate(df, suite_rich(), result_format="SUMMARY")
+    answers = rich_answers(df)
+    assert_matches_direct(res, answers)
     # the defects must actually be present for this test to mean much
-    by_type = {
-        r.expectation_config.expectation_type: r for r in single.results
-    }
-    assert (
-        by_type["expect_image_phash_to_match"].result["unexpected_count"]
-        > 0
-    )
+    assert answers[-1]["values"] and answers[1]["values"]
 
 
-def test_single_pass_matches_classic_empty_table(spark):
+def test_single_pass_matches_direct_empty_table(spark):
     df = images_df(spark, n_rows=500, seed=7).where(F.lit(False))
-    classic, single = run_both(df, suite_rich())
-    assert_equivalent(classic, single)
+    res = ges.validate(df, suite_rich(), result_format="SUMMARY")
+    assert_matches_direct(res, rich_answers(df))
     # map checks are vacuously true on an empty table; agg checks
-    # (mean/min/... of nothing -> None) legitimately fail in BOTH modes
-    for r in single.results:
+    # (mean/min/... of nothing -> None) fail
+    for r in res.results:
         if "unexpected_count" in (r.result or {}):
             assert r.success, r.expectation_config.expectation_type
 
@@ -121,9 +201,19 @@ def test_single_pass_all_null_column(spark):
         min_value=1,
         max_value=10,
     )
-    classic, single = run_both(df, s)
-    assert_equivalent(classic, single)
-    assert single.results[0].success  # vacuous truth
+    res = ges.validate(df, s, result_format="SUMMARY")
+    pred = ~F.length(F.col("caption")).between(1, 10)
+    assert_matches_direct(res, [map_answer(df, pred, "caption", "caption")])
+    assert res.results[0].success  # vacuous truth
+
+
+def test_strategy_option_removed(spark):
+    df = images_df(spark, n_rows=10, seed=1)
+    with pytest.raises(TypeError):
+        ges.validate(df, suite_rich(), strategy="classic")
+    with pytest.raises(TypeError):
+        ges.compile_suite(suite_rich(), df.schema, spark, strategy="auto")
+
 
 def zscore_suite(**kwargs):
     """Two deferred z-score checks (one double-, one single-sided)
@@ -142,6 +232,18 @@ def zscore_suite(**kwargs):
         .expect("expect_column_mean_to_be_between", column="w",
                 min_value=8, max_value=40, **kwargs)
     )
+
+
+def zscore_answers(df):
+    """Direct answers for zscore_suite over ``df`` (already filtered
+    to the row_condition's domain, when there is one)."""
+    return [
+        zscore_answer(df, "w", 1.0, double_sided=True, mostly=0.5),
+        zscore_answer(df, "h", 0.5, double_sided=False, mostly=0.5),
+        map_answer(df, ~F.col("fmt").isin("jpeg", "png"), "fmt",
+                   column="fmt", mostly=0.5),
+        agg_answer(df.agg(F.mean("w")).first()[0], 8, 40),
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -205,8 +307,7 @@ def test_deferred_zscore_runs_in_single_pass(spark, tmp_path, monkeypatch):
     res = ges.validate(df, s, result_format="SUMMARY")
 
     times = res.meta["phase_times"]
-    assert "single_pass" in times and "deferred" in times
-    assert "fused_agg" not in times and "harvest" not in times
+    assert set(times) == {"compile", "single_pass", "deferred"}, times
     assert len(plans) == 1
     optimized, executed = plans[0]
     # the leaf Relation lists every table column; nothing above it
@@ -232,32 +333,24 @@ def test_deferred_zscore_runs_in_single_pass(spark, tmp_path, monkeypatch):
 @pytest.mark.parametrize(
     "rf", ["BOOLEAN_ONLY", "BASIC", "SUMMARY", "COMPLETE"]
 )
-def test_zscore_matches_classic_result_formats(zdf, rf):
-    classic, single = run_both(zdf, zscore_suite(), rf=rf)
-    assert_equivalent(classic, single)
-    if rf == "COMPLETE":
-        # both strategies share the deferred job: check it directly
-        z = single.results[0].result
-        st = zdf.agg(F.mean("w"), F.stddev_samp("w")).first()
-        expected = zdf.where(
-            F.abs((F.col("w") - st[0]) / st[1]) >= 1.0
-        ).count()
-        assert expected > 0
-        assert z["unexpected_count"] == expected
-        assert len(z["unexpected_list"]) == expected
+def test_zscore_matches_direct_result_formats(zdf, rf):
+    res = ges.validate(zdf, zscore_suite(), result_format=rf)
+    answers = zscore_answers(zdf)
+    assert_matches_direct(res, answers, rf=rf)
+    assert answers[0]["values"] and answers[1]["values"]
 
 
-def test_zscore_matches_classic_row_condition(zdf):
+def test_zscore_matches_direct_row_condition(zdf):
     s = zscore_suite(row_condition="fmt = 'jpeg'",
                      condition_parser="spark")
-    classic, single = run_both(zdf, s)
-    assert_equivalent(classic, single)
-    z = single.results[0].result
+    res = ges.validate(zdf, s, result_format="SUMMARY")
+    assert_matches_direct(res, zscore_answers(zdf.where("fmt = 'jpeg'")))
+    z = res.results[0].result
     assert 0 < z["element_count"] < zdf.count()
     assert z["unexpected_count"] > 0
 
 
-def test_zscore_matches_classic_constant_and_all_null(zdf):
+def test_zscore_matches_direct_constant_and_all_null(zdf):
     df = zdf.withColumn("c", F.lit(5)).withColumn(
         "n", F.lit(None).cast("double")
     )
@@ -268,36 +361,40 @@ def test_zscore_matches_classic_constant_and_all_null(zdf):
         .expect("expect_column_value_z_scores_to_be_less_than",
                 column="n", threshold=1.0)
     )
-    classic, single = run_both(df, s)
-    assert_equivalent(classic, single)
-    for r in single.results:  # std 0 / no values: nothing is unexpected
+    res = ges.validate(df, s, result_format="SUMMARY")
+    assert_matches_direct(
+        res, [zscore_answer(df, "c", 1.0), zscore_answer(df, "n", 1.0)]
+    )
+    for r in res.results:  # std 0 / no values: nothing is unexpected
         assert r.success and r.result["unexpected_count"] == 0
 
 
-def test_zscore_matches_classic_empty_frame(zdf):
-    classic, single = run_both(zdf.where(F.lit(False)), zscore_suite())
-    assert_equivalent(classic, single)
-    assert "deferred" in single.meta["phase_times"]
-    assert single.results[0].success  # vacuous truth
+def test_zscore_matches_direct_empty_frame(zdf):
+    df = zdf.where(F.lit(False))
+    res = ges.validate(df, zscore_suite(), result_format="SUMMARY")
+    assert_matches_direct(res, zscore_answers(df))
+    assert "deferred" in res.meta["phase_times"]
+    assert res.results[0].success  # vacuous truth
 
 
-def test_zscore_matches_classic_unexpected_rows(zdf):
+def test_zscore_matches_direct_unexpected_rows(zdf):
     rf = {"result_format": "SUMMARY", "include_unexpected_rows": True}
-    classic, single = run_both(zdf, zscore_suite(), rf=rf)
-    assert_equivalent(classic, single)
-    rows = single.results[0].result["unexpected_rows"]
-    assert 0 < len(rows) <= 20
+    res = ges.validate(zdf, zscore_suite(), result_format=rf)
+    answers = zscore_answers(zdf)
+    assert_matches_direct(res, answers, rf=rf)
+    rows = res.results[0].result["unexpected_rows"]
+    assert len(rows) == min(20, len(answers[0]["values"]))
+    violating = Counter(answers[0]["values"])
+    assert all(violating[r["w"]] for r in rows)
 
 
-def test_zscore_second_level_merge_matches_classic(zdf, monkeypatch):
-    """Forced two-level merge for the deferred job too: every
-    single-pass job hands the driver at most fan_in rows."""
+def _count_driver_rows(monkeypatch):
+    """Spy on the planner's run_single_pass: the list receives the
+    number of rows each single-pass job hands the driver."""
     from great_expectations_spark.plans import planner as pl
-    from great_expectations_spark.plans import single_pass as sp
 
-    monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
     n_rows = []
-    orig = sp.run_single_pass
+    orig = pl.run_single_pass
 
     def spy(df_, partials, violation_exprs, **kw):
         rows = orig(df_, partials, violation_exprs, **kw)
@@ -305,40 +402,96 @@ def test_zscore_second_level_merge_matches_classic(zdf, monkeypatch):
         return rows
 
     monkeypatch.setattr(pl, "run_single_pass", spy)
-    classic, single = run_both(zdf, zscore_suite(), rf="COMPLETE")
-    assert_equivalent(classic, single)
-    # main pass + deferred job under single_pass, deferred under classic
-    assert len(n_rows) == 3 and max(n_rows) <= 3
+    return n_rows
+
+
+def test_zscore_second_level_merge_matches_direct(zdf, monkeypatch):
+    """Forced two-level merge for the deferred job too: every
+    single-pass job hands the driver at most fan_in rows, and the
+    bucketed run equals the unbucketed one and the direct answers."""
+    from great_expectations_spark.plans import single_pass as sp
+
+    answers = zscore_answers(zdf)
+    flat = ges.validate(zdf, zscore_suite(), result_format="COMPLETE")
+    monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
+    n_rows = _count_driver_rows(monkeypatch)
+    bucketed = ges.validate(zdf, zscore_suite(), result_format="COMPLETE")
+    for res in (flat, bucketed):
+        assert_matches_direct(res, answers, rf="COMPLETE")
+    assert samples(bucketed) == samples(flat)
+    assert len(n_rows) == 2 and max(n_rows) <= 3  # main pass + deferred
 
 
 def test_second_level_merge_matches_direct_collect(spark, monkeypatch):
     """Force the bounded two-level path (fan_in < #partitions): the
-    driver must receive at most fan_in rows and the EVRs must be
-    byte-identical to the classic plan — stats merged in closed form
-    (incl. the parallel-variance identity) and violation samples
-    flattened in pid order."""
+    driver must receive at most fan_in rows and the EVRs must equal
+    the unbucketed run's and the direct answers — stats merged in
+    closed form (incl. the parallel-variance fold) and violation
+    samples flattened in pid order. The repartitioned frame is cached
+    so every read sees the same rows in the same order."""
     from great_expectations_spark.plans import single_pass as sp
 
-    df = images_df(spark, n_rows=3000, seed=42).repartition(16)
+    df = images_df(spark, n_rows=3000, seed=42).repartition(16).cache()
+    answers = rich_answers(df)
+    flat = ges.validate(df, suite_rich(), result_format="SUMMARY")
     monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
+    n_rows = _count_driver_rows(monkeypatch)
+    bucketed = ges.validate(df, suite_rich(), result_format="SUMMARY")
+    for res in (flat, bucketed):
+        assert_matches_direct(res, answers)
+    assert samples(bucketed) == samples(flat)
+    assert n_rows == [3]
+    df.unpersist()
 
-    captured = {}
-    orig = sp.run_single_pass
 
-    def spy(df_, partials, violation_exprs, **kw):
-        rows = orig(df_, partials, violation_exprs, **kw)
-        captured["n_rows"] = len(rows)
-        return rows
+@pytest.mark.parametrize("fan_in", [None, 2])
+def test_all_violating_sample_is_first_k_in_partition_order(
+    spark, monkeypatch, fan_in
+):
+    """Every row of an 8-partition table violates two map checks. The
+    sample must be the first K violating values in partition order at
+    BASIC (K=20) and at COMPLETE (cap 50), with and without the
+    second-level merge. Partition 0 is empty and partition 1 alone
+    holds more than K rows, so the per-partition cap decides the BASIC
+    sample; the COMPLETE sample spans five partitions. The values are
+    a permutation of the ids, so a sorted or reordered sample fails."""
+    from great_expectations_spark.plans import single_pass as sp
 
-    monkeypatch.setattr(sp, "run_single_pass", spy)
-    # the planner imported the symbol directly — patch there too
-    from great_expectations_spark.plans import planner as pl
-
-    monkeypatch.setattr(pl, "run_single_pass", spy)
-
-    classic, single = run_both(df, suite_rich())
-    assert_equivalent(classic, single)
-    assert captured["n_rows"] <= 3
+    if fan_in is not None:
+        monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", fan_in)
+    sizes = [0, 25, 8, 8, 8, 8, 8, 8]
+    pid = (F.col("id") / 64).cast("int")
+    df = (
+        spark.range(0, 64 * len(sizes), 1, len(sizes))
+        .where(F.col("id") % 64 < F.element_at(
+            F.array(*[F.lit(n) for n in sizes]), pid + 1
+        ))
+        .select(
+            ((F.col("id") * 37) % 512).alias("x"),
+            F.concat(F.lit("s"), ((F.col("id") * 11) % 512).cast("string"))
+            .alias("t"),
+        )
+    )
+    assert df.rdd.glom().map(len).collect() == sizes
+    s = (
+        ges.suite("all-bad")
+        .expect("expect_column_values_to_be_between", column="x",
+                min_value=1000, max_value=2000)
+        .expect("expect_column_values_to_be_in_set", column="t",
+                value_set=["none"])
+    )
+    answers = [
+        map_answer(df, ~F.col("x").between(1000, 2000), "x", column="x"),
+        map_answer(df, ~F.col("t").isin("none"), "t", column="t"),
+    ]
+    assert all(len(a["values"]) == sum(sizes) for a in answers)
+    basic = ges.validate(df, s, result_format="BASIC")
+    assert_matches_direct(basic, answers, rf="BASIC")
+    complete = ges.validate(df, s, result_format="COMPLETE", complete_cap=50)
+    assert_matches_direct(complete, answers, rf="COMPLETE", complete_cap=50)
+    assert [len(r.result["unexpected_list"]) for r in complete.results] == [
+        50, 50,
+    ]
 
 
 def test_second_level_stddev_large_mean_precision(spark, monkeypatch):
@@ -349,10 +502,8 @@ def test_second_level_stddev_large_mean_precision(spark, monkeypatch):
     here (both big terms ~1e34, true M2 ~1e6) and yields garbage or
     negative M2 — this is the regression guard for the fold-based
     second level."""
-    from great_expectations_spark.plans import planner as pl
     from great_expectations_spark.plans import single_pass as sp
 
-    monkeypatch.setattr(pl, "run_single_pass", sp.run_single_pass)
     base = 1_700_000_000_000_000.0  # epoch microseconds
     df = (
         spark.range(0, 4000)
@@ -372,13 +523,9 @@ def test_second_level_stddev_large_mean_precision(spark, monkeypatch):
     # into the level-1 F.avg (naive double sum at 1e15 magnitude) and
     # is shared by BOTH paths; what the fold must not do is add the
     # old recombination's catastrophic loss on top (rel error >> 1)
-    chan = ges.SparkValidator(
-        df, s, strategy="single_pass"
-    ).validate()
+    chan = ges.validate(df, s)
     monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
-    res = ges.SparkValidator(
-        df, s, strategy="single_pass"
-    ).validate()
+    res = ges.validate(df, s)
     got = res.results[0].result["observed_value"]
     exact = df.agg(F.stddev_samp("ts")).first()[0]
     assert got == pytest.approx(
@@ -389,19 +536,24 @@ def test_second_level_stddev_large_mean_precision(spark, monkeypatch):
 
 
 def test_second_level_merge_empty_and_allnull(spark, monkeypatch):
-    from great_expectations_spark.plans import planner as pl
     from great_expectations_spark.plans import single_pass as sp
 
-    monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 2)
-    monkeypatch.setattr(
-        pl, "run_single_pass", sp.run_single_pass
-    )
     df = images_df(spark, n_rows=400, seed=5).repartition(8).withColumn(
         "caption", F.lit(None).cast("string")
+    ).cache()
+    answers = rich_answers(df)
+    flat = ges.validate(df, suite_rich(), result_format="SUMMARY")
+    monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 2)
+    bucketed = ges.validate(df, suite_rich(), result_format="SUMMARY")
+    for res in (flat, bucketed):
+        assert_matches_direct(res, answers)
+    assert samples(bucketed) == samples(flat)
+    empty = df.where(F.lit(False))
+    assert_matches_direct(
+        ges.validate(empty, suite_rich(), result_format="SUMMARY"),
+        rich_answers(empty),
     )
-    s = suite_rich()
-    classic, single = run_both(df, s)
-    assert_equivalent(classic, single)
+    df.unpersist()
 
 
 def test_hll_mergeable_approx_distinct(spark):
@@ -422,7 +574,7 @@ def test_hll_mergeable_approx_distinct(spark):
                 column="w_double", min_value=1, max_value=10**9,
                 approximate=True, rsd=0.02)
     )
-    res = ges.validate(df, s, strategy="single_pass")
+    res = ges.validate(df, s)
     exact_id = df.select("image_id").distinct().count()
     exact_wd = df.select("w_double").distinct().count()
     got_id = res.results[0].result["observed_value"]
@@ -460,9 +612,9 @@ def test_hll_second_level_union_identical(spark, monkeypatch):
         column="image_id", min_value=1, max_value=10**9,
         approximate=True,
     )
-    direct = ges.validate(df, s, strategy="single_pass")
+    direct = ges.validate(df, s)
     monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
-    bucketed = ges.validate(df, s, strategy="single_pass")
+    bucketed = ges.validate(df, s)
     assert (
         bucketed.results[0].result["observed_value"]
         == direct.results[0].result["observed_value"]
@@ -482,8 +634,7 @@ def test_kll_mergeable_approx_quantiles(spark):
     """approximate=True quantile/median expectations on numeric
     columns ride the single pass as mergeable Datasketches KLL sketch
     partials (no separate approxQuantile job) and land within the
-    sketch's rank error of the exact quantiles; classic strategy
-    computes the same expression in its fused agg."""
+    sketch's rank error of the exact quantiles."""
     df = images_df(spark, n_rows=6000, seed=12)
     qs = [0.1, 0.5, 0.9]
     s = (
@@ -495,19 +646,18 @@ def test_kll_mergeable_approx_quantiles(spark):
         .expect("expect_column_median_to_be_between", column="h",
                 min_value=0, max_value=10**6, approximate=True)
     )
-    for strategy in ("single_pass", "classic"):
-        res = ges.validate(df, s, strategy=strategy)
-        got = res.results[0].result["observed_value"]["values"]
-        for v, (lo, hi) in zip(
-            got, _rank_window(df.withColumn("w", F.col("w").cast("double")), "w", qs)
-        ):
-            assert lo <= v <= hi, (strategy, v, lo, hi)
-        med = res.results[1].result["observed_value"]
-        (mlo, mhi), = _rank_window(
-            df.withColumn("h", F.col("h").cast("double")), "h", [0.5]
-        )
-        assert mlo <= med <= mhi, (strategy, med)
-        assert res.results[1].success
+    res = ges.validate(df, s)
+    got = res.results[0].result["observed_value"]["values"]
+    for v, (lo, hi) in zip(
+        got, _rank_window(df.withColumn("w", F.col("w").cast("double")), "w", qs)
+    ):
+        assert lo <= v <= hi, (v, lo, hi)
+    med = res.results[1].result["observed_value"]
+    (mlo, mhi), = _rank_window(
+        df.withColumn("h", F.col("h").cast("double")), "h", [0.5]
+    )
+    assert mlo <= med <= mhi, med
+    assert res.results[1].success
 
     # plan check: the stat is a mergeable kll partial, not leftover
     from great_expectations_spark.plans.single_pass import (
@@ -533,9 +683,9 @@ def test_kll_second_level_union_close(spark, monkeypatch):
         "expect_column_median_to_be_between",
         column="w", min_value=0, max_value=10**6, approximate=True,
     )
-    direct = ges.validate(df, s, strategy="single_pass")
+    direct = ges.validate(df, s)
     monkeypatch.setattr(sp, "SECOND_LEVEL_FAN_IN", 3)
-    bucketed = ges.validate(df, s, strategy="single_pass")
+    bucketed = ges.validate(df, s)
     (lo, hi), = _rank_window(
         df.withColumn("w", F.col("w").cast("double")), "w", [0.5]
     )
@@ -555,7 +705,7 @@ def test_kll_allnull_and_fallback(spark):
         "expect_column_median_to_be_between",
         column="allnull", min_value=0, max_value=1, approximate=True,
     )
-    res = ges.validate(df, s, strategy="single_pass")
+    res = ges.validate(df, s)
     assert res.results[0].success is False
     assert res.results[0].result["observed_value"] is None
 
@@ -566,4 +716,4 @@ def test_kll_allnull_and_fallback(spark):
     )
     # string column: falls back to exact (here just prove a numeric
     # exact run and the approximate run agree on success)
-    assert ges.validate(df, s2, strategy="single_pass").results[0].success
+    assert ges.validate(df, s2).results[0].success
