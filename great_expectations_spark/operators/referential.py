@@ -230,16 +230,14 @@ def compile_split_leakage_rate(index, cfg, schema) -> JobCheck:
     expect_column_distinct_overlap_with_reference's sketch-
     approximate check across two tables.
 
-    Plan (scale-safe): one column-pruned scan per side (key +
-    condition only), the train side collapses to distinct keys via a
-    map-side-combined hash agg, and the leak check is a left join on
-    the key — AQE broadcasts the distinct side when it fits and
-    falls back to a shuffle-hash join when it does not. No persist:
-    each side is a single cheap scan, and caching a 10^12-row
-    projection would cost more than the second scan. When even the
-    distinct table is too big to shuffle, use the theta-sketch
-    overlap expectation instead (documented approximate fallback).
-    kwargs: column, eval_condition, min_value/max_value/strict_*.
+    It runs the audit's kernel, suite_queries.split_leakage_counts,
+    as one global aggregate over (key, eval flag) rows. No persist:
+    each side is a single cheap column-pruned scan, and caching a
+    10^12-row projection would cost more than the second scan. When
+    even the distinct table is too big to shuffle, use the
+    theta-sketch overlap expectation instead (documented approximate
+    fallback). kwargs: column, eval_condition,
+    min_value/max_value/strict_*.
     """
     from ..core.result import validate_metric_value_between
 
@@ -253,6 +251,8 @@ def compile_split_leakage_rate(index, cfg, schema) -> JobCheck:
     }
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
+        from ..suite_queries import split_leakage_counts
+
         try:
             cond = F.expr(eval_condition).cast("boolean")
         except Exception as exc:  # noqa: BLE001 - surfaced as EVR
@@ -263,24 +263,7 @@ def compile_split_leakage_rate(index, cfg, schema) -> JobCheck:
             F.col(column).alias("__k"),
             F.coalesce(cond, F.lit(False)).alias("__ev"),
         ).where(F.col("__k").isNotNull())
-        train = (
-            flagged.where(~F.col("__ev"))
-            .select("__k")
-            .distinct()
-            .withColumn("__hit", F.lit(1))
-        )
-        ev = flagged.where(F.col("__ev"))
-        agg = (
-            ev.join(train, "__k", "left")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.coalesce("__hit", F.lit(0))).alias("leaked"),
-                F.count_distinct(
-                    F.when(F.col("__hit") == 1, F.col("__k"))
-                ).alias("leaked_keys"),
-            )
-            .first()
-        )
+        agg = split_leakage_counts(flagged, "__k", "__ev").first()
         n = int(agg["n"] or 0)
         leaked = int(agg["leaked"] or 0)
         rate = leaked / n if n else 0.0

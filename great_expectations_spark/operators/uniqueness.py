@@ -192,24 +192,19 @@ def compile_phash_near_duplicate_rate(index, cfg, schema) -> JobCheck:
     ``max_hamming`` bits of another row's — near-duplicate images by
     content, not byte equality. No reference counterpart (its Spark
     uniqueness checks are exact-match only, column_values_unique.py);
-    this is the declarative face of the phash_hamming_neardup
-    pipeline over the north-rule ``phash:int64`` column.
-
-    Plan (scale-safe, never all-pairs): split each hash into its four
-    16-bit words (two hashes within hamming<=3 ALWAYS share a word;
-    within the default 6, overwhelmingly), band-LSH on the words with
-    the capped-bucket hybrid (suite_queries._capped_band_pairs: hot
-    boilerplate buckets degrade to O(n) star pairs — in a capped
-    bucket membership is decided against the hub only, the documented
-    approximation), verify candidates with bit_count(xor), count
-    DISTINCT involved rows. kwargs: max_hamming (default 6),
-    bucket_cap (default 64), min_value/max_value bounds on the rate.
+    this is the declarative face of the phash_hamming_neardup query
+    over the north-rule ``phash:int64`` column: it runs the query's
+    kernel, suite_queries.phash_near_pairs, and counts the DISTINCT
+    rows in a verified pair. kwargs: max_hamming (default
+    _PHASH_HAMMING_MAX = 6), bucket_cap (default _LSH_BUCKET_CAP =
+    64), min_value/max_value bounds on the rate.
     """
     from ..core.result import validate_metric_value_between
+    from ..suite_queries import _LSH_BUCKET_CAP, _PHASH_HAMMING_MAX
 
     column = cfg.kwargs["column"]
-    max_hamming = int(cfg.kwargs.get("max_hamming", 6))
-    bucket_cap = int(cfg.kwargs.get("bucket_cap", 64))
+    max_hamming = int(cfg.kwargs.get("max_hamming", _PHASH_HAMMING_MAX))
+    bucket_cap = int(cfg.kwargs.get("bucket_cap", _LSH_BUCKET_CAP))
     kw = {
         "min_value": cfg.kwargs.get("min_value"),
         "max_value": cfg.kwargs.get("max_value"),
@@ -218,12 +213,12 @@ def compile_phash_near_duplicate_rate(index, cfg, schema) -> JobCheck:
     }
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
-        from ..suite_queries import _capped_band_pairs
+        from ..suite_queries import phash_near_pairs
 
         # persist pins the monotonically_increasing_id assignment: the
-        # frame is consumed by three subtrees (bands + both verify
+        # kernel reads the frame three times (bands + both verify
         # sides), and without materialization a re-planned recompute
-        # could assign different ids per subtree, joining pairs to the
+        # could assign different ids per read, joining pairs to the
         # wrong hashes. 16 bytes/row, MEMORY_AND_DISK, freed below.
         ids = (
             df.select(F.col(column).cast("long").alias("ph"))
@@ -232,32 +227,7 @@ def compile_phash_near_duplicate_rate(index, cfg, schema) -> JobCheck:
             .persist()
         )
         try:
-            words = F.array(
-                *[
-                    F.shiftrightunsigned(
-                        F.col("ph"), 48 - 16 * w
-                    ).bitwiseAND(F.lit(0xFFFF))
-                    for w in range(4)
-                ]
-            )
-            bands = ids.select(
-                "doc_id", F.posexplode(words).alias("band_idx", "bv")
-            )
-            pairs = _capped_band_pairs(bands, cap=bucket_cap)
-            a = ids.select(
-                F.col("doc_id").alias("doc_a"), F.col("ph").alias("pa")
-            )
-            b = ids.select(
-                F.col("doc_id").alias("doc_b"), F.col("ph").alias("pb")
-            )
-            verified = (
-                pairs.join(a, "doc_a")
-                .join(b, "doc_b")
-                .where(
-                    F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-                    <= max_hamming
-                )
-            )
+            verified = phash_near_pairs(ids, max_hamming, bucket_cap)
             agg = verified.select(
                 F.explode(F.array("doc_a", "doc_b")).alias("d")
             ).agg(F.count_distinct("d").alias("involved"))
@@ -288,16 +258,12 @@ def compile_duplicate_segment_rate(index, cfg, schema) -> JobCheck:
     Within-row repetition deliberately does not count (a looping doc
     is a repetition problem, not a corpus-dedup one).
 
-    Plan (scale-safe): rows get a monotonic id; segments are built
-    with per-row array slices (no shuffle) and md5-hashed AFTER the
-    explode (whole-stage codegen); corpus state is two hash aggs on
-    16-byte keys and one slim join. The (hash, row) aggregate is
-    persisted because it feeds both the rows-per-hash agg and the
-    join probe — without materialization the two subtrees would each
-    re-run the tokenize/explode/hash scan. The final sums are
-    invariant under monotonic-id relabeling (ids are only ever
-    grouped on, never compared across recomputations), so the
-    persist is a cost choice, not a correctness pin. kwargs: column,
+    It runs the audit's kernels, suite_queries.segment_instances and
+    segment_dup_counts, over rows keyed by a monotonic id. The
+    instance table is persisted because both branches of
+    segment_dup_counts read it and share no exchange; the sums do not
+    depend on the id values, so the persist is a cost choice, not a
+    correctness pin. kwargs: column,
     segment_tokens (default 8), min_value/max_value bounds.
     """
     from ..core.result import validate_metric_value_between
@@ -314,50 +280,20 @@ def compile_duplicate_segment_rate(index, cfg, schema) -> JobCheck:
     }
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
+        from ..suite_queries import segment_dup_counts, segment_instances
+
         ids = (
             df.select(F.col(column).cast("string").alias("txt"))
             .where(F.col("txt").isNotNull())
             .withColumn("rid", F.monotonically_increasing_id())
         )
-        words = ids.select(
-            "rid", F.split(F.col("txt"), " ").alias("w")
-        )
-        inst = (
-            words.where(F.size("w") >= seg_len)
-            .select(
-                "rid",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(0, CAST(floor(size(w) "
-                        f"/ {seg_len}) AS INT) - 1), "
-                        f"i -> concat_ws(' ', slice(w, "
-                        f"i * {seg_len} + 1, {seg_len})))"
-                    )
-                ).alias("s"),
-            )
-            .select("rid", F.md5("s").alias("h"))
-        )
-        g1 = inst.groupBy("h", "rid").agg(
-            F.count(F.lit(1)).alias("c")
-        ).persist()
+        inst = segment_instances(ids, ["rid"], "txt", seg_len).persist()
         try:
-            hd = g1.groupBy("h").agg(F.count(F.lit(1)).alias("nrows"))
-            agg = (
-                g1.join(hd, "h")
-                .agg(
-                    F.sum("c").alias("total"),
-                    F.sum(
-                        F.when(
-                            F.col("nrows") >= 2, F.col("c")
-                        ).otherwise(0)
-                    ).alias("dup"),
-                )
-                .first()
-            )
+            agg = segment_dup_counts(inst).first()
         finally:
-            g1.unpersist()
-        total = int(agg["total"] or 0)
-        dup = int(agg["dup"] or 0)
+            inst.unpersist()
+        total = int(agg["segs"] or 0)
+        dup = int(agg["dups"] or 0)
         rate = dup / total if total else 0.0
         out = validate_metric_value_between(rate, **kw)
         return out["success"], {

@@ -203,36 +203,34 @@ def compile_metadata_quality_gate(index, cfg, schema) -> MapCheck:
     caption length) as a declarative expectation — pure metadata
     expressions over (w, h, fmt, caption), so a suite carrying it
     never reads the bytes column for this check and the condition
-    fuses into the single-pass agg like any map metric. The same
-    rules as suite_queries.image_gate_flags / image_quality_gate;
-    kwargs: min_side, max_aspect, formats, caption_chars, plus the
-    *_column names and mostly. Null or missing metadata FAILS the
-    gate (a record you cannot gate is not a keeper)."""
+    fuses into the single-pass agg like any map metric. The rules are
+    suite_queries.image_gate_exprs, which image_gate_flags and
+    image_quality_gate also call, so all three gate identically by
+    construction; a row is unexpected where image_gate_flags would
+    not keep it. kwargs: min_side, max_aspect, formats,
+    caption_chars, plus the *_column names and mostly. Null or
+    missing metadata FAILS the gate (a record you cannot gate is not
+    a keeper)."""
+    from ..suite_queries import image_gate_exprs
+
     w_col = cfg.kwargs.get("width_column", "w")
     h_col = cfg.kwargs.get("height_column", "h")
     fmt_col = cfg.kwargs.get("format_column", "fmt")
     cap_col = cfg.kwargs.get("caption_column", "caption")
     id_column = cfg.kwargs.get("id_column", "image_id")
-    min_side = int(cfg.kwargs.get("min_side", 16))
-    max_aspect = float(cfg.kwargs.get("max_aspect", 2.5))
-    formats = tuple(cfg.kwargs.get("formats", ("jpeg", "png", "webp")))
     cap_min, cap_max = cfg.kwargs.get("caption_chars", (100, 450))
-    w, h = F.col(w_col), F.col(h_col)
-    cap_len = F.length(F.coalesce(F.col(cap_col), F.lit("")))
-    fail = (
-        (F.least(w, h) < F.lit(min_side))
-        # try_divide: a zero side must fail the gate (the min_side
-        # term or the null-coalesce below catches it), never abort
-        # the job under ANSI mode
-        | (
-            F.try_divide(F.greatest(w, h), F.least(w, h))
-            > F.lit(max_aspect)
-        )
-        | (~F.col(fmt_col).isin(*formats))
-        | (cap_len < F.lit(int(cap_min)))
-        | (cap_len > F.lit(int(cap_max)))
+    f_side, f_aspect, f_fmt, f_cap = image_gate_exprs(
+        F.col(w_col),
+        F.col(h_col),
+        F.col(fmt_col),
+        F.length(F.coalesce(F.col(cap_col), F.lit(""))),
+        min_side=int(cfg.kwargs.get("min_side", 16)),
+        max_aspect=float(cfg.kwargs.get("max_aspect", 2.5)),
+        formats=tuple(cfg.kwargs.get("formats", ("jpeg", "png", "webp"))),
+        caption_chars=(int(cap_min), int(cap_max)),
     )
-    cond = F.coalesce(fail, F.lit(True))  # null w/h/fmt fails the gate
+    # ~keep: a null w/h/fmt fails the gate
+    cond = F.coalesce(f_side | f_aspect | f_fmt | f_cap, F.lit(True))
     return MapCheck(
         index=index,
         config=cfg,

@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -726,6 +726,16 @@ def _sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band_idx, bv) rows of the shared MinHash signatures."""
+    return _sigs(spark, sf_dir).select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[F.col(f"band{b}") for b in range(_BANDS)])
+        ).alias("band_idx", "bv"),
+    )
+
+
 def clear_sigs_cache() -> None:
     """Unpersist every shared pipeline stage (sigs, candidate pairs,
     cluster table)."""
@@ -844,7 +854,23 @@ def _capped_band_pairs(
     return pairs.select("p.doc_a", "p.doc_b").distinct()
 
 
-_MINHASH_DUCK_PAIRS = f"""
+def _band_bucket_stats(bands: DataFrame) -> DataFrame:
+    """Per band_idx: bucket count, buckets over _LSH_BUCKET_CAP (the
+    ones _capped_band_pairs turns into star pairs) and the largest
+    bucket, from (doc_id, band_idx, bv) band rows."""
+    buckets = bands.groupBy("band_idx", "bv").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    return buckets.groupBy("band_idx").agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.sum(
+            F.when(F.col("n") > _LSH_BUCKET_CAP, 1).otherwise(0)
+        ).alias("capped_buckets"),
+        F.max("n").alias("max_bucket"),
+    )
+
+
+_MINHASH_DUCK_BANDS = f"""
     WITH sigs AS ({_MINHASH_DUCK_SIGS}),
     bands AS (
       {" UNION ALL ".join(
@@ -852,6 +878,25 @@ _MINHASH_DUCK_PAIRS = f"""
         for b in range(_BANDS)
       )}
     ),
+"""
+
+# DuckDB tail of _band_bucket_stats over a `bands` CTE
+_BAND_BUCKET_STATS_DUCK = f"""
+    buckets AS (
+      SELECT band_idx, bv, count(*) AS n
+      FROM bands GROUP BY band_idx, bv
+    )
+    SELECT band_idx,
+           CAST(count(*) AS BIGINT) AS n_buckets,
+           CAST(sum(CASE WHEN n > {_LSH_BUCKET_CAP} THEN 1 ELSE 0 END)
+                AS BIGINT) AS capped_buckets,
+           CAST(max(n) AS BIGINT) AS max_bucket
+    FROM buckets
+    GROUP BY band_idx
+"""
+
+_MINHASH_DUCK_PAIRS = f"""
+    {_MINHASH_DUCK_BANDS}
     {_capped_pairs_sql()}
     SELECT doc_a, doc_b FROM pairs
 """
@@ -896,39 +941,13 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     version's boundedness with hash aggregation only — no sort, no
     WindowExec — and measured 3.6s. The exchange/agg/emission tail is
     shared with the phash pipeline as _capped_band_pairs."""
-    sigs = _sigs(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(_BANDS)])
-        ).alias("band_idx", "bv"),
-    )
-    return _capped_band_pairs(bands)
+    return _capped_band_pairs(_minhash_bands(spark, sf_dir))
 
 
 
 @register(
     "dedup_minhash_hot_buckets",
-    f"""
-    WITH sigs AS ({_MINHASH_DUCK_SIGS}),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_idx, band{b} AS bv FROM sigs"
-        for b in range(_BANDS)
-      )}
-    ),
-    buckets AS (
-      SELECT band_idx, bv, count(*) AS n
-      FROM bands GROUP BY band_idx, bv
-    )
-    SELECT band_idx,
-           CAST(count(*) AS BIGINT) AS n_buckets,
-           CAST(sum(CASE WHEN n > {_LSH_BUCKET_CAP} THEN 1 ELSE 0 END)
-                AS BIGINT) AS capped_buckets,
-           CAST(max(n) AS BIGINT) AS max_bucket
-    FROM buckets
-    GROUP BY band_idx
-    """,
+    _MINHASH_DUCK_BANDS + _BAND_BUCKET_STATS_DUCK,
 )
 def dedup_minhash_hot_buckets(
     spark: SparkSession, sf_dir: str
@@ -941,23 +960,7 @@ def dedup_minhash_hot_buckets(
     recompute the signature projection (cheap, self-contained); with
     SPARK_GRAFT_SHARE_SIGS=1 (the bench / pipeline path) signatures
     are materialized once and shared with the pair query."""
-    sigs = _sigs(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(_BANDS)])
-        ).alias("band_idx", "bv"),
-    )
-    buckets = bands.groupBy("band_idx", "bv").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return buckets.groupBy("band_idx").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(
-            F.when(F.col("n") > _LSH_BUCKET_CAP, 1).otherwise(0)
-        ).alias("capped_buckets"),
-        F.max("n").alias("max_bucket"),
-    )
+    return _band_bucket_stats(_minhash_bands(spark, sf_dir))
 
 
 # --- LSH verification + clustering: the dedup pipeline's endgame -----------
@@ -1689,7 +1692,54 @@ def _phash_parts_sql(dialect: str) -> Tuple[List[str], str]:
     return words, packed
 
 
-def _phash_duck_sql() -> str:
+def _phash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, ph) rows: each document's packed phash."""
+    _, packed = _phash_parts_sql("spark")
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", F.expr(packed).alias("ph")
+    )
+
+
+def phash_bands(df: DataFrame) -> DataFrame:
+    """(doc_id, band_idx, bv) band rows of df(doc_id, ph): band i is
+    the i-th 16-bit word of the 64-bit hash, high word first. The
+    shift is unsigned, so a negative hash splits by its bits. Two
+    hashes within hamming 3 always share a word."""
+    words = F.array(
+        *[
+            F.shiftrightunsigned(F.col("ph"), 48 - 16 * w).bitwiseAND(
+                F.lit(0xFFFF)
+            )
+            for w in range(4)
+        ]
+    )
+    return df.select("doc_id", F.posexplode(words).alias("band_idx", "bv"))
+
+
+def phash_near_pairs(
+    ids: DataFrame, max_hamming: int, cap: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) pairs of df(doc_id, ph) rows within
+    ``max_hamming`` bits: phash_bands, then _capped_band_pairs (a
+    bucket over ``cap`` docs emits O(n) star pairs from its min
+    doc_id, so its membership is decided against that hub only — the
+    documented approximation), then bit_count(xor) on candidates
+    only. ``ids`` is read three times, so its doc_id must be stable
+    across recomputation."""
+    pairs = _capped_band_pairs(phash_bands(ids), cap=cap)
+    a = ids.select(F.col("doc_id").alias("doc_a"), F.col("ph").alias("pa"))
+    b = ids.select(F.col("doc_id").alias("doc_b"), F.col("ph").alias("pb"))
+    hamming = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
+    return (
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
+        .where(hamming <= max_hamming)
+        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+    )
+
+
+def _phash_duck_bands() -> str:
+    """DuckDB `base(doc_id, w0..w3, phash)` and `bands` CTEs."""
     words, packed = _phash_parts_sql("duck")
     return f"""
     WITH base AS (
@@ -1705,6 +1755,12 @@ def _phash_duck_sql() -> str:
         for i in range(4)
       )}
     ),
+"""
+
+
+def _phash_duck_sql() -> str:
+    return f"""
+    {_phash_duck_bands()}
     {_capped_pairs_sql()}
     SELECT p.doc_a, p.doc_b,
            CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
@@ -1718,79 +1774,25 @@ def _phash_duck_sql() -> str:
 @register("phash_hamming_neardup", _phash_duck_sql())
 def phash_hamming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash hamming radius:
-    band-LSH over the 4 16-bit words of a 64-bit phash (pure JVM
-    expressions), hybrid capped-bucket candidate emission
-    (_capped_band_pairs — a boilerplate mega-group degrades to O(n)
-    star pairs, never O(n^2)), then bit_count(xor) verification on
-    candidates only. At corpus scale: one projection builds the
-    words, one wide exchange of slim (doc_id, band_idx, bv) rows is
-    reused by the count and probe sides, and verification joins touch
-    only candidate ids — the full corpus is never pairwise-compared.
+    phash_near_pairs over the packed phash, the same kernel
+    expect_column_phash_near_duplicate_rate_to_be_between calls. At
+    corpus scale one wide exchange of slim (doc_id, band_idx, bv)
+    rows is reused by the count and probe sides, and verification
+    joins touch only candidate ids — the full corpus is never
+    pairwise-compared.
 
     The reference has no phash dedup; this is the image-payload
     analogue of its uniqueness checks (north-rule input shape
     `phash:int64`). Reference parity anchor for expectation-style
     uniqueness: great_expectations/expectations/core/
     expect_column_values_to_be_unique.py."""
-    words, packed = _phash_parts_sql("spark")
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id",
-        *[F.expr(w).alias(f"w{i}") for i, w in enumerate(words)],
-        F.expr(packed).alias("phash"),
-    )
-    bands = base.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"w{i}") for i in range(4)])
-        ).alias("band_idx", "bv"),
-    )
-    pairs = _capped_band_pairs(bands)
-    ph = base.select("doc_id", "phash")
-    a = ph.select(
-        F.col("doc_id").alias("doc_a"), F.col("phash").alias("pa")
-    )
-    b = ph.select(
-        F.col("doc_id").alias("doc_b"), F.col("phash").alias("pb")
-    )
-    hamming = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(hamming <= _PHASH_HAMMING_MAX)
-        .select(
-            "doc_a", "doc_b", hamming.cast("int").alias("hamming")
-        )
+    return phash_near_pairs(
+        _phash_docs(spark, sf_dir), _PHASH_HAMMING_MAX, _LSH_BUCKET_CAP
     )
 
 
 def _phash_band_stats_duck_sql() -> str:
-    words, _ = _phash_parts_sql("duck")
-    return f"""
-    WITH base AS (
-      SELECT doc_id,
-             {words[0]} AS w0, {words[1]} AS w1,
-             {words[2]} AS w2, {words[3]} AS w3
-      FROM documents
-    ),
-    bands AS (
-      {" UNION ALL ".join(
-        f"SELECT doc_id, {i} AS band_idx, w{i} AS bv FROM base"
-        for i in range(4)
-      )}
-    ),
-    buckets AS (
-      SELECT band_idx, bv, count(*) AS n
-      FROM bands GROUP BY band_idx, bv
-    )
-    SELECT band_idx,
-           CAST(count(*) AS BIGINT) AS n_buckets,
-           CAST(sum(CASE WHEN n > {_LSH_BUCKET_CAP} THEN 1 ELSE 0 END)
-                AS BIGINT) AS capped_buckets,
-           CAST(max(n) AS BIGINT) AS max_bucket
-    FROM buckets
-    GROUP BY band_idx
-    """
+    return _phash_duck_bands() + _BAND_BUCKET_STATS_DUCK
 
 
 @register("phash_band_stats", _phash_band_stats_duck_sql())
@@ -1801,24 +1803,7 @@ def phash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket. Same no-silent-caps contract as dedup_minhash_hot_buckets
     — an operator sees exactly which boilerplate image clusters were
     capped and how big they were before trusting the near-dup pass."""
-    words, _ = _phash_parts_sql("spark")
-    d = _t(spark, sf_dir, "documents")
-    bands = d.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.expr(w) for w in words])
-        ).alias("band_idx", "bv"),
-    )
-    buckets = bands.groupBy("band_idx", "bv").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return buckets.groupBy("band_idx").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(
-            F.when(F.col("n") > _LSH_BUCKET_CAP, 1).otherwise(0)
-        ).alias("capped_buckets"),
-        F.max("n").alias("max_bucket"),
-    )
+    return _band_bucket_stats(phash_bands(_phash_docs(spark, sf_dir)))
 
 
 @register("phash_clusters", _clusters_duck_sql(_phash_duck_sql()))
@@ -3573,10 +3558,12 @@ def source_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each source's target rate is derived from md5(source) (basis
     points in [2500, 7500)), and a document is kept when the 16-bit
-    value of md5(doc_id)'s prefix falls under it: content-addressed
-    Bernoulli sampling, so the SAME rows are selected on every run,
-    every engine, and every cluster size — no RNG state to
-    coordinate across executors. Reports achieved vs target rate per
+    value of md5(doc_id)'s prefix, taken modulo 10000, falls under
+    it: content-addressed sampling, so the SAME rows are selected on
+    every run, every engine, and every cluster size — no RNG state
+    to coordinate across executors. The modulo folds 65536 values
+    onto 10000, so the keep probability is biased upward (about
+    0.534 at a 0.5 target). Reports achieved vs target rate per
     source (the no-silent-caps accounting for the sampler itself).
 
     100 TB shape: one column-pruned scan; both hashes are projected
@@ -3618,14 +3605,17 @@ def mix_sample(
     targets: Dict[str, float],
     default_rate: float = 1.0,
 ) -> DataFrame:
-    """The production face of source_mix_sample: keep each row iff
-    the 16-bit value of md5(key)'s prefix falls under its group's
+    """Deterministic per-group sampling: keep each row iff the 16-bit
+    value of md5(key)'s prefix is under rate * 65536 for its group's
     target rate — content-addressed, so the selected set is identical
     under retries, speculation, and any cluster size, with zero
-    coordination (no RNG seed schedule, no sampled index). `targets`
-    maps group value -> keep rate in [0, 1]; unlisted groups use
-    `default_rate`. One projection + filter: fully pushed into the
-    scan stage, no shuffle. Validate the result with
+    coordination (no RNG seed schedule, no sampled index). This is
+    NOT the rule source_mix_sample audits (that query keeps
+    prefix % 10000 < rate in basis points), so at the same rate the
+    two select different rows. `targets` maps group value -> keep
+    rate in [0, 1]; unlisted groups use `default_rate`. One
+    projection + filter: fully pushed into the scan stage, no
+    shuffle. Validate the result with
     expect_column_value_share_to_match_targets."""
     rate = F.lit(float(default_rate))
     for g, r in targets.items():
@@ -4044,6 +4034,29 @@ def _image_gate_duck() -> str:
 """
 
 
+def image_gate_exprs(
+    w: Column,
+    h: Column,
+    fmt: Column,
+    cap_len: Column,
+    min_side: int = _IMG_MIN_SIDE,
+    max_aspect: float = _IMG_MAX_ASPECT,
+    formats: Tuple[str, ...] = _IMG_FORMATS,
+    caption_chars: Tuple[int, int] = (_IMG_CAPTION_MIN, _IMG_CAPTION_MAX),
+) -> Tuple[Column, Column, Column, Column]:
+    """The image gate's rules, once: (f_side, f_aspect, f_fmt, f_cap)
+    boolean Columns, true where a row FAILS the rule and NULL where
+    its inputs are. Callers choose how NULL counts."""
+    return (
+        F.least(w, h) < min_side,
+        # try_divide: a zero side must fail f_side, not abort the job
+        # under ANSI division
+        F.try_divide(F.greatest(w, h), F.least(w, h)) > max_aspect,
+        ~fmt.isin(*formats),
+        (cap_len < caption_chars[0]) | (cap_len > caption_chars[1]),
+    )
+
+
 def image_gate_flags(
     df: DataFrame,
     w_col: str = "w",
@@ -4058,25 +4071,29 @@ def image_gate_flags(
     """Production face of image_quality_gate: per-row boolean gate
     flags + overall `keep` over a real image table in the engine's
     target shape (image_id, bytes, w, h, fmt, caption, phash). Pure
-    metadata expressions — one projection, no decode, no shuffle —
-    so the gate fuses into whatever scan feeds it and drops rows
-    BEFORE any byte-level work (decode checks, phash, dedup)."""
-    w, h = F.col(w_col), F.col(h_col)
+    metadata expressions (image_gate_exprs) — one projection, no
+    decode, no shuffle — so the gate fuses into whatever scan feeds
+    it and drops rows BEFORE any byte-level work (decode checks,
+    phash, dedup)."""
     cap_len = F.length(F.coalesce(F.col(caption_col), F.lit("")))
+    flags = image_gate_exprs(
+        F.col(w_col),
+        F.col(h_col),
+        F.col(fmt_col),
+        cap_len,
+        min_side,
+        max_aspect,
+        formats,
+        caption_chars,
+    )
     # every flag coalesces NULL -> True (fail-closed), mirroring
     # compile_metadata_quality_gate: a NULL dimension/format row must
     # be dropped, and `keep` must be a real boolean, never NULL
     # (~(False | NULL) is NULL, which a downstream filter would treat
     # as drop but a negated filter would too — ambiguity removed here)
-    f_side = F.coalesce(F.least(w, h) < min_side, F.lit(True))
-    # try_divide: a corrupt row with a zero side must FAIL the gate
-    # (f_side catches it), not abort the job under ANSI mode
-    f_aspect = F.coalesce(
-        F.try_divide(F.greatest(w, h), F.least(w, h)) > max_aspect,
-        F.lit(True),
-    )
-    f_fmt = F.coalesce(~F.col(fmt_col).isin(*formats), F.lit(True))
-    f_cap = (cap_len < caption_chars[0]) | (cap_len > caption_chars[1])
+    f_side, f_aspect, f_fmt, f_cap = [
+        F.coalesce(f, F.lit(True)) for f in flags
+    ]
     return df.select(
         "*",
         f_side.alias("f_min_side"),
@@ -4093,6 +4110,8 @@ def image_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped by min-side, aspect-ratio, format-whitelist and
     caption-length rules, with non-exclusive rule counts and the
     all-rules-pass keep rate (same contract as c4_quality_filter).
+    The rules are image_gate_exprs with ``n_chars`` as the caption
+    length.
 
     100 TB shape: one column-pruned scan (doc_id, source, n_chars —
     the text column is never read), a handful of integer/CASE
@@ -4108,29 +4127,13 @@ def image_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(fmt).alias("fmt"),
         "n_chars",
     )
-    f_side = F.when(
-        F.least("w", "h") < _IMG_MIN_SIDE, 1
-    ).otherwise(0)
-    # try_divide for the same reason as image_gate_flags /
-    # compile_metadata_quality_gate: a zero side must fail f_side,
-    # not abort the whole job under ANSI division
-    f_aspect = F.when(
-        F.try_divide(F.greatest("w", "h"), F.least("w", "h"))
-        > _IMG_MAX_ASPECT,
-        1,
-    ).otherwise(0)
-    f_fmt = F.when(~F.col("fmt").isin(*_IMG_FORMATS), 1).otherwise(0)
-    f_cap = F.when(
-        (F.col("n_chars") < _IMG_CAPTION_MIN)
-        | (F.col("n_chars") > _IMG_CAPTION_MAX),
-        1,
-    ).otherwise(0)
+    flags = image_gate_exprs(
+        F.col("w"), F.col("h"), F.col("fmt"), F.col("n_chars")
+    )
+    names = ("f_side", "f_aspect", "f_fmt", "f_cap")
     flagged = d.select(
         "source",
-        f_side.alias("f_side"),
-        f_aspect.alias("f_aspect"),
-        f_fmt.alias("f_fmt"),
-        f_cap.alias("f_cap"),
+        *[F.when(f, 1).otherwise(0).alias(n) for f, n in zip(flags, names)],
     )
     all_pass = F.when(
         F.col("f_side") + F.col("f_aspect") + F.col("f_fmt")
@@ -4236,6 +4239,50 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEG_LEN = 8  # tokens per non-overlapping dedup segment
 
 
+def segment_instances(
+    df: DataFrame, id_cols: List[str], text_col: str, seg_len: int
+) -> DataFrame:
+    """(h, *id_cols, c): h is the md5 of a non-overlapping
+    ``seg_len``-token segment of ``text_col`` (split on ' '), c its
+    count within the row keyed by ``id_cols``. Segments are array
+    slices per row (no shuffle), hashed AFTER the explode so md5
+    stays in whole-stage codegen."""
+    words = df.select(*id_cols, F.split(F.col(text_col), " ").alias("w"))
+    inst = (
+        words.where(F.size("w") >= seg_len)
+        .select(
+            *id_cols,
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, CAST(floor(size(w) "
+                    f"/ {seg_len}) AS INT) - 1), "
+                    f"i -> concat_ws(' ', slice(w, "
+                    f"i * {seg_len} + 1, {seg_len})))"
+                )
+            ).alias("s"),
+        )
+        .select(*id_cols, F.md5("s").alias("h"))
+    )
+    return inst.groupBy("h", *id_cols).agg(F.count(F.lit(1)).alias("c"))
+
+
+def segment_dup_counts(inst: DataFrame, *by: str) -> DataFrame:
+    """(*by, segs, dups) from segment_instances rows: instances per
+    ``by`` group, and those whose hash occurs in at least two rows
+    (within-row repetition never counts)."""
+    nrows = inst.groupBy("h").agg(F.count(F.lit(1)).alias("nrows"))
+    return (
+        inst.join(nrows, "h")
+        .groupBy(*by)
+        .agg(
+            F.sum("c").alias("segs"),
+            F.sum(
+                F.when(F.col("nrows") >= 2, F.col("c")).otherwise(0)
+            ).alias("dups"),
+        )
+    )
+
+
 _SEGMENT_DEDUP_DUCK = f"""
     WITH w AS (
       SELECT doc_id, source, string_split(text, ' ') AS words
@@ -4301,51 +4348,23 @@ def segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     is doc_repetition_scores' job): a segment counts as duplicated
     only when >= 2 distinct docs carry it.
 
-    100 TB shape: segments are built per-row (array slice work, no
-    shuffle), md5 runs AFTER the explode so it stays in whole-stage
-    codegen, and the corpus-wide state is two hash aggregations on
-    16-byte keys — (hash, doc) instance counts, then docs-per-hash —
-    followed by a shuffle-hash join of those two slim tables on the
-    same key (the first agg's exchange is reusable for both). No
-    window, no sort, no driver state; the per-source report is a
-    ~|sources|-row final agg. The reference has no corpus-dedup
+    100 TB shape: segment_instances + segment_dup_counts, the kernels
+    expect_column_duplicate_segment_rate_to_be_between also calls:
+    two hash aggs on 16-byte keys joined on the hash. The two
+    branches share NO exchange — pruning empties the docs-per-hash
+    branch's (hash, doc) agg functions, so the tokenize/explode/md5
+    scan runs twice (the final plan reads `text` in two of its three
+    FileScans). No window, no sort, no driver state; the per-source
+    report is a ~|sources|-row final agg. The reference has no corpus-dedup
     audit; expectation-parity anchor for the accounting style:
     unexpected-count fractions in map metrics
     (great_expectations/expectations/metrics/map_metric_provider.py).
     """
     d = _t(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id", "source", F.split(F.col("text"), " ").alias("words")
-    )
-    inst = (
-        words.where(F.size("words") >= _SEG_LEN)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, CAST(floor(size(words) "
-                    f"/ {_SEG_LEN}) AS INT) - 1), "
-                    f"i -> concat_ws(' ', slice(words, "
-                    f"i * {_SEG_LEN} + 1, {_SEG_LEN})))"
-                )
-            ).alias("s"),
-        )
-        .select("doc_id", "source", F.md5("s").alias("h"))
-    )
-    g1 = inst.groupBy("h", "doc_id", "source").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    hd = g1.groupBy("h").agg(F.count(F.lit(1)).alias("ndocs"))
-    perdoc = (
-        g1.join(hd, "h")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.sum("c").alias("segs"),
-            F.sum(
-                F.when(F.col("ndocs") >= 2, F.col("c")).otherwise(0)
-            ).alias("dups"),
-        )
+    perdoc = segment_dup_counts(
+        segment_instances(d, ["doc_id", "source"], "text", _SEG_LEN),
+        "doc_id",
+        "source",
     )
     psrc = perdoc.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs_with_segments"),
@@ -4468,6 +4487,38 @@ def source_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def split_leakage_counts(
+    flagged: DataFrame, key: str, is_eval: str, *by: str
+) -> DataFrame:
+    """(*by, n, leaked, leaked_keys) over the eval rows of ``flagged``
+    (boolean column ``is_eval`` true): eval rows, those whose ``key``
+    also occurs in a train row (``is_eval`` false), and their distinct
+    keys. The train side collapses to distinct keys via a
+    map-side-combined hash agg, and the leak check is a left join on
+    the key: AQE broadcasts the distinct side when it fits and falls
+    back to a shuffle-hash join when it does not."""
+    train = (
+        flagged.where(~F.col(is_eval))
+        .select(key)
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    return (
+        flagged.where(F.col(is_eval))
+        .join(train, key, "left")
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
+                "leaked"
+            ),
+            F.count_distinct(
+                F.when(F.col("hit") == 1, F.col(key))
+            ).alias("leaked_keys"),
+        )
+    )
+
+
 def _phash_split_leakage_duck() -> str:
     _, packed = _phash_parts_sql("duck")
     sk = _hexval_sql("CAST(doc_id AS VARCHAR)", "duck")
@@ -4504,46 +4555,30 @@ def phash_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     a `doc_id % k` split here would alias with the generator's
     source assignment and leave most sources with zero eval rows.
 
-    100 TB shape: one projection builds (phash, side), the train
-    side collapses to distinct phashes via a map-side-combined hash
-    agg, and the leak check is a join on an 8-byte key — AQE
-    broadcasts the distinct side when it fits and falls back to a
-    shuffle-hash join when it does not; nothing here is driver-side.
-    When even the distinct table is too big to shuffle comfortably,
-    the theta-sketch variant (split_fingerprint_overlap) is the
-    documented approximate fallback."""
+    100 TB shape: one projection builds (phash, side), then
+    split_leakage_counts — the kernel
+    expect_column_split_leakage_rate_to_be_between also calls — joins
+    the eval rows to the distinct train phashes on an 8-byte key;
+    nothing here is driver-side. When even the distinct table is too
+    big to shuffle comfortably, the theta-sketch variant
+    (split_fingerprint_overlap) is the documented approximate
+    fallback."""
     _, packed = _phash_parts_sql("spark")
     sk = _hexval_sql("CAST(doc_id AS STRING)", "spark")
-    d = _t(spark, sf_dir, "documents")
-    base = d.select(
+    base = _t(spark, sf_dir, "documents").select(
         "source",
         F.expr(packed).alias("phash"),
         (F.expr(sk) % 5 == 0).alias("is_eval"),
     )
-    train = (
-        base.where(~F.col("is_eval"))
-        .select("phash")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    ev = base.where(F.col("is_eval"))
-    j = ev.join(train, "phash", "left")
-    return j.groupBy("source").agg(
-        F.count(F.lit(1)).alias("eval_images"),
-        F.sum(F.coalesce("hit", F.lit(0)))
-        .cast("bigint")
-        .alias("leaked_images"),
-        F.countDistinct(
-            F.when(F.col("hit") == 1, F.col("phash"))
-        ).alias("leaked_phashes"),
-        (
-            F.floor(
-                F.sum(F.coalesce("hit", F.lit(0)))
-                * 10000.0
-                / F.count(F.lit(1))
-            )
-            / 10000
-        ).alias("leak_rate"),
+    c = split_leakage_counts(base, "phash", "is_eval", "source")
+    return c.select(
+        "source",
+        F.col("n").alias("eval_images"),
+        F.col("leaked").alias("leaked_images"),
+        F.col("leaked_keys").alias("leaked_phashes"),
+        (F.floor(F.col("leaked") * 10000.0 / F.col("n")) / 10000).alias(
+            "leak_rate"
+        ),
     )
 
 

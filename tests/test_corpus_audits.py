@@ -311,36 +311,148 @@ def test_split_leakage_rate_expectation(spark):
     assert not bad.success
 
 
+@pytest.fixture(scope="module")
+def fuzz_dir(spark, tmp_path_factory):
+    """The differential fuzz gate's seed-11 corpus, so its adversarial
+    shapes reach each expectation's own rate arithmetic."""
+    from test_oracle_fuzz import _gen_corpus
+
+    d = str(tmp_path_factory.mktemp("fuzz11"))
+    spark.createDataFrame(
+        _gen_corpus(11),
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    ).coalesce(3).write.mode("overwrite").parquet(d + "/documents.parquet")
+    return d
+
+
+def _leakage_agrees(spark, sf_dir, docs):
+    from pyspark.sql import functions as F
+
+    _, packed = sq._phash_parts_sql("spark")
+    sk = sq._hexval_sql("CAST(doc_id AS STRING)", "spark")
+    frame = docs.select(
+        F.expr(packed).alias("phash"),
+        (F.expr(sk) % 5 == 0).alias("is_eval"),
+    )
+    exp = dict(
+        column="phash", eval_condition="is_eval", max_value=1.0
+    )
+    audit = sq.phash_split_leakage(spark, sf_dir).collect()
+    ev = sum(x.eval_images for x in audit)
+    leaked = sum(x.leaked_images for x in audit)
+
+    def check(r):
+        assert r.result["element_count"] == ev
+        assert r.result["details"]["leaked_rows"] == leaked
+        assert abs(r.result["observed_value"] - leaked / ev) < 1e-9
+
+    return "expect_column_split_leakage_rate_to_be_between", frame, exp, check
+
+
+def _phash_agrees(spark, sf_dir, docs):
+    from pyspark.sql import functions as F
+
+    _, packed = sq._phash_parts_sql("spark")
+    # sorted, so the expectation's monotonic row ids rank rows as
+    # doc_id does and a capped bucket picks the same hub
+    frame = docs.orderBy("doc_id").select(F.expr(packed).alias("phash"))
+    exp = dict(column="phash", max_value=1.0)
+    pairs = sq.phash_hamming_neardup(spark, sf_dir).collect()
+    involved = {p.doc_a for p in pairs} | {p.doc_b for p in pairs}
+    n = docs.count()
+
+    def check(r):
+        assert r.result["element_count"] == n
+        assert r.result["details"]["near_duplicate_rows"] == len(involved)
+        assert r.result["details"]["max_hamming"] == sq._PHASH_HAMMING_MAX
+
+    return (
+        "expect_column_phash_near_duplicate_rate_to_be_between",
+        frame, exp, check,
+    )
+
+
+def _segment_agrees(spark, sf_dir, docs):
+    exp = dict(column="text", max_value=1.0)
+    audit = sq.segment_dedup_stats(spark, sf_dir).collect()
+    segs = sum(x.segments for x in audit)
+    dups = sum(x.dup_segments for x in audit)
+
+    def check(r):
+        assert r.result["element_count"] == segs
+        assert r.result["details"]["duplicate_segments"] == dups
+        assert r.result["details"]["segment_tokens"] == sq._SEG_LEN
+
+    return (
+        "expect_column_duplicate_segment_rate_to_be_between",
+        docs.select("text"), exp, check,
+    )
+
+
+def _gate_agrees(spark, sf_dir, docs):
+    from pyspark.sql import functions as F
+
+    w, h, fmt = sq._image_meta_sql()
+    frame = docs.select(
+        F.col("doc_id").alias("image_id"),
+        F.expr(w).alias("w"),
+        F.expr(h).alias("h"),
+        F.expr(fmt).alias("fmt"),
+        F.expr("repeat('x', CAST(n_chars AS INT))").alias("caption"),
+    )
+    exp = dict(mostly=0.0)
+    audit = sq.image_quality_gate(spark, sf_dir).collect()
+    n = sum(x.docs for x in audit)
+    dropped = sum(x.docs - x.kept for x in audit)
+
+    def check(r):
+        assert r.result["element_count"] == n
+        assert r.result["unexpected_count"] == dropped
+
+    return "expect_image_metadata_to_pass_quality_gate", frame, exp, check
+
+
+def _assert_agrees(spark, family, sf_dir):
+    import great_expectations_spark as ges
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    etype, frame, kwargs, check = family(spark, sf_dir, docs)
+    r = ges.validate(frame, ges.suite("agree").expect(etype, **kwargs))
+    check(r.results[0])
+
+
 def test_split_leakage_matches_audit_query(spark):
     """The declarative face and the phash_split_leakage audit agree on
     real data: overall leaked/eval from the expectation equals the
     audit's per-source rows summed."""
-    import great_expectations_spark as ges
-    from great_expectations_spark.suite_queries import (
-        _hexval_sql,
-        _phash_parts_sql,
-    )
-    from pyspark.sql import functions as F
+    _assert_agrees(spark, _leakage_agrees, SF)
 
-    _, packed = _phash_parts_sql("spark")
-    sk = _hexval_sql("CAST(doc_id AS STRING)", "spark")
-    d = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.expr(packed).alias("phash"),
-        (F.expr(sk) % 5 == 0).alias("is_eval"),
-    )
-    r = ges.validate(
-        d,
-        ges.suite("leak").expect(
-            "expect_column_split_leakage_rate_to_be_between",
-            column="phash", eval_condition="is_eval", max_value=1.0,
-        ),
-    ).results[0]
-    audit = sq.phash_split_leakage(spark, SF).collect()
-    ev = sum(x.eval_images for x in audit)
-    leaked = sum(x.leaked_images for x in audit)
-    assert r.result["element_count"] == ev
-    assert r.result["details"]["leaked_rows"] == leaked
-    assert abs(r.result["observed_value"] - leaked / ev) < 1e-9
+
+_FAMILIES = {
+    "leakage": _leakage_agrees,
+    "phash": _phash_agrees,
+    "segment": _segment_agrees,
+    "gate": _gate_agrees,
+}
+
+
+@pytest.mark.parametrize(
+    "family,corpus",
+    [
+        pytest.param(f, c, id=f"{name}-{c}")
+        for name, f in _FAMILIES.items()
+        for c in ("sf0.001", "fuzz11")
+        # leakage on sf0.001 is test_split_leakage_matches_audit_query
+        if (name, c) != ("leakage", "sf0.001")
+    ],
+)
+def test_expectation_matches_audit_query(spark, fuzz_dir, family, corpus):
+    """Each declarative face and its oracle-gated audit query agree
+    on the same documents: the expectation's totals equal the query's
+    rows summed (leakage, segment, gate) or its distinct pair ids
+    (phash)."""
+    _assert_agrees(spark, family, SF if corpus == "sf0.001" else fuzz_dir)
 
 
 # --- lsh_containment_pairs ------------------------------------------------------
