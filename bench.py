@@ -1,34 +1,27 @@
-"""Benchmark harness: headline operator queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the
-flagship image+caption suite validation at TWO parallelism levels
-(local[2] vs local[8] by default — N vs 4N, both fully core-backed)
-over the same materialized table — the sandbox stand-in for the north
-rule's N-vs-4N-executor scaling criterion (BASELINE.json).
+"""Headline benchmark: every registered operator query at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS], plus the flagship 13-expectation image suite
+at local[2] and local[8] (N vs 4N) over one materialized
+$SPARK_GRAFT_IMG_ROWS-row image table.
 
-Prints ONE compact JSON line (the driver artifact); per-run detail
-goes to BENCH_DETAILS.json. The headline scaling_efficiency is the
-MEDIAN efficiency over clean pairs measured in quiet host windows
-(steal < 500 jiffies AND the direct 8-process core probe within 20%
-of this box's calibrated best — see _core_probe); the best pair is
-reported separately.
+perfbench/ (BENCHMARK.json) is the benchmark of record; this script is
+a coarse headline. Each query is run once to warm codegen and parquet
+footers, then timed once. Each of SCALE_REPEATS rounds validates the
+suite in a fresh process at local[2] and then at local[8]; a round's
+efficiency is t_lo / (4 * t_hi) of the two levels' best times. The bench
+prints every pair and their median efficiency as one JSON line.
 
-Quiet windows are scarce on this shared VM, so pairs POOL across
-invocations: every run appends its pairs to .bench_pairs_store.json
-under an engine fingerprint (any package/knob change resets the
-store), and the headline is computed over all fingerprint-matching
-pairs. `python bench.py --scale-only` runs just the scaling phase to
-bank pairs opportunistically; until a quiet pair exists, rounds WAIT
-for the probe to report a quiet window instead of measuring into
-noise the gates will reject.
-
-Usage: python bench.py [--scale-only]
+Usage: python bench.py
+       python bench.py --suite-run CORES [REPEATS]   (one fresh-process
+       sample, printed as JSON; used by the scaling rounds)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import statistics
+import subprocess
 import sys
 import time
 
@@ -40,91 +33,28 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 IMG_ROWS = int(os.environ.get("SPARK_GRAFT_IMG_ROWS", "2000000"))
 IMG_PATH = f"/tmp/ges_bench_images_{IMG_ROWS}"
-# N vs 4N parallelism for the scaling-efficiency figure. Both levels
-# must be fully backed by physical cores (the box has 32), including
-# each level's python workers (active threads ~= 2 x task threads).
-# Default is 2-vs-8: its full thread footprint (4 vs 16 active of 32
-# cores) keeps the chip in comparable frequency states at both
-# levels. At 4-vs-16 the high level drives ~32 active threads, and
-# this host's all-core frequency/contention drop (4-18% per-thread
-# at 32 active vs 4 across windows, tools/freq_probe.py) deflates
-# the ratio with a single-box DVFS artifact that a real N-vs-4N
-# executor comparison (same per-node conditions at both cluster
-# sizes) does not have.
-SCALE_LEVELS = tuple(
-    int(x)
-    for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "2,8").split(",")
+# N vs 4N parallelism. 2-vs-8 keeps both levels' full thread footprint
+# (task threads plus their python workers) inside the cores of a
+# 32-core host, so both run in comparable frequency states.
+SCALE_LEVELS = (2, 8)
+SCALE_REPEATS = 3
+# Driver heap: 16g on hosts with 64 GB or more, a quarter of physical
+# memory below that. The driver JVM of main() outlives spark.stop(),
+# so it and one suite-run JVM must fit in memory together.
+_HEAP_MB = min(
+    16 << 10, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 22
 )
-SCALE_REPEATS = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "3"))
-# hard wall-clock budget for the scaling phase: adaptive sampling
-# stops extending once this is exhausted (at least one round always
-# completes), keeping the whole bench inside a driver-friendly window
-SCALE_BUDGET_S = float(os.environ.get("SPARK_GRAFT_SCALE_BUDGET_S", "480"))
-
-# 55 of the 64 registered queries. The 9 left out are cheap variants
-# of kernels already timed here (between/regex/value-length violations
-# and most_common_value share the fused map-condition scan shape;
-# dedup_minhash_signatures is a strict prefix of dedup_minhash_pairs;
-# events_hourly_rollup / sessionization / topk_events_per_type /
-# lang_id_heuristic duplicate the timed events/lang kernels) — all 64
-# stay under the oracle + fuzz correctness gates regardless.
-HEADLINE = [
-    "fused_column_stats",
-    "set_membership_violations",
-    "uniqueness_duplicates",
-    "compound_uniqueness",
-    "referential_violations",
-    "value_counts",
-    "quantiles",
-    "histogram",
-    "zscore_violations",
-    "psi_drift",
-    "ks_statistic",
-    "wasserstein_qty_drift",
-    "embedding_norm_stats",
-    "dedup_exact_stats",
-    "dedup_minhash_pairs",
-    "dedup_minhash_hot_buckets",
-    "lsh_verified_pairs",
-    "lsh_containment_pairs",
-    "dedup_clusters",
-    "dedup_ratio_by_source",
-    "dedup_simhash",
-    "ngram_jaccard_adjacent",
-    "embedding_cosine_topk",
-    "dedup_embedding_neardup",
-    "embedding_bucket_stats",
-    "ann_ivf_topk",
-    "ann_kmeans_topk",
-    "ann_multiprobe_topk",
-    "phash_hamming_neardup",
-    "phash_band_stats",
-    "phash_clusters",
-    "crossmodal_dedup_clusters",
-    "crossmodal_edge_stats",
-    "text_quality_scores",
-    "token_count_by_source",
-    "source_mix_sample",
-    "seq_packing_stats",
-    "doc_repetition_scores",
-    "segment_dedup_stats",
-    "source_token_divergence",
-    "phash_split_leakage",
-    "phash_bit_balance",
-    "c4_quality_filter",
-    "pii_scan",
-    "heavy_hitters",
-    "unigram_logprob_quality",
-    "image_quality_gate",
-    "token_fertility_by_lang",
-    "dedup_cluster_sizes",
-    "ngram_contamination",
-    "split_fingerprint_overlap",
-    "events_cardinality_by_hour",
-    "doc_fingerprints",
-    "doc_winnow_fingerprints",
-    "ann_recall",
-]
+DRIVER_MEM = f"{_HEAP_MB}m"
+# G1 sizes its GC thread pools to all host vCPUs by default, which at
+# 16 task threads storms the collector (2.5x JVM CPU measured). GC
+# threads should track executor cores, as spark.executor.extraJavaOptions
+# would set them on a cluster; the big young gen (half the heap)
+# absorbs the churny Arrow/parquet byte arrays.
+GC_OPTS = (
+    f"-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2 -Xmn{_HEAP_MB // 2}m"
+)
+ARROW_BATCH = "10000"
+SPLITS_PER_CORE = 6
 
 
 def _dir_bytes(path: str) -> int:
@@ -138,40 +68,18 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-# G1 on Java 17 defaults its GC thread pools to ALL host vCPUs (32
-# here), so at 16 task threads the collector storms: measured 61 JVM
-# core-s for a suite run that needs 24 (2.5x inflation, scaling
-# efficiency 0.28-0.68). Capping GC threads and giving the churny
-# Arrow/parquet byte arrays a big young gen returns JVM CPU to the
-# local[4] level (23 core-s) and is exactly what you'd set via
-# spark.executor.extraJavaOptions on a real cluster (GC threads
-# should track executor cores, not host cores).
-GC_OPTS = os.environ.get(
-    "SPARK_GRAFT_GC_OPTS",
-    "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2 -Xmn8g",
-)
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-ARROW_BATCH = os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000")
-
-
-def make_session(
-    cores: int, data_path: str = None, split_cores: int = None
-) -> SparkSession:
-    # Size input splits so a scan plans ~6 tasks per core — the same
-    # split-to-executor ratio a 10^12-row table gets from 128 MB
-    # splits on a real cluster. A fixed split size either caps
-    # parallelism (too big) or drowns the job in task-scheduling
-    # overhead (too small) as the table size changes. For scaling
-    # pairs, `split_cores` pins BOTH levels to the high level's
-    # splits so they execute identical task sets (on a real cluster
-    # the splits come from file size, not cluster size).
-    data_path = data_path or IMG_PATH
-    size = _dir_bytes(data_path) if os.path.isdir(data_path) else 0
-    spc = int(os.environ.get("SPARK_GRAFT_SPLITS_PER_CORE", "6"))
-    mpb = min(max(size // (spc * (split_cores or cores)), 1 << 20), 128 << 20)
-    # single-threaded BLAS in python workers: one core per worker is
-    # the contract; nested OpenMP/BLAS pools oversubscribe at high
-    # parallelism (library hygiene for pandas-UDF workers anywhere)
+def make_session(cores: int, split_cores: int = None) -> SparkSession:
+    # Size input splits so a scan plans SPLITS_PER_CORE tasks per core,
+    # the split-to-executor ratio a large table gets from 128 MB splits
+    # on a real cluster. `split_cores` pins both scaling levels to the
+    # high level's splits so they execute identical task sets.
+    size = _dir_bytes(IMG_PATH) if os.path.isdir(IMG_PATH) else 0
+    mpb = min(
+        max(size // (SPLITS_PER_CORE * (split_cores or cores)), 1 << 20),
+        128 << 20,
+    )
+    # single-threaded BLAS in python workers: nested OpenMP/BLAS pools
+    # oversubscribe at high parallelism
     for v in (
         "OMP_NUM_THREADS",
         "OPENBLAS_NUM_THREADS",
@@ -235,24 +143,15 @@ def image_suite():
 
 
 def _suite_runs_at(cores: int, repeats: int) -> dict:
-    """One session at `cores`: warmup + `repeats` timed validations.
+    """One session at `cores`: a warmup validation, then `repeats`
+    timed validations of the suite compiled once (ges.compile_suite),
+    the per-batch production shape. compile_s is reported separately.
 
-    Splits are pinned to the HIGH scale level so every level runs the
-    same task set. The warmup is a FULL validation, not a limit(2000):
-    a truncated warmup leaves codegen, parquet footers, and most of
-    the Python worker pool cold (limit() plans a single task), and the
-    first timed run then absorbs ~5s of one-time cost that reads as
-    fake anti-scaling (r01 recorded 9.6s at local[16] vs 5.0s warm).
-    Steady-state throughput is the quantity the north rule scales.
-
-    The suite is COMPILED ONCE (ges.compile_suite) and the timed runs
-    reuse the compiled plan — this is the per-batch production shape
-    (streaming foreachBatch compiles once; checkpoint grids reuse one
-    plan per schema). The ~0.9s of per-validate driver fixed cost
-    (~0.45s py4j expression construction + session job overhead,
-    measured) is parallelism-INDEPENDENT, so leaving it in each run
-    deflates the N-vs-4N ratio with a term a real cluster's
-    steady-state never pays per batch. compile_s is reported.
+    The warmup validates a 25% sample: the full scan shape (every row
+    group read, every python worker started, footers cached) at a
+    quarter of the decode cost. A limit() warmup plans one task and
+    leaves the worker pool cold. Splits are pinned to the high scale
+    level so every level runs the same task set.
     """
     import great_expectations_spark as ges
 
@@ -260,27 +159,21 @@ def _suite_runs_at(cores: int, repeats: int) -> dict:
     try:
         df = spark.read.parquet(IMG_PATH)
         n = df.count()
-        # warmup on a 25% sample: full scan shape (every row group is
-        # read, all python workers spin up, footers cached) at a
-        # quarter of the decode cost — the first timed run pays only
-        # the sample-free plan's JIT (~0.3s), absorbed by min-of-N.
-        # A limit() warmup is NOT equivalent (plans one task, leaves
-        # the worker pool cold — the r01 mistake).
         ges.validate(
             df.sample(fraction=0.25, seed=1),
             image_suite(),
             result_format="SUMMARY",
         )
-        t_c = time.time()
+        t_c = time.perf_counter()
         compiled = ges.compile_suite(
             image_suite(), df.schema, spark, result_format="SUMMARY"
         )
-        compile_s = time.time() - t_c
+        compile_s = time.perf_counter() - t_c
         times, phases = [], []
         for _ in range(repeats):
-            t0 = time.time()
+            t0 = time.perf_counter()
             res = compiled.validate(df)
-            times.append(time.time() - t0)
+            times.append(time.perf_counter() - t0)
             phases.append(res.meta.get("phase_times"))
         return {
             "rows": n,
@@ -294,16 +187,9 @@ def _suite_runs_at(cores: int, repeats: int) -> dict:
 
 
 def _suite_run_subprocess(cores: int) -> dict:
-    """One timed validation in a FRESH python+JVM subprocess.
-
-    Sequential SparkSessions inside one driver JVM degrade measurably
-    (observed 11s -> 27s across 6 sessions of the same workload:
-    gateway-JVM heap aging), so every scaling sample gets a clean
-    process.
-    """
-    import subprocess
-    import sys
-
+    """_suite_runs_at in a fresh python + JVM: sequential sessions in
+    one driver JVM slow down (11 s -> 27 s over 6 sessions measured),
+    so every scaling sample gets a clean process."""
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--suite-run", str(cores)],
         capture_output=True,
@@ -320,749 +206,64 @@ def _suite_run_subprocess(cores: int) -> dict:
     return json.loads(lines[-1])
 
 
-def _read_steal() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
-# --- direct multi-core availability probe -----------------------------------
-# Steal jiffies under-report same-host contention: windows with
-# steal < 150 have measured the identical suite 30% slower than other
-# sub-150 windows, and the skew is one-sided — neighbor load barely
-# touches a 2-thread run on a 32-core box but directly slows an
-# 8-thread run, deflating the pair ratio. The probe measures the
-# confounder directly: N worker PROCESSES (bypassing the GIL) each
-# burn a fixed arithmetic loop; wall time of the slowest worker is the
-# current effective N-core throughput. It is outcome-independent (it
-# never looks at suite timings) so gating "quiet" on it cannot select
-# for high efficiency, only for clean measurement conditions — the
-# same justification as the steal gate, with better sensitivity.
-
-_PROBE_WORKERS = 8
-# ~1.2 s per probe on an idle box: long enough that consecutive-probe
-# jitter is ~6% (at 0.4 s it was ~16%, too close to the 20% gate)
-_PROBE_SPINS = 20_000_000
-_PROBE_CALIB_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    ".bench_probe_calibration.json",
-)
-
-
-def _probe_spin(spins: int) -> int:
-    acc = 0
-    for i in range(spins):
-        acc += i * i
-    return acc & 1
-
-
-def _core_probe() -> float:
-    """Wall seconds for _PROBE_WORKERS processes to finish a fixed
-    spin each (~1.2 s on an idle box); grows with neighbor load."""
-    import multiprocessing as mp
-
-    t0 = time.time()
-    ctx = mp.get_context("fork")
-    with ctx.Pool(_PROBE_WORKERS) as pool:
-        pool.map(_probe_spin, [_PROBE_SPINS] * _PROBE_WORKERS)
-    return time.time() - t0
-
-
-def _robust_probe(settle_s: float = 0.0) -> float:
-    """min of two probes 2 s apart, optionally after a settle sleep.
-    NEIGHBOR load persists across seconds and shows in both samples;
-    a transient this bench itself just caused (JVM teardown, page
-    reclaim after a 16-thread suite burst) decays and shows in at
-    most one — r4 observed post-run probes of 1.5-2.2 s on a box
-    whose idle probe was 1.21 s with steal ~0 and three pairs
-    agreeing at 0.85 efficiency. Still 100%% confounder-based: no
-    suite timing is consulted."""
-    if settle_s:
-        time.sleep(settle_s)
-    a = _core_probe()
-    time.sleep(2)
-    b = _core_probe()
-    return min(a, b)
-
-
-def _load_probe_best() -> float:
-    try:
-        with open(_PROBE_CALIB_PATH) as f:
-            return float(json.load(f)["best_probe_s"])
-    except (OSError, ValueError, KeyError):
-        return float("inf")
-
-
-def _save_probe_best(best: float) -> None:
-    try:
-        with open(_PROBE_CALIB_PATH, "w") as f:
-            json.dump({"best_probe_s": round(best, 4)}, f)
-    except OSError:
-        pass
-
-
-# --- persistent pair store ---------------------------------------------------
-# Quiet host windows on this shared VM are SCARCE (r1-r3: every
-# driver bench landed in a contaminated hour while out-of-band runs
-# measured 0.86-0.94 in quiet windows). Scaling pairs are therefore
-# accumulated ACROSS bench invocations in a sidecar store: any run —
-# `python bench.py --scale-only` during development, or the full
-# driver bench — appends its pairs, and the headline is computed over
-# every stored pair whose engine fingerprint matches the current
-# code. The fingerprint covers every engine .py file, the suite/
-# session shape in this script, and the measurement knobs, so a pair
-# can never carry timing from code that no longer exists. This is
-# measurement POOLING across windows, not selection: every pair ever
-# measured under the current fingerprint is kept and reported, and
-# the quiet/contaminated gates applied to stored pairs are the same
-# outcome-independent confounder gates applied to fresh ones.
-
-_PAIR_STORE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    ".bench_pairs_store.json",
-)
-
-
-def _code_digest(path: str) -> bytes:
-    """Digest of a module's RUNTIME-RELEVANT content: the AST with
-    docstrings stripped. Comment/docstring-only edits (citation
-    fixes, doc passes) leave timing behavior untouched, so they must
-    not orphan banked scaling pairs — r4 lost a 9-pair quiet bank to
-    a docstring commit. Any change that survives into the AST
-    (code, literals, decorators, defaults) still rotates the digest.
-    Unparseable files fall back to raw bytes."""
-    import ast
-    import hashlib
-
-    with open(path, "rb") as f:
-        src = f.read()
-    try:
-        tree = ast.parse(src)
-    except (SyntaxError, ValueError):
-        return hashlib.sha256(src).digest()
-    for node in ast.walk(tree):
-        if isinstance(
-            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
-        ):
-            body = node.body
-            if (
-                body
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                node.body = body[1:] or [ast.Pass()]
-    dumped = ast.dump(tree, include_attributes=False)
-    return hashlib.sha256(dumped.encode()).digest()
-
-
-def _engine_fingerprint() -> str:
-    import hashlib
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    pkg = os.path.join(here, "great_expectations_spark")
-    files = []
-    for root, _, fns in os.walk(pkg):
-        for fn in fns:
-            if fn.endswith(".py"):
-                files.append(os.path.join(root, fn))
-    files.append(os.path.abspath(__file__))
-    for p in sorted(files):
-        h.update(os.path.relpath(p, here).encode())
-        h.update(_code_digest(p))
-    knobs = (
-        f"levels={SCALE_LEVELS}|rows={IMG_ROWS}|gc={GC_OPTS}|"
-        f"mem={DRIVER_MEM}|arrow={ARROW_BATCH}|"
-        f"spc={os.environ.get('SPARK_GRAFT_SPLITS_PER_CORE', '6')}|"
-        f"host={_host_id()}"
-    )
-    h.update(knobs.encode())
-    return h.hexdigest()[:16]
-
-
-def _host_id() -> str:
-    """Stable identity of THIS machine, folded into the fingerprint:
-    pairs measured on one box must never headline a run on another
-    (a clone on a different/reimaged host would otherwise inherit
-    the old host's pairs and calibration wholesale)."""
-    try:
-        with open("/etc/machine-id") as f:
-            mid = f.read().strip()
-    except OSError:
-        mid = ""
-    import platform
-
-    return f"{mid or platform.node()}/{os.cpu_count()}"
-
-
-def _load_stored_pairs(fingerprint: str) -> list:
-    try:
-        with open(_PAIR_STORE_PATH) as f:
-            store = json.load(f)
-    except (OSError, ValueError):
-        return []
-    if store.get("fingerprint") != fingerprint:
-        return []
-    pairs = store.get("pairs") or []
-    for p in pairs:
-        p["from_store"] = True
-    return pairs
-
-
-def _append_stored_pairs(fingerprint: str, new_pairs: list) -> int:
-    """Append this run's pairs under the fingerprint (resetting the
-    store if the engine changed). Returns total stored pairs. The
-    read-modify-write runs under an exclusive flock so a --scale-only
-    run and a full bench finishing together cannot overwrite each
-    other's banked pairs."""
-    keep_keys = (
-        "lo_sec", "hi_sec", "efficiency", "steal_jiffies", "probe_s",
-        "measured_at",
-    )
-    try:
-        import fcntl
-
-        lock_path = _PAIR_STORE_PATH + ".lock"
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            existing = _load_stored_pairs(fingerprint)
-            merged = [
-                {k: p[k] for k in keep_keys if k in p}
-                for p in existing + new_pairs
-            ]
-            tmp = _PAIR_STORE_PATH + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"fingerprint": fingerprint, "pairs": merged}, f,
-                    indent=1,
-                )
-            os.replace(tmp, _PAIR_STORE_PATH)
-    except OSError:
-        return len(new_pairs)
-    return len(merged)
-
-
-_QUERY_STORE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    ".bench_query_store.json",
-)
-
-
-def _query_steal_cap(dt: float) -> int:
-    """Quiet threshold for ONE timed operator query: steal jiffies
-    scale with wall time, so the cap does too — ~25 jiffies/s is the
-    same density as the 500-jiffy cap on a ~20 s scaling pair, with a
-    floor of 30 for sub-second queries (a single scheduling blip)."""
-    return max(30, int(25 * dt))
-
-
-def _merge_query_store(fingerprint: str, meta: dict) -> tuple:
-    """Pool per-query QUIET minima across invocations under the same
-    engine fingerprint (the pair store's logic applied to operator
-    timings): report each query's best quiet-window time seen under
-    this exact code. Non-quiet times never enter the store — they can
-    only stand in when no quiet window has EVER covered the query.
-    Returns (per_query times, fraction quiet-backed)."""
-    try:
-        with open(_QUERY_STORE_PATH) as f:
-            store = json.load(f)
-        if store.get("fingerprint") != fingerprint:
-            store = {}
-    except (OSError, ValueError):
-        store = {}
-    stored = store.get("queries", {})
-    out, quiet_n = {}, 0
-    for name, m in meta.items():
-        prev = stored.get(name)
-        cand = [(m["sec"], m["quiet"])]
-        if prev is not None:
-            cand.append((prev, True))
-        quiet_c = [s for s, q in cand if q]
-        if quiet_c:
-            out[name] = round(min(quiet_c), 3)
-            quiet_n += 1
-            stored[name] = min(
-                quiet_c + ([stored[name]] if name in stored else [])
-            )
-        else:
-            out[name] = m["sec"]
-    try:
-        import fcntl
-
-        with open(_QUERY_STORE_PATH + ".lock", "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            with open(_QUERY_STORE_PATH + ".tmp", "w") as f:
-                json.dump(
-                    {"fingerprint": fingerprint, "queries": stored}, f
-                )
-            os.replace(_QUERY_STORE_PATH + ".tmp", _QUERY_STORE_PATH)
-    except OSError:
-        pass
-    frac = quiet_n / len(meta) if meta else 1.0
-    return out, round(frac, 3)
-
-
-def _is_quiet(pair: dict, probe_best: float) -> bool:
-    """THE quiet-window predicate: low hypervisor steal AND the
-    direct core probe within 20% of the calibrated best. Every
-    consumer — the extension stopping rule, stored-pair gating, the
-    headline basis — must use this one definition or the pooling
-    claim ("same gates for stored and fresh pairs") silently breaks."""
-    return (
-        pair["steal_jiffies"] < 500
-        and pair["probe_s"] <= 1.2 * probe_best
-    )
-
-
-def _wait_for_quiet_window(
-    deadline: float, probe_best: float, max_wait_s: float
-) -> float:
-    """Block until the direct core probe reports a quiet window (or
-    a wait/budget cap expires); returns the last probe time. Gated
-    purely on the CONFOUNDER (neighbor load via _core_probe), never
-    on suite timings — waiting for clean measurement conditions
-    cannot select for high efficiency. Burning wall-clock on sleep
-    beats burning it on a measurement the steal/probe gates will
-    reject (r3: three rounds, all contaminated, zero gated pairs)."""
-    waited = 0.0
-    while True:
-        probe = _robust_probe()
-        if probe <= 1.2 * probe_best:
-            return probe
-        remaining = deadline - time.time()
-        if waited >= max_wait_s or remaining < 90:
-            return probe
-        step = min(30.0, max_wait_s - waited, remaining - 60)
-        if step <= 0:
-            return probe
-        time.sleep(step)
-        waited += step
-
-
-def run_scaling(levels, repeats: int, stored_pairs=()) -> dict:
-    """PAIRED interleaved sampling: each round runs a fresh-process
-    session at the low level immediately followed by one at the high
-    level, yielding one (lo, hi) pair measured in the same host-
-    weather window. On this shared VM the same workload swings 30%
-    across minutes (hypervisor steal + frequency state — steal
-    jiffies alone under-report it, and frequency is invisible to the
-    guest), so minima taken independently per level routinely come
-    from DIFFERENT windows and produce a meaningless ratio (r01
-    recorded 0.28 from exactly that artifact). The efficiency of a
-    same-window pair is the controlled estimator; the headline is the
-    MEDIAN over clean pairs from quiet windows (see main()), and every
-    sample, every per-pair efficiency, and per-pair steal jiffies are
-    recorded so any round's number can be read against the contention
-    it ran under.
-
-    The round count is 2*max(repeats,2) (budget permitting) and never
-    depends on the observed EFFICIENCIES — a stopping rule
-    conditioned on reaching the target would make the reported max an
-    optionally-stopped, upward-biased estimator. One extension exists
-    and it is gated on the independently-measured CONFOUNDER, not the
-    outcome: if no round so far ran in a quiet window (per-pair steal
-    under 500 jiffies AND core probe within 20% of the calibrated
-    best — see _core_probe), up to 6 extra rounds are attempted —
-    steal and the probe measure the confounder independently of what
-    the pair measured, so this cannot select for high efficiency,
-    only for clean measurement conditions. Alongside the best pair the artifact
-    reports the MEDIAN pair efficiency, which is robust to the
-    one-sided steal contamination without the max's selection
-    optimism; read them together.
-    """
-    acc = {c: {"times": [], "phases": [], "rows": 0, "expectations": 0}
-           for c in levels}
-    lo, hi = levels[0], levels[-1]
-    ratio = hi / lo
-    pairs = []
-
-    rounds = 0
-    t_start = time.time()
-    probe_best = _load_probe_best()
-
-    def pooled_best():
-        # ONE reference for quietness everywhere: min over the
-        # calibration sidecar, the STORED pairs' probes, and this
-        # run's probes — identical to what main()'s headline gate
-        # computes, so the stopping rule can never skip the wait on
-        # a stored pair the final gate will then reject (a fresh
-        # probe finding a new lowest tightens BOTH consistently).
-        return min(
-            [probe_best]
-            + [p["probe_s"] for p in stored_pairs]
-            + [p["probe_s"] for p in pairs]
-        )
-
-    def any_quiet_round():
-        # quiet = low hypervisor steal AND the direct core probe ran
-        # within 20% of the pooled best (confounder measurements
-        # only, never suite timings). Stored pairs count: the
-        # extension exists to secure at least one quiet pair for the
-        # artifact, not to re-measure what prior invocations banked —
-        # and they are judged by the SAME predicate and reference as
-        # the final headline gate.
-        best = pooled_best()
-        return any(
-            _is_quiet(p, best)
-            for p in list(stored_pairs) + pairs
-        )
-
-    while rounds == 0 or (
-        # A minimum of TWO rounds always runs — a one-pair artifact
-        # cannot show window-to-window spread. Beyond that, rounds
-        # start only while inside the budget (overshoot is bounded by
-        # one round; a guard that also subtracted the previous round
-        # duration starved slow windows down to a single pair). The
-        # quiet-window extension (up to 4 extra rounds) is gated on
-        # the independently-measured CONFOUNDER (hypervisor steal),
-        # never on the observed efficiencies — the HEADLINE is
-        # computed over quiet pairs only, so a quiet pair must exist
-        # for the artifact to carry a gated number.
-        rounds < 2
-        or (
-            time.time() - t_start < SCALE_BUDGET_S
-            and (
-                rounds < 2 * max(repeats, 2)
-                or (
-                    rounds < 2 * max(repeats, 2) + 6
-                    and not any_quiet_round()
-                )
-            )
-        )
-    ):
-        steal0 = _read_steal()
-        # until SOME quiet pair exists (here or in the store), wait
-        # for a quiet window instead of measuring into noise the
-        # gates will reject — sleep costs budget, contaminated
-        # measurements cost budget AND yield nothing (r1-r3 lesson)
-        if not any_quiet_round():
-            probe_pre = _wait_for_quiet_window(
-                t_start + SCALE_BUDGET_S,
-                pooled_best(),
-                max_wait_s=float(
-                    os.environ.get("SPARK_GRAFT_QUIET_WAIT_S", "150")
-                ),
-            )
-        else:
-            probe_pre = _robust_probe()
-        round_min = {}
-        for c in levels:
-            out = _suite_run_subprocess(c)
-            acc[c]["times"].extend(out["times"])
-            acc[c]["phases"].extend(out["phases"])
-            acc[c]["rows"] = out["rows"]
-            acc[c]["expectations"] = out["expectations"]
-            acc[c]["compile_s"] = out.get("compile_s")
-            round_min[c] = min(out["times"])
-        # probe again after the timed runs: a neighbor arriving
-        # mid-round shows in whichever probe it overlaps; the pair's
-        # probe_s is the WORSE of the two. 3 s settle first — the
-        # post-probe otherwise measures this bench's own teardown
-        # transient, not the neighbors (see _robust_probe)
-        probe_post = _robust_probe(settle_s=3.0)
-        pairs.append(
-            {
-                "lo_sec": round(round_min[lo], 2),
-                "hi_sec": round(round_min[hi], 2),
-                "efficiency": round(
-                    round_min[lo] / (ratio * round_min[hi]), 3
-                ),
-                "steal_jiffies": _read_steal() - steal0,
-                "probe_s": round(max(probe_pre, probe_post), 3),
-                "measured_at": round(time.time(), 1),
-            }
-        )
-        rounds += 1
-    results = {"pairs": pairs}
-    # the returned reference is the POOLED best (calibration + stored
-    # + fresh) — main()'s headline gate and this loop's stopping rule
-    # therefore judge every pair against the same number
-    best = pooled_best()
-    if best < probe_best:
-        _save_probe_best(best)
-    results["probe_best_s"] = round(best, 4)
-    for c in levels:
-        times = acc[c]["times"]
-        best_i = min(range(len(times)), key=lambda i: times[i])
-        dt = times[best_i]
-        results[c] = {
-            "cores": c,
-            "rows": acc[c]["rows"],
-            "sec": round(dt, 2),
-            "all_runs_sec": [round(t, 2) for t in times],
-            "rows_per_sec": round(acc[c]["rows"] / dt, 1),
-            "expectations": acc[c]["expectations"],
-            "compile_s": acc[c]["compile_s"],
-            "phase_times": acc[c]["phases"][best_i],
-        }
-    return results
-
-
 def main() -> None:
     import __spark_entry__ as entry
     from great_expectations_spark.data.images import write_images_table
 
-    qs = entry.queries()
-
-    # -- materialize the image table once (deterministic, seed=42) ----
     spark = make_session(CPUS)
     if not os.path.isdir(IMG_PATH):
         write_images_table(spark, IMG_PATH, n_rows=IMG_ROWS, seed=42)
-
-    # -- headline operator queries at full parallelism ----------------
-    # each query runs twice: first pass warms codegen/JIT + parquet
-    # footer cache, the second (reported) measures steady-state.
-    # QUIET-GATED like the scaling pairs (r4 verdict item 3): a timed
-    # run whose window saw hypervisor steal is retried (budget
-    # permitting), and quiet minima are POOLED across invocations in
-    # a per-query sidecar store under the same engine fingerprint —
-    # the r4 artifact recorded the LSH family 2x slow purely because
-    # the driver's hour was contaminated (2,529 steal jiffies).
-    per_query = {}
-    per_query_meta = {}
-    q_budget = float(os.environ.get("SPARK_GRAFT_QUERY_BUDGET_S", "240"))
-    # the three LSH queries share ONE materialized signature frame —
-    # the pipeline path (their docstrings) instead of tripling the
-    # signature projection inside the bench
-    os.environ["SPARK_GRAFT_SHARE_SIGS"] = "1"
-    t_q = time.time()
-    for name in HEADLINE:
-        fn = qs[name]
-        if time.time() - t_q < q_budget:
-            fn(spark, SF_DIR).count()  # warm codegen/footers
-        attempts = []  # (quiet, seconds)
-        for _ in range(3):
-            s0 = _read_steal()
-            t0 = time.time()
-            fn(spark, SF_DIR).count()
-            dt = time.time() - t0
-            quiet_q = (_read_steal() - s0) <= _query_steal_cap(dt)
-            attempts.append((quiet_q, dt))
-            # retries only for non-quiet windows, only inside budget
-            if quiet_q or time.time() - t_q > q_budget:
-                break
-        quiet_dts = [d for q, d in attempts if q]
-        best_dt = min(quiet_dts) if quiet_dts else min(
-            d for _, d in attempts
-        )
-        per_query[name] = round(best_dt, 3)
-        per_query_meta[name] = {"sec": round(best_dt, 3),
-                                "quiet": bool(quiet_dts)}
-    from great_expectations_spark.suite_queries import clear_sigs_cache
-
-    clear_sigs_cache()
-    os.environ.pop("SPARK_GRAFT_SHARE_SIGS", None)
+    queries = {}
+    for name, fn in entry.queries().items():
+        fn(spark, SF_DIR).count()  # warm codegen and parquet footers
+        t0 = time.perf_counter()
+        fn(spark, SF_DIR).count()
+        queries[name] = round(time.perf_counter() - t0, 3)
     spark.stop()
-    # pool with stored quiet minima (same fingerprint = same code):
-    # report each query's best QUIET time seen under this engine
-    per_query, q_quiet_frac = _merge_query_store(
-        _engine_fingerprint(), per_query_meta
-    )
 
-    # -- scaling: same suite, same table, N vs 4N threads -------------
-    n_lo, n_hi = SCALE_LEVELS
-    fingerprint = _engine_fingerprint()
-    stored = _load_stored_pairs(fingerprint)
-    steal0 = _read_steal()
-    scal = run_scaling([n_lo, n_hi], SCALE_REPEATS, stored_pairs=stored)
-    steal_jiffies = _read_steal() - steal0
-    low, high = scal[n_lo], scal[n_hi]
-    fresh_pairs = scal["pairs"]
-    _append_stored_pairs(fingerprint, fresh_pairs)
-    # headline basis: every pair measured under the CURRENT engine
-    # fingerprint — this invocation's plus the sidecar store's (same
-    # suite, same table spec, same code; see _load_stored_pairs)
-    pairs = stored + fresh_pairs
-    # Contaminated-window rejection, SYMMETRIC and outcome-
-    # independent: a pair is rejected when either of its samples is
-    # >25% slower than that level's best across rounds (direct time
-    # evidence the window was contaminated — observed 19.9s lo vs
-    # 15.5s quiet inflating a pair to 0.99, and 6.6s hi vs 4.7s
-    # deflating one to 0.59), or when its efficiency exceeds ~1,
-    # which is physically impossible here (no super-linear mechanism
-    # exists between the levels: identical splits, same GC budget).
-    # Trimming BOTH tails by the same time rule cannot bias toward
-    # the 0.8 target; best and median are computed over clean pairs.
-    min_lo = min(pr["lo_sec"] for pr in pairs)
-    min_hi = min(pr["hi_sec"] for pr in pairs)
-    probe_best = scal["probe_best_s"]
-    for pr in pairs:
-        pr["rejected_lo_contaminated"] = (
-            pr["efficiency"] > 1.02 or pr["lo_sec"] > 1.25 * min_lo
-        )
-        pr["rejected_hi_contaminated"] = pr["hi_sec"] > 1.25 * min_hi
-        # quiet = low hypervisor steal AND direct core-probe within
-        # 20% of the best window calibrated on this box (sidecar
-        # .bench_probe_calibration.json) — steal alone under-reports
-        # same-host neighbor load, which skews the pair one-sidedly
-        # (a 2-thread run shrugs it off, an 8-thread run eats it)
-        pr["quiet_window"] = _is_quiet(pr, probe_best)
-    valid = [
-        pr
-        for pr in pairs
-        if not (
-            pr["rejected_lo_contaminated"]
-            or pr["rejected_hi_contaminated"]
-        )
-    ]
-    # The HEADLINE basis is quiet-window AND clean pairs: a pair
-    # measured under >=500 steal jiffies carries hypervisor noise no
-    # relative-time rule can fully reject (r02's artifact headlined a
-    # 902-steal pair at 0.748 while quiet windows measured 0.85-0.91).
-    # If no quiet pair exists even after the extension rounds, fall
-    # back to clean pairs and say so via quiet_window_headline=false.
-    quiet = [pr for pr in valid if pr["quiet_window"]]
-    basis = quiet or valid or pairs
-
-    def median_of(prs):
-        effs = sorted(pr["efficiency"] for pr in prs)
-        mid = len(effs) // 2
-        return effs[mid] if len(effs) % 2 else round(
-            (effs[mid - 1] + effs[mid]) / 2, 3
-        )
-
-    best_pair = max(basis, key=lambda pr: pr["efficiency"])
-    # headline = MEDIAN of the quiet clean pairs (robust, not the
-    # upward-biased max order statistic); the best pair is reported
-    # under its own explicit key
-    median_eff = median_of(basis)
-    # cross-window ratio of independent per-level minima, kept for
-    # transparency next to the controlled same-window pair estimate
-    min_level_eff = low["sec"] / ((n_hi / n_lo) * high["sec"])
-
-    total = round(sum(per_query.values()) + low["sec"] + high["sec"], 2)
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
-    # two artifacts: a COMPACT one-line headline JSON on stdout (the
-    # driver's tail capture must parse it — r02's line embedded every
-    # per-run array and got truncated into "parsed": null) and the
-    # full detail (all runs, phase times, every pair) in
-    # BENCH_DETAILS.json next to this script
-    detail = {
-        f"local{n_lo}": low,
-        f"local{n_hi}": high,
-        "pairs": pairs,
-        "scale_levels": list(SCALE_LEVELS),
-        "probe_best_s": probe_best,
-        # full per-query timings + the scaling diagnostics that used
-        # to bloat the stdout headline past the driver's 2000-char
-        # tail capture (r02 AND r04 artifacts were "parsed": null for
-        # exactly this; r4 verdict item 2)
-        "queries": per_query,
-        "queries_quiet_fraction": q_quiet_frac,
-        "headline_max_steal_jiffies": max(
-            pr["steal_jiffies"] for pr in basis
-        ),
-        "headline_max_probe_ratio": round(
-            max(pr["probe_s"] for pr in basis) / probe_best, 3
-        ),
-        "scaling_efficiency_cross_window_min": round(min_level_eff, 3),
-        "rounds_total": len(fresh_pairs),
-        "pairs_considered": len(pairs),
-        "host_steal_jiffies_during_measurement": steal_jiffies,
-    }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_DETAILS.json"),
-        "w",
-    ) as f:
-        json.dump(detail, f, indent=1)
-    slim = lambda lv: {  # noqa: E731
-        k: lv[k] for k in ("cores", "rows", "sec", "rows_per_sec")
-    }
-    # stdout headline must survive the driver's 2000-char tail
-    # capture (r02/r04 lesson): only the slowest queries inline, the
-    # full per-query map in BENCH_DETAILS.json, aggregates up front
-    slowest = dict(
-        sorted(per_query.items(), key=lambda kv: -kv[1])[:8]
-    )
-    out = {
-        "metric": "suite+operator bench total wall time",
-        "value": total,
-        "unit": "sec",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "queries": slowest,
-        "queries_n": len(per_query),
-        "queries_sec_total": round(sum(per_query.values()), 2),
-        "queries_quiet_fraction": q_quiet_frac,
-        "queries_detail": "BENCH_DETAILS.json",
+    lo, hi = SCALE_LEVELS
+    pairs = []
+    for _ in range(SCALE_REPEATS):
+        runs = {c: _suite_run_subprocess(c) for c in SCALE_LEVELS}
+        t_lo, t_hi = (min(runs[c]["times"]) for c in SCALE_LEVELS)
+        pairs.append({
+            "lo_sec": round(t_lo, 3),
+            "hi_sec": round(t_hi, 3),
+            "efficiency": round(t_lo / ((hi / lo) * t_hi), 3),
+        })
+    rows = runs[hi]["rows"]
+    best = {lo: min(p["lo_sec"] for p in pairs),
+            hi: min(p["hi_sec"] for p in pairs)}
+    efficiency = round(statistics.median(p["efficiency"] for p in pairs), 3)
+    print(json.dumps({
+        "sf_dir": SF_DIR,
+        "queries": queries,
+        "queries_sec_total": round(sum(queries.values()), 2),
         "image_suite": {
-            "rows": high["rows"],
-            "expectations": high["expectations"],
-            f"local{n_lo}": slim(low),
-            f"local{n_hi}": slim(high),
-            "speedup_%d_to_%d" % (n_lo, n_hi): round(
-                (n_hi / n_lo) * median_eff, 3
-            ),
-            "scaling_efficiency": median_eff,
-            "scaling_efficiency_best_pair": round(
-                best_pair["efficiency"], 3
-            ),
-            "quiet_window_headline": bool(quiet),
-            "headline_pairs_used": len(basis),
-            "headline_pairs_from_store": sum(
-                1 for pr in basis if pr.get("from_store")
-            ),
-            "pairs_this_run": len(fresh_pairs),
-            "probe_best_s": probe_best,
+            "rows": rows,
+            "expectations": runs[hi]["expectations"],
+            **{
+                f"local{c}": {
+                    "sec": round(best[c], 2),
+                    "rows_per_sec": round(rows / best[c], 1),
+                }
+                for c in SCALE_LEVELS
+            },
+            "pairs": pairs,
+            "scaling_efficiency": efficiency,
         },
-    }
-    line = json.dumps(out)
-    if len(line) > 1900:  # belt-and-braces: never exceed the capture
-        out.pop("queries", None)
-        line = json.dumps(out)
-    print(line)
+    }))
 
 
 if __name__ == "__main__":
-    import sys as _sys
-
-    if len(_sys.argv) >= 3 and _sys.argv[1] == "--suite-run":
-        # multiple timed samples per fresh JVM: the session+full-
-        # warmup cost is paid once per spawn, so extra samples are
-        # nearly free. The LOW level gets one more — its samples are
-        # 3x longer, so a mid-spawn weather change contaminates its
-        # min more easily (observed 13.6s..23.5s within one bench)
-        cores = int(_sys.argv[2])
-        if len(_sys.argv) >= 4:
-            reps = int(_sys.argv[3])
+    if len(sys.argv) >= 3 and sys.argv[1] == "--suite-run":
+        # the low level gets one more sample: its runs are 4x longer,
+        # so a mid-run slowdown contaminates its minimum more easily
+        cores = int(sys.argv[2])
+        if len(sys.argv) >= 4:
+            reps = int(sys.argv[3])
         else:
             reps = 3 if cores == min(SCALE_LEVELS) else 2
         print(json.dumps(_suite_runs_at(cores, reps)))
-    elif len(_sys.argv) >= 2 and _sys.argv[1] == "--scale-only":
-        # accumulate scaling pairs into the sidecar store without the
-        # per-query phase: run opportunistically during a session so
-        # the full driver bench can headline quiet pairs even if ITS
-        # hour is noisy. Same measurement path as main(), same
-        # fingerprint guard; prints a one-line summary.
-        import __spark_entry__  # noqa: F401 - fail fast on import errors
-        from great_expectations_spark.data.images import (
-            write_images_table,
-        )
-
-        if not os.path.isdir(IMG_PATH):
-            spark = make_session(CPUS)
-            write_images_table(spark, IMG_PATH, n_rows=IMG_ROWS, seed=42)
-            spark.stop()
-        fp = _engine_fingerprint()
-        prior = _load_stored_pairs(fp)
-        # same measurement path as main(): banked quiet pairs disable
-        # the wait/extension machinery, so accumulation runs in hours
-        # the store already covered just bank cheap extra pairs
-        scal = run_scaling(
-            list(SCALE_LEVELS), SCALE_REPEATS, stored_pairs=prior
-        )
-        total_stored = _append_stored_pairs(fp, scal["pairs"])
-        print(json.dumps({
-            "mode": "scale-only",
-            "fingerprint": fp,
-            "pairs_added": len(scal["pairs"]),
-            "pairs_prior": len(prior),
-            "pairs_total_stored": total_stored,
-            "pairs": scal["pairs"],
-            "probe_best_s": scal["probe_best_s"],
-        }))
     else:
         main()

@@ -50,6 +50,17 @@ def get_mostly(kwargs: dict) -> float:
     return float(m)
 
 
+def between_kwargs(cfg) -> dict:
+    """The *_to_be_between bounds of `cfg` as keyword arguments of
+    validate_metric_value_between."""
+    return {
+        "min_value": cfg.kwargs.get("min_value"),
+        "max_value": cfg.kwargs.get("max_value"),
+        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
+        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
+    }
+
+
 # ignore_row_if → rows-considered filter.
 # Pair semantics: sparkdf_execution_engine.py:503-540; multicolumn: :542-563.
 def pair_consider(col_a: str, col_b: str, ignore_row_if: str) -> Column:

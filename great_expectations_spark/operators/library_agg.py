@@ -23,20 +23,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as sparktypes
 
 from .checks import AggCheck, JobCheck, MetricCache, SchemaCheck
+from .common import between_kwargs
 from ..core.result import validate_metric_value_between
 
 
-def _between_kwargs(cfg) -> dict:
-    return {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
-
-
 def _metric_between_outcome(value, cfg):
-    out = validate_metric_value_between(value, **_between_kwargs(cfg))
+    out = validate_metric_value_between(value, **between_kwargs(cfg))
     return out["success"], out["result"]
 
 
@@ -525,7 +517,7 @@ def compile_columns_match_set(index, cfg, schema_unused):
 
 
 def compile_column_count_between(index, cfg, schema_unused):
-    kw = _between_kwargs(cfg)
+    kw = between_kwargs(cfg)
 
     def evaluate(schema):
         out = validate_metric_value_between(len(schema.fields), **kw)

@@ -31,6 +31,7 @@ from ..core.config import ExpectationConfiguration
 from ..functions.minijsonschema import validates as _json_schema_validates
 from .checks import MapCheck
 from .common import (
+    between_kwargs,
     decode_pair,
     decode_single,
     get_mostly,
@@ -161,8 +162,7 @@ def _between_expected(
 
 def compile_be_between(index, cfg, schema) -> MapCheck:
     column = cfg.kwargs["column"]
-    min_value = cfg.kwargs.get("min_value")
-    max_value = cfg.kwargs.get("max_value")
+    kw = between_kwargs(cfg)
     # parse_strings_as_datetimes (and plain string bounds against a
     # temporal column): bounds become datetime literals so the JVM
     # comparison is temporal, not a failed string cast
@@ -173,17 +173,10 @@ def compile_be_between(index, cfg, schema) -> MapCheck:
     if cfg.kwargs.get("parse_strings_as_datetimes") or is_temporal:
         from dateutil.parser import parse as _parse_dt
 
-        if isinstance(min_value, str):
-            min_value = _parse_dt(min_value)
-        if isinstance(max_value, str):
-            max_value = _parse_dt(max_value)
-    expected = _between_expected(
-        F.col(column),
-        min_value,
-        max_value,
-        bool(cfg.kwargs.get("strict_min", False)),
-        bool(cfg.kwargs.get("strict_max", False)),
-    )
+        for k in ("min_value", "max_value"):
+            if isinstance(kw[k], str):
+                kw[k] = _parse_dt(kw[k])
+    expected = _between_expected(F.col(column), **kw)
     return _column_map_check(index, cfg, ~expected, column)
 
 
@@ -200,11 +193,7 @@ def compile_value_lengths_equal(index, cfg, schema) -> MapCheck:
 def compile_value_lengths_between(index, cfg, schema) -> MapCheck:
     column = cfg.kwargs["column"]
     expected = _between_expected(
-        F.length(F.col(column)),
-        cfg.kwargs.get("min_value"),
-        cfg.kwargs.get("max_value"),
-        bool(cfg.kwargs.get("strict_min", False)),
-        bool(cfg.kwargs.get("strict_max", False)),
+        F.length(F.col(column)), **between_kwargs(cfg)
     )
     return _column_map_check(index, cfg, ~expected, column)
 

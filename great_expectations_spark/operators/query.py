@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..core.result import validate_metric_value_between
 from .checks import JobCheck, MetricCache
+from .common import between_kwargs
 
 
 def _run_query(df, query: str, template_dict: Optional[dict] = None):
@@ -64,12 +65,7 @@ def compile_query_row_count_between(index, cfg, schema) -> JobCheck:
     `query` (templated with {active_batch}) within bounds."""
     query = cfg.kwargs["query"]
     template_dict = cfg.kwargs.get("template_dict")
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         n = _run_query(df, query, template_dict).count()
@@ -84,12 +80,7 @@ def compile_query_single_value_between(index, cfg, schema) -> JobCheck:
     column of the query result within bounds."""
     query = cfg.kwargs["query"]
     template_dict = cfg.kwargs.get("template_dict")
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         row = _run_query(df, query, template_dict).first()
@@ -143,12 +134,7 @@ def compile_query_template_values_between(index, cfg, schema) -> JobCheck:
     query = cfg.kwargs["query"]
     template_dict = cfg.kwargs.get("template_dict")
     result_limit = int(cfg.kwargs.get("result_limit", 200))
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         res = _run_query(df, query, template_dict)

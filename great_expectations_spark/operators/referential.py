@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..core.config import parse_result_format, result_format_at_least
 from ..core.result import format_map_output, mostly_success
 from .checks import JobCheck, MetricCache
-from .common import get_mostly
+from .common import between_kwargs, get_mostly
 
 
 def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
@@ -202,13 +202,7 @@ def compile_distinct_overlap_between(index, cfg, schema) -> JobCheck:
             value = (
                 est["overlap"] / est["batch"] if est["batch"] else None
             )
-        out = validate_metric_value_between(
-            value,
-            min_value=cfg.kwargs.get("min_value"),
-            max_value=cfg.kwargs.get("max_value"),
-            strict_min=bool(cfg.kwargs.get("strict_min", False)),
-            strict_max=bool(cfg.kwargs.get("strict_max", False)),
-        )
+        out = validate_metric_value_between(value, **between_kwargs(cfg))
         out["result"]["details"] = {
             "overlap_count": est["overlap"],
             "union_count": est["union"],
@@ -243,12 +237,7 @@ def compile_split_leakage_rate(index, cfg, schema) -> JobCheck:
 
     column = cfg.kwargs["column"]
     eval_condition = cfg.kwargs["eval_condition"]
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         from ..suite_queries import split_leakage_counts

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..core.config import parse_result_format, result_format_at_least
 from ..core.result import format_map_output, mostly_success
 from .checks import JobCheck, MetricCache
-from .common import get_mostly, multi_consider
+from .common import between_kwargs, get_mostly, multi_consider
 
 
 def _dup_groups(df, key_cols: List[str], consider, cap: int):
@@ -205,12 +205,7 @@ def compile_phash_near_duplicate_rate(index, cfg, schema) -> JobCheck:
     column = cfg.kwargs["column"]
     max_hamming = int(cfg.kwargs.get("max_hamming", _PHASH_HAMMING_MAX))
     bucket_cap = int(cfg.kwargs.get("bucket_cap", _LSH_BUCKET_CAP))
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         from ..suite_queries import phash_near_pairs
@@ -272,12 +267,7 @@ def compile_duplicate_segment_rate(index, cfg, schema) -> JobCheck:
     seg_len = int(cfg.kwargs.get("segment_tokens", 8))
     if seg_len < 1:
         raise ValueError("segment_tokens must be >= 1")
-    kw = {
-        "min_value": cfg.kwargs.get("min_value"),
-        "max_value": cfg.kwargs.get("max_value"),
-        "strict_min": bool(cfg.kwargs.get("strict_min", False)),
-        "strict_max": bool(cfg.kwargs.get("strict_max", False)),
-    }
+    kw = between_kwargs(cfg)
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
         from ..suite_queries import segment_dup_counts, segment_instances

@@ -17,7 +17,6 @@ instead of all-pairs joins.
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -696,55 +695,14 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Opt-in stage sharing: the LSH family is a PIPELINE — signatures
-# feed pairs/hot_buckets, candidate pairs feed the verification
-# kernel and clustering, and the cluster table feeds the per-source
-# report. A bench or production run that executes several of these
-# together materializes each shared stage ONCE (the "materialized
-# once" path the docstrings reference); standalone oracle runs keep
-# the default recompute so every query stays self-contained.
-_SHARE_CACHE: Dict[str, DataFrame] = {}
-
-
-def _shared_stage(stage: str, spark: SparkSession, sf_dir: str, build):
-    if os.environ.get("SPARK_GRAFT_SHARE_SIGS") != "1":
-        return build()
-    # applicationId, not id(spark): a recycled session address must
-    # not resurrect DataFrames bound to a stopped SparkContext
-    key = f"{stage}|{spark.sparkContext.applicationId}|{sf_dir}"
-    df = _SHARE_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _SHARE_CACHE[key] = df
-    return df
-
-
-def _sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shared_stage(
-        "sigs", spark, sf_dir,
-        lambda: dedup_minhash_signatures(spark, sf_dir),
-    )
-
-
 def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, band_idx, bv) rows of the shared MinHash signatures."""
-    return _sigs(spark, sf_dir).select(
+    return dedup_minhash_signatures(spark, sf_dir).select(
         "doc_id",
         F.posexplode(
             F.array(*[F.col(f"band{b}") for b in range(_BANDS)])
         ).alias("band_idx", "bv"),
     )
-
-
-def clear_sigs_cache() -> None:
-    """Unpersist every shared pipeline stage (sigs, candidate pairs,
-    cluster table)."""
-    for df in _SHARE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 - session may be gone
-            pass
-    _SHARE_CACHE.clear()
 
 
 # Hot-bucket cap: a web corpus has mega-buckets (boilerplate, empty
@@ -956,10 +914,7 @@ def dedup_minhash_hot_buckets(
     buckets exist, how many exceeded _LSH_BUCKET_CAP (and thus
     switched to star pairs in dedup_minhash_pairs), and the largest
     bucket. No silent caps — this is the query an operator runs to
-    see exactly what the cap did to a corpus. Standalone runs
-    recompute the signature projection (cheap, self-contained); with
-    SPARK_GRAFT_SHARE_SIGS=1 (the bench / pipeline path) signatures
-    are materialized once and shared with the pair query."""
+    see exactly what the cap did to a corpus."""
     return _band_bucket_stats(_minhash_bands(spark, sf_dir))
 
 
@@ -1018,10 +973,7 @@ def lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant cost — scales with O(candidate docs), not corpus size
     (measured 2x faster at sf0.1 where candidates touch ~7% of
     docs; the gap widens with corpus size)."""
-    cand = _shared_stage(
-        "cand_pairs", spark, sf_dir,
-        lambda: dedup_minhash_pairs(spark, sf_dir),
-    )
+    cand = dedup_minhash_pairs(spark, sf_dir)
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))
@@ -1096,16 +1048,12 @@ def lsh_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: identical to lsh_verified_pairs — the kernel
     touches ONLY candidate pairs, shingle sets are built only for
-    candidate-involved docs (semi-join first), and in pipeline mode
-    both verification queries share the one materialized candidate
-    stage. MinHash LSH's collision probability is monotone in
-    Jaccard, not containment, so extreme-skew containment pairs can
-    evade the bands; the phrase-level backstop for those is
+    candidate-involved docs (semi-join first). MinHash LSH's
+    collision probability is monotone in Jaccard, not containment, so
+    extreme-skew containment pairs can evade the bands; the
+    phrase-level backstop for those is
     ngram_contamination's broadcast gram join."""
-    cand = _shared_stage(
-        "cand_pairs", spark, sf_dir,
-        lambda: dedup_minhash_pairs(spark, sf_dir),
-    )
+    cand = dedup_minhash_pairs(spark, sf_dir)
     ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))
@@ -1426,10 +1374,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is O(candidate docs). The corpus then LEFT-joins the small
     converged label table once (AQE broadcasts it), coalescing
     singletons to (own id, keep, size 1)."""
-    cand = _shared_stage(
-        "cand_pairs", spark, sf_dir,
-        lambda: dedup_minhash_pairs(spark, sf_dir),
-    )
+    cand = dedup_minhash_pairs(spark, sf_dir)
     return _cluster_keep_table(spark, sf_dir, cand)
 
 
@@ -1486,10 +1431,7 @@ def dedup_ratio_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive canonical-keeper selection. Joins the keep/drop table
     (dedup_clusters) back to document metadata on slim doc_id keys —
     the downstream-consumption shape of the clustering output."""
-    cl = _shared_stage(
-        "clusters", spark, sf_dir,
-        lambda: dedup_clusters(spark, sf_dir),
-    )
+    cl = dedup_clusters(spark, sf_dir)
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     j = d.join(cl, "doc_id")
     kept = F.sum(F.when(F.col("keep"), 1).otherwise(0))
@@ -1816,10 +1758,7 @@ def phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, so an under-merged graph fails parity loudly). The star
     pairs a capped boilerplate bucket emits preserve connectivity, so
     the mega-group still collapses to one keeper."""
-    cand = _shared_stage(
-        "phash_pairs", spark, sf_dir,
-        lambda: phash_hamming_neardup(spark, sf_dir),
-    ).select("doc_a", "doc_b")
+    cand = phash_hamming_neardup(spark, sf_dir).select("doc_a", "doc_b")
     return _cluster_keep_table(spark, sf_dir, cand)
 
 
@@ -2610,16 +2549,9 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the denominator agg); localCheckpoint it so the brute-force
     # corpus crossJoin executes once, not once per branch (the same
     # single-execution pattern as _cluster_keep_table). It is tiny:
-    # queries x k rows. In pipeline mode every audited pipeline comes
-    # through _shared_stage — an accounting query must never
-    # recompute the pipelines it audits (the hot_buckets/band_stats
-    # convention); standalone oracle runs keep the self-contained
-    # recompute.
+    # queries x k rows.
     exact3 = (
-        _shared_stage(
-            "emb_topk", spark, sf_dir,
-            lambda: embedding_cosine_topk(spark, sf_dir),
-        )
+        embedding_cosine_topk(spark, sf_dir)
         .where(F.col("rank") <= 3)
         .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
         .localCheckpoint()
@@ -2631,10 +2563,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     un = None
     for name, fn in methods:
-        d = _shared_stage(
-            f"ann_{name}", spark, sf_dir,
-            lambda fn=fn: fn(spark, sf_dir),
-        ).select(
+        d = fn(spark, sf_dir).select(
             F.lit(name).alias("method"), "query_id", "neighbor_id"
         )
         un = d if un is None else un.unionByName(d)
@@ -3778,14 +3707,8 @@ _CROSSMODAL_CAND_DUCK = f"""
 
 
 def _crossmodal_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = _shared_stage(
-        "verified_pairs", spark, sf_dir,
-        lambda: lsh_verified_pairs(spark, sf_dir),
-    ).select("doc_a", "doc_b")
-    ph = _shared_stage(
-        "phash_pairs", spark, sf_dir,
-        lambda: phash_hamming_neardup(spark, sf_dir),
-    ).select("doc_a", "doc_b")
+    tx = lsh_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    ph = phash_hamming_neardup(spark, sf_dir).select("doc_a", "doc_b")
     return tx.union(ph).distinct()
 
 
@@ -3804,8 +3727,7 @@ def crossmodal_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     modality alone keeps pairs whose OTHER modality is copied.
 
     100 TB shape: both edge generators are the already-audited capped
-    LSH pipelines (shared stages in pipeline mode — the union never
-    recomputes them); the union graph is O(dups-by-either-modality)
+    LSH pipelines; the union graph is O(dups-by-either-modality)
     edges, and the clustering is the same bounded min-label
     propagation / driver union-find machinery as dedup_clusters,
     against the same exact recursive-CTE closure oracle."""
@@ -3838,18 +3760,12 @@ def crossmodal_edge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drops; image_only >> text_only on a corpus of re-captioned
     copies, the reverse on re-encoded images). Full outer join of the
     two slim edge lists (id pairs only), then one global agg."""
-    tx = _shared_stage(
-        "verified_pairs", spark, sf_dir,
-        lambda: lsh_verified_pairs(spark, sf_dir),
-    ).select("doc_a", "doc_b").distinct()
-    ph = _shared_stage(
-        "phash_pairs", spark, sf_dir,
-        lambda: phash_hamming_neardup(spark, sf_dir),
-    ).select("doc_a", "doc_b").distinct()
-    t = tx.select(
+    tx = lsh_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    ph = phash_hamming_neardup(spark, sf_dir).select("doc_a", "doc_b")
+    t = tx.distinct().select(
         F.col("doc_a").alias("ta"), F.col("doc_b").alias("tb")
     )
-    p = ph.select(
+    p = ph.distinct().select(
         F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb")
     )
     j = t.join(
@@ -4047,11 +3963,16 @@ def image_gate_exprs(
     """The image gate's rules, once: (f_side, f_aspect, f_fmt, f_cap)
     boolean Columns, true where a row FAILS the rule and NULL where
     its inputs are. Callers choose how NULL counts."""
+    # least/greatest skip NULL, so the side rules test each side: a
+    # missing side leaves them NULL instead of judging the other alone
     return (
-        F.least(w, h) < min_side,
+        (w < min_side) | (h < min_side),
         # try_divide: a zero side must fail f_side, not abort the job
         # under ANSI division
-        F.try_divide(F.greatest(w, h), F.least(w, h)) > max_aspect,
+        F.when(
+            w.isNotNull() & h.isNotNull(),
+            F.try_divide(F.greatest(w, h), F.least(w, h)) > max_aspect,
+        ),
         ~fmt.isin(*formats),
         (cap_len < caption_chars[0]) | (cap_len > caption_chars[1]),
     )
@@ -4215,12 +4136,8 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs means the threshold is too loose). Counts clusters by
     counting keepers (exactly one per cluster), so the histogram
     needs no distinct over cluster ids — one hash agg over the
-    keep/drop table, which pipeline mode shares with dedup_clusters
-    and dedup_ratio_by_source instead of recomputing."""
-    cl = _shared_stage(
-        "clusters", spark, sf_dir,
-        lambda: dedup_clusters(spark, sf_dir),
-    )
+    keep/drop table of dedup_clusters."""
+    cl = dedup_clusters(spark, sf_dir)
     return cl.groupBy("cluster_size").agg(
         F.sum(F.when(F.col("keep"), 1).otherwise(0))
         .cast("bigint")

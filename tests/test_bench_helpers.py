@@ -1,125 +1,75 @@
-"""bench.py measurement-pooling helpers: the engine fingerprint must
-be stable across invocations and sensitive to code/knob/host changes;
-the pair store must reset on fingerprint mismatch, survive concurrent
-appends (flock), and apply ONE quiet predicate everywhere. No Spark
-session needed — these are pure driver-side helpers."""
+"""bench.py stays importable without Spark, keeps the flagship suite
+perfbench imports, and its fresh-process suite run works end to end."""
 
 import json
-import multiprocessing
 import os
+import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
 
-import bench  # noqa: E402
-
-
-def _pair(eff=0.9, steal=10, probe=1.2, at=1.0):
-    return {
-        "lo_sec": 16.0,
-        "hi_sec": round(16.0 / (4 * eff), 2),
-        "efficiency": eff,
-        "steal_jiffies": steal,
-        "probe_s": probe,
-        "measured_at": at,
-    }
-
-
-def test_engine_fingerprint_stable_and_host_bound(monkeypatch):
-    fp1 = bench._engine_fingerprint()
-    fp2 = bench._engine_fingerprint()
-    assert fp1 == fp2 and len(fp1) == 16
-    # host identity is part of the fingerprint: pairs from another
-    # machine must never match
-    monkeypatch.setattr(bench, "_host_id", lambda: "other-box/64")
-    assert bench._engine_fingerprint() != fp1
+# the order perfbench/workloads.expected_results indexes
+IMAGE_SUITE_TYPES = [
+    "expect_table_columns_to_match_set",
+    "expect_column_values_to_not_be_null",
+    "expect_column_values_to_be_in_set",
+    "expect_column_values_to_be_between",
+    "expect_column_values_to_be_between",
+    "expect_column_value_lengths_to_be_between",
+    "expect_column_mean_to_be_between",
+    "expect_column_unique_value_count_to_be_between",
+    "expect_column_values_to_be_unique",
+    "expect_image_bytes_to_be_decodable",
+    "expect_image_dimensions_to_match_metadata",
+    "expect_image_format_to_match_metadata",
+    "expect_image_phash_to_match",
+]
 
 
-def test_code_digest_ignores_docs_not_code(tmp_path):
-    """Doc-only edits must not orphan banked scaling pairs: the
-    per-file digest hashes the docstring-stripped AST, so citation
-    fixes and comment passes keep the fingerprint while any code or
-    literal change rotates it."""
-    a = tmp_path / "a.py"
-    b = tmp_path / "b.py"
-    a.write_text(
-        '"""Module doc v1."""\n'
-        "def f(x):\n"
-        '    """f doc v1."""\n'
-        "    # a comment\n"
-        "    return x + 1\n"
+def test_import_starts_no_session_and_suite_matches_perfbench():
+    # a fresh interpreter: this test process may already hold a session
+    probe = (
+        "import json, bench\n"
+        "from pyspark import SparkContext\n"
+        "print(json.dumps([SparkContext._active_spark_context is None,"
+        " [c.expectation_type for c in bench.image_suite().expectations]]))"
     )
-    b.write_text(
-        '"""Module doc v2 — reworded citation."""\n'
-        "def f(x):\n"
-        '    """f doc v2."""\n'
-        "    # different comment\n"
-        "    return x + 1\n"
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True,
+        text=True, timeout=120,
     )
-    assert bench._code_digest(str(a)) == bench._code_digest(str(b))
-    b.write_text('"""Module doc v2."""\ndef f(x):\n    return x + 2\n')
-    assert bench._code_digest(str(a)) != bench._code_digest(str(b))
-    # docstring-only function body stays parseable after stripping
-    c = tmp_path / "c.py"
-    c.write_text('def g():\n    """only a doc."""\n')
-    assert isinstance(bench._code_digest(str(c)), bytes)
-    # unparseable file falls back to raw bytes, not a crash
-    d = tmp_path / "d.py"
-    d.write_text("def broken(:\n")
-    assert isinstance(bench._code_digest(str(d)), bytes)
+    assert out.returncode == 0, out.stderr[-2000:]
+    no_session, types = json.loads(out.stdout.strip().splitlines()[-1])
+    assert no_session
+    assert types == IMAGE_SUITE_TYPES
 
+    from perfbench.workloads import expected_results
 
-def test_pair_store_roundtrip_and_reset(tmp_path, monkeypatch):
-    monkeypatch.setattr(
-        bench, "_PAIR_STORE_PATH", str(tmp_path / "store.json")
+    ref = dict.fromkeys(
+        ["rows", "caption_null", "fmt_bad", "w_bad", "h_bad",
+         "caption_len_bad", "w_mean", "fmt_distinct", "dup_rows",
+         "undecodable", "dims_bad", "fmt_mismatch", "phash_bad"],
+        1,
     )
-    n = bench._append_stored_pairs("fpA", [_pair(0.9), _pair(0.85)])
-    assert n == 2
-    loaded = bench._load_stored_pairs("fpA")
-    assert len(loaded) == 2
-    assert all(p["from_store"] for p in loaded)
-    # different fingerprint -> no pairs, and appending under it
-    # resets the store (stale-code pairs can never pool)
-    assert bench._load_stored_pairs("fpB") == []
-    n = bench._append_stored_pairs("fpB", [_pair(0.8)])
-    assert n == 1
-    assert bench._load_stored_pairs("fpA") == []
+    assert len(expected_results(ref, zscore=False)) == len(types)
 
 
-def _append_worker(args):
-    store_path, i = args
-    import bench as b
+def test_suite_run_subprocess_smoke(spark):
+    from great_expectations_spark.data.images import write_images_table
 
-    b._PAIR_STORE_PATH = store_path
-    return b._append_stored_pairs("fp", [_pair(0.9, at=float(i))])
-
-
-def test_pair_store_concurrent_appends_lose_nothing(tmp_path):
-    """The documented workflow runs --scale-only alongside the full
-    bench; flock must serialize the read-modify-write so no banked
-    pair is overwritten."""
-    store = str(tmp_path / "store.json")
-    with multiprocessing.Pool(8) as pool:
-        pool.map(_append_worker, [(store, i) for i in range(8)])
-    with open(store) as f:
-        data = json.load(f)
-    assert len(data["pairs"]) == 8
-    assert {p["measured_at"] for p in data["pairs"]} == {
-        float(i) for i in range(8)
-    }
-
-
-def test_quiet_predicate_single_definition():
-    best = 1.0
-    assert bench._is_quiet(_pair(steal=499, probe=1.2), best)
-    assert not bench._is_quiet(_pair(steal=500, probe=1.2), best)
-    assert not bench._is_quiet(_pair(steal=10, probe=1.21), best)
-    # the headline pipeline, the stored-pair gate and the extension
-    # rule all route through _is_quiet — assert the PAIR predicate
-    # exists exactly once in the source. (The probe ratio appears one
-    # extra time by design: _wait_for_quiet_window gates on a LIVE
-    # probe before any pair exists.)
-    src = open(os.path.join(REPO, "bench.py")).read()
-    assert src.count('pair["steal_jiffies"] < 500') == 1
-    assert src.count("1.2 * probe_best") == 2
+    rows = 2000
+    path = f"/tmp/ges_bench_images_{rows}"  # bench.IMG_PATH at this size
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        write_images_table(spark, path, n_rows=rows, seed=42)
+    env = dict(os.environ, SPARK_GRAFT_IMG_ROWS=str(rows))
+    out = subprocess.run(
+        [sys.executable, "bench.py", "--suite-run", "2", "1"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = out.stdout.strip().splitlines()
+    assert len(lines) == 1
+    res = json.loads(lines[0])
+    assert res["rows"] == rows
+    assert res["expectations"] == 13
+    assert len(res["times"]) == 1

@@ -95,6 +95,7 @@ def test_image_gate_flags_each_rule(spark):
         ("fmt", 32, 32, "gif", "x" * 200),  # format
         ("cap", 32, 32, "webp", "x" * 10),  # caption too short
         ("nullcap", 32, 32, "webp", None),  # null caption == empty
+        ("nullw", None, 20, "png", "x" * 150),  # null side fails
     ]
     df = spark.createDataFrame(
         rows, "image_id string, w int, h int, fmt string, caption string"
@@ -109,6 +110,8 @@ def test_image_gate_flags_each_rule(spark):
     assert out["fmt"].f_fmt and not out["fmt"].keep
     assert out["cap"].f_caption and not out["cap"].keep
     assert out["nullcap"].f_caption
+    assert out["nullw"].f_min_side and out["nullw"].f_aspect
+    assert not out["nullw"].keep
 
 
 def test_image_gate_query_accounts_every_doc(spark, tmp_path):
@@ -178,6 +181,7 @@ def test_metadata_gate_expectation_strategies_agree(spark):
         ("fmt", 32, 32, "gif", "x" * 200),     # format
         ("cap", 32, 32, "webp", "x" * 10),     # caption too short
         ("nullfmt", 32, 32, None, "x" * 200),  # null metadata fails
+        ("nullw", None, 20, "png", "y" * 150),  # null side fails
     ]
     df = spark.createDataFrame(
         rows, "image_id string, w int, h int, fmt string, caption string"
@@ -194,8 +198,8 @@ def test_metadata_gate_expectation_strategies_agree(spark):
     compiled = ges.compile_suite(
         s, df.schema, spark, result_format="SUMMARY"
     ).validate(df)
-    # 5 of 7 fail the gate; mostly=0.5 -> unexpected 71% -> failure
-    assert view(oneshot) == view(compiled) == (False, 7, 5)
+    # 6 of 8 fail the gate; mostly=0.5 -> unexpected 75% -> failure
+    assert view(oneshot) == view(compiled) == (False, 8, 6)
 
 
 def test_metadata_gate_suite_never_reads_bytes(spark):
