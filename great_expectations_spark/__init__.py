@@ -5,7 +5,7 @@ Great Expectations 0.15.39 (reference: tanelk/great_expectations).
 Declarative constraint suites are compiled by a driver-side planner
 into a minimal number of Spark jobs: one fused per-partition pass for
 all per-column stats, map-condition counts and bounded violation
-samples, two-phase hash aggregation for uniqueness, and anti-joins for
+samples, one key count for uniqueness, and anti-joins for
 referential integrity. See SURVEY.md for the full design rationale.
 """
 

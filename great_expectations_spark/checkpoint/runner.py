@@ -28,7 +28,7 @@ agg (plans/single_pass.py) on the group's slice; partition pruning
 applies when the group column is the table's physical partitioning.
 Finalize merges all groups' partials (Chan variance merge et al.)
 into table-level stats, runs the global-only work ONCE (countDistinct
-leftovers, two-phase uniqueness, referential anti-joins), and emits
+leftovers, uniqueness, referential anti-joins), and emits
 the standard suite result.
 
 Incremental runs (``base_run_id=...``): the pin stores the full data
@@ -40,7 +40,7 @@ replace/overwrite snapshots. The heavy fused map/agg pass then scans
 ONLY the appended files, its partials merge with the base run's
 persisted partials (all of min/max/sum/count/mean/Chan-stddev and the
 additive map-condition counts merge exactly), and only the
-global-only finalize (exact distinct counts, two-phase uniqueness,
+global-only finalize (exact distinct counts, uniqueness,
 referential anti-joins, the deferred z-score count) re-reads the full
 table — with column pruning, a few key columns rather than every
 byte. At 100 TB with a ~1 TB daily append, the per-day validation

@@ -9,8 +9,9 @@ least one common fingerprint, while only ~2/(w+1) of all k-gram
 hashes are kept.
 
 Everything is array expressions (transform / sequence / slice /
-array_min) — no explode, no UDF, no shuffle: one projection per
-document, so fingerprinting a 10^12-doc corpus is a single scan whose
+array_min) — no explode, no UDF, no shuffle: two projections per
+document (k-gram hashes, then window minima), so fingerprinting a
+10^12-doc corpus is a single scan whose
 output (array<bigint> per doc) feeds the same bucket-join dedup
 machinery as the MinHash path (suite_queries.dedup_minhash_pairs).
 
@@ -23,7 +24,9 @@ guarantee.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -65,8 +68,17 @@ def winnow(hashes: Column, w: int = 5) -> Column:
 
 
 def winnow_fingerprints(
-    text: Column, k: int = 7, w: int = 5
-) -> Column:
-    """Winnowing fingerprints of a text column: array<bigint>,
-    sorted distinct window-minima of 16-bit k-gram hashes."""
-    return winnow(kgram_hashes(text, k), w)
+    df: DataFrame, text: str, keep: Sequence[str] = (),
+    k: int = 7, w: int = 5,
+) -> DataFrame:
+    """`keep` columns of `df` plus `fps`, the winnowing fingerprints
+    of column `text`: array<bigint>, sorted distinct window-minima of
+    16-bit k-gram hashes.
+
+    Two projections: the k-gram hashes become a column before winnow()
+    reads them. winnow() reads its argument inside the window lambda,
+    where Spark shares no subexpressions, so an inline kgram_hashes
+    would recompute every k-gram md5 for every window."""
+    return df.select(
+        *keep, kgram_hashes(F.col(text), k).alias("__kgram_h")
+    ).select(*keep, winnow(F.col("__kgram_h"), w).alias("fps"))

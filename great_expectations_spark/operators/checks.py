@@ -16,7 +16,7 @@ fuse their Spark work:
                  same single pass as mergeable partials; the rest,
                  e.g. countDistinct, into one column-pruned leftover
                  agg) and finalizes driver-side.
-- JobCheck     — needs its own Spark job(s) (two-phase uniqueness,
+- JobCheck     — needs its own Spark job(s) (uniqueness key count,
                  anti-join referential, quantiles, value_counts,
                  monotonicity with partition-boundary exchange, ...).
                  Receives a per-domain MetricCache so identical jobs
@@ -140,6 +140,9 @@ class MetricCache:
         self._memo: Dict[str, Any] = {}
         self._locks: Dict[str, Any] = {}
         self._global_lock = threading.Lock()
+        # engine plan choices of this cache's jobs (partial count,
+        # shuffle width), copied into result.meta["decisions"]
+        self.decisions: List[Dict[str, Any]] = []
 
     def _bounded_collect(self, df, what: str, col: str):
         rows = df.limit(self.max_collect_values + 1).collect()

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -48,6 +48,32 @@ def get_mostly(kwargs: dict) -> float:
         "'mostly' parameter must be between 0 and 1"
     )
     return float(m)
+
+
+def shuffle_width(df) -> Tuple[Optional[int], Optional[int]]:
+    """(input partitions, width) for an engine shuffle of `df` sized
+    to its input: the width is the input's partition count when that
+    is below spark.sql.shuffle.partitions. Spark's file-split planner
+    already sizes scan partitions to about max(defaultParallelism,
+    bytes / maxPartitionBytes), so the width follows the input's
+    bytes with no new setting.
+
+    The width is None when the input has at least that many
+    partitions, or when its plan holds an exchange (input partitions
+    are then None too): counting an adaptive input's partitions would
+    run that exchange as a job, and an explicit width is one that
+    adaptive execution never coalesces. The caller then keeps Spark's
+    own exchange at the session default.
+
+    The count plans `df` once and is cached on it (DataFrame.rdd), so
+    validating the same frame again pays nothing; a new frame pays
+    one planning of its input."""
+    default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return None, None
+    n = df.rdd.getNumPartitions()
+    return n, (max(1, n) if n < default else None)
 
 
 def between_kwargs(cfg) -> dict:

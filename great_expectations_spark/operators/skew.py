@@ -4,12 +4,14 @@ aggregation / join.
 The engine's core paths are already skew-resistant by construction —
 the single-pass suite agg is partition-local (no shuffle to skew),
 uniqueness/value-counts use two-phase hash aggregation (map-side
-partials absorb hot keys), and referential checks broadcast the dim
-side. These helpers cover the remaining cases — a grouped aggregation
-whose per-key state does NOT reduce (collect_list-style), or a
-non-broadcastable join on a skewed key (the reference has no skew
-handling at all: its window-based uniqueness shuffles every row of a
-hot key to one task, SURVEY.md §4).
+partials absorb hot keys; uniqueness drops its partial only for keys
+its previous validate saw near-unique), and referential checks
+broadcast the dim side. These helpers cover the remaining cases — a
+grouped aggregation whose per-key state does NOT reduce
+(collect_list-style), or a non-broadcastable join on a skewed key
+(the reference has no skew handling at all: its window-based
+uniqueness shuffles every row of a hot key to one task, SURVEY.md
+§4).
 
 Salting pattern: key -> (key, salt in [0, S)) splits one hot key's
 rows across S reducers; stage 2 merges the S partials per key. For

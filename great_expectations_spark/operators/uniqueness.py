@@ -1,60 +1,116 @@
-"""Two-phase hash-aggregation uniqueness checks.
+"""Uniqueness checks as one key count.
 
 The reference marks duplicates with a window count over
 ``Window.partitionBy(col)`` (column_values_unique.py:79-84,
-compound_columns_unique.py:149-155) which shuffles every row and skews
-on hot keys. We instead aggregate ``groupBy(keys).count()`` (map-side
-partial aggregation, AQE-coalesced shuffle), keep only groups with
-count > 1, and reconstruct violation values driver-side from
-(value, count) pairs — no join-back scan is needed for value lists,
-and the shuffle payload is one row per *distinct* key, not per row.
+compound_columns_unique.py:149-155), which sorts every row of each
+key and skews on hot keys. We count the column-pruned keys, keep the
+groups with count > 1, and rebuild the violation values driver-side
+from the (value, count) pairs of the smallest duplicated keys — no
+join-back scan is needed for value lists.
+
+The count runs as one of two plans, chosen per check from what its
+previous validate observed and recorded in result.meta["decisions"]
+(see _dup_groups): Spark's groupBy, whose map-side partial count
+absorbs hot keys, at the session's shuffle width; or, for keys seen
+to be near-unique, one exchange sized to the input and a count after
+it.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, List
+from typing import Any, Dict, List, Optional
 
 from pyspark.sql import functions as F
 
 from ..core.config import parse_result_format, result_format_at_least
 from ..core.result import format_map_output, mostly_success
 from .checks import JobCheck, MetricCache
-from .common import between_kwargs, get_mostly, multi_consider
+from .common import between_kwargs, get_mostly, multi_consider, shuffle_width
+
+# a check whose previous validate found at most this share of its
+# considered rows duplicated drops the map-side partial count, which
+# could then remove at most that share of the shuffled rows
+NEAR_UNIQUE_DUP_SHARE = 0.1
 
 
-def _dup_groups(df, key_cols: List[str], consider, cap: int):
-    """(values..., count) rows for groups with count > 1, plus total
-    duplicated-row count — ONE Spark job: groupBy shuffle, then a
-    per-shuffle-partition sample (slice(collect_list)) merged with
-    the totals in a final tiny agg; the shuffle never re-executes
-    (the old two-action form re-ran the groupBy for the sample).
-    EMITTED sample is O(cap x shuffle partitions); the in-scan
-    collect_list buffer is bounded by the duplicate groups in one
-    shuffle partition (not by cap) — acceptable because dup groups
-    are a post-aggregation set, already far smaller than the input,
-    and shuffle partition sizing keeps each partition's share in
-    memory (see single_pass.py module docstring for the general
-    caveat)."""
+def dup_groups_frame(
+    base, key_cols: List[str], cap: int, width: Optional[int] = None
+):
+    """One row (__total, __sample) over the considered rows `base`:
+    the duplicated-row count, and the `cap` smallest duplicated keys
+    as struct(keys..., __cnt) in key order.
+
+    With no `width`, groupBy(keys) counts: a map-side partial count,
+    then Spark's exchange at spark.sql.shuffle.partitions, which
+    adaptive execution coalesces. With a `width`, the column-pruned
+    keys cross repartition(width, *keys) and are counted after it;
+    Spark then places the whole count after the exchange, so there
+    is no map-side partial.
+
+    Each reduce partition sorts its duplicated groups and offers its
+    first `cap` (row position after sortWithinPartitions) to the
+    final collect_list, so the aggregation buffer holds at most `cap`
+    structs per partition; the final array_sort + slice merges the
+    partitions. The sample thus depends on the data alone, not on
+    the plan, the width or AQE. Both sorts run in Spark, because the
+    driver cannot order compound keys that hold NULL fields (Spark
+    puts them first)."""
+    keys = [F.col(c) for c in key_cols]
+    pruned = base.select(*keys)
+    if width is not None:
+        pruned = pruned.repartition(width, *keys)
+    dups = (
+        pruned.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .where(F.col("__cnt") > 1)
+        .sortWithinPartitions(*keys)
+        .withColumn(
+            "__pos",
+            F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1),
+        )
+    )
+    first = F.when(F.col("__pos") < cap, F.struct(*keys, F.col("__cnt")))
+    return dups.agg(
+        F.sum("__cnt").alias("__total"),
+        F.slice(F.array_sort(F.collect_list(first)), 1, cap).alias(
+            "__sample"
+        ),
+    )
+
+
+def _dup_groups(
+    df, key_cols: List[str], consider, cap: int, cache,
+    dup_share: Optional[float],
+):
+    """(duplicated-row count, sample) of dup_groups_frame, collected in
+    one query; the plan choice is appended to `cache.decisions`.
+
+    `dup_share` is the share of considered rows that this check's
+    previous validate found duplicated (None on its first). Spark
+    plans groupBy's exchange at spark.sql.shuffle.partitions, and a
+    query cannot set its own; near-unique keys fill every one of its
+    partitions on every map task, which costs more than the count
+    itself on small inputs. So when the previous validate saw
+    near-unique keys (dup_share <= NEAR_UNIQUE_DUP_SHARE) and the
+    input is narrower than the session default (common.shuffle_width),
+    the keys cross one exchange at the input's width, with no partial
+    count: it could have removed at most that share of the rows.
+    Otherwise — a first validate, a hot or low-cardinality key, an
+    input whose plan holds an exchange — groupBy keeps its partial
+    count, which absorbs hot keys map-side."""
+    n_in = width = None
+    if dup_share is not None and dup_share <= NEAR_UNIQUE_DUP_SHARE:
+        n_in, width = shuffle_width(df)
     base = df.where(consider) if consider is not None else df
-    grouped = base.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    dups = grouped.where(F.col("__cnt") > 1)
-    sample = F.struct(
-        *[F.col(c) for c in key_cols], F.col("__cnt")
-    )
-    partials = dups.groupBy(F.spark_partition_id().alias("__pid")).agg(
-        F.sum("__cnt").alias("__s"),
-        F.slice(F.collect_list(sample), 1, cap).alias("__v"),
-    )
-    rows = partials.collect()
-    total = sum(r["__s"] or 0 for r in rows)
-    pairs: List[Any] = []
-    for r in sorted(rows, key=lambda r: r["__pid"]):
-        pairs.extend(r["__v"])
-        if len(pairs) >= cap:
-            break
-    return int(total), pairs[:cap]
+    cache.decisions.append({
+        "op": "dup_groups:" + ":".join(key_cols),
+        "dup_share": dup_share,
+        "input_partitions": n_in,
+        "shuffle_width": width,
+        "map_side_partial_agg": width is None,
+    })
+    row = dup_groups_frame(base, key_cols, cap, width).first()
+    return int(row["__total"] or 0), row["__sample"]
 
 
 def _rf_and_cap(cfg, cache: MetricCache):
@@ -74,12 +130,16 @@ def compile_values_unique(index, cfg, schema) -> JobCheck:
     column = cfg.kwargs["column"]
     mostly = get_mostly(cfg.kwargs)
     c = F.col(column)
+    seen: Dict[str, float] = {}  # this check's last validate
 
     def spark_work(df, cache: MetricCache):
         _, cap = _rf_and_cap(cfg, cache)
         return cache._get(
             f"dup_groups:{column}:{cap}",
-            lambda: _dup_groups(df, [column], c.isNotNull(), cap),
+            lambda: _dup_groups(
+                df, [column], c.isNotNull(), cap, cache,
+                seen.get("dup_share"),
+            ),
         )
 
     def run(df, stats: Dict[str, Any], cache: MetricCache):
@@ -88,6 +148,8 @@ def compile_values_unique(index, cfg, schema) -> JobCheck:
         nonnull = stats[f"nonnull:{column}"]
         want_lists = rf["result_format"] != "BOOLEAN_ONLY"
         unexpected_count, pairs = spark_work(df, cache)
+        if nonnull:
+            seen["dup_share"] = unexpected_count / nonnull
         unexpected_list = None
         if want_lists:
             unexpected_list = []
@@ -124,20 +186,22 @@ def compile_values_unique(index, cfg, schema) -> JobCheck:
 
 
 def compile_compound_unique(index, cfg, schema) -> JobCheck:
-    """expect_compound_columns_to_be_unique; groupBy over the column
+    """expect_compound_columns_to_be_unique; a count over the column
     tuple replaces the reference's struct-window
     (compound_columns_unique.py:149-155)."""
     cols = list(cfg.kwargs["column_list"])
     ignore_row_if = cfg.kwargs.get("ignore_row_if", "all_values_are_missing")
     mostly = get_mostly(cfg.kwargs)
     consider_key = f"multi:{':'.join(cols)}:{ignore_row_if}"
+    seen: Dict[str, float] = {}  # this check's last validate
 
     def spark_work(df, cache: MetricCache):
         _, cap = _rf_and_cap(cfg, cache)
         return cache._get(
             f"dup_groups:{':'.join(cols)}:{ignore_row_if}:{cap}",
             lambda: _dup_groups(
-                df, cols, multi_consider(cols, ignore_row_if), cap
+                df, cols, multi_consider(cols, ignore_row_if), cap, cache,
+                seen.get("dup_share"),
             ),
         )
 
@@ -147,6 +211,8 @@ def compile_compound_unique(index, cfg, schema) -> JobCheck:
         filtered = stats[f"considered:{consider_key}"]
         want_lists = rf["result_format"] != "BOOLEAN_ONLY"
         unexpected_count, rows = spark_work(df, cache)
+        if filtered:
+            seen["dup_share"] = unexpected_count / filtered
         unexpected_list = None
         if want_lists:
             unexpected_list = []
@@ -310,6 +376,6 @@ UNIQUE_COMPILERS = {
     # "unique together" with all duplicate instances failed — identical
     # evaluation to the compound check
     # (ref expect_multicolumn_values_to_be_unique.py: ColumnMapExpectation
-    # over column_list; ours shares the two-phase hash-agg plan)
+    # over column_list; ours shares the key-count plan)
     "expect_multicolumn_values_to_be_unique": compile_compound_unique,
 }

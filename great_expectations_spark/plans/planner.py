@@ -27,7 +27,11 @@ fixed small number of Spark jobs:
                                        column-pruned to their columns
                                        (_run_deferred; shared with the
                                        checkpoint runner's finalize)
-  phase 3  job checks                  uniqueness (two-phase hash agg),
+  phase 3  job checks                  uniqueness (a key count; its
+                                       partial count and shuffle width
+                                       follow the check's previous
+                                       validate, recorded in
+                                       meta["decisions"]),
                                        referential anti-joins, value
                                        metrics (quantiles/value_counts/
                                        histograms) — deduped via a
@@ -232,6 +236,7 @@ class SparkValidator:
         self.complete_cap = complete_cap
         self.catch_exceptions = catch_exceptions
         self.phase_times: Dict[str, float] = {}
+        self.decisions: List[Dict[str, Any]] = []
 
     def _clock(self, phase: str, fn):
         """Record wall time of one engine phase into phase_times
@@ -314,6 +319,7 @@ class SparkValidator:
             meta={
                 "validation_time_s": round(time.perf_counter() - t0, 3),
                 "phase_times": dict(self.phase_times),
+                "decisions": list(self.decisions),
                 "expectation_suite_name": self.suite.name,
                 "engine": "great_expectations_spark",
             },
@@ -441,7 +447,7 @@ class SparkValidator:
         # shared metric cache, created BEFORE phase 1 so JobCheck
         # prefetches can overlap the single-pass scan: Spark schedules
         # concurrently-submitted jobs across the same executors, so
-        # independent work (two-phase uniqueness, leftover aggs) hides
+        # independent work (uniqueness count, leftover aggs) hides
         # behind the payload scan instead of serializing after it
         cache = MetricCache(df)
         cache.result_format = self.result_format
@@ -529,6 +535,8 @@ class SparkValidator:
                 evrs[chk.index] = exception_result(
                     chk.config, exc, traceback.format_exc()
                 )
+        # prefetch threads append in finishing order
+        self.decisions.extend(sorted(cache.decisions, key=lambda d: d["op"]))
 
     def _run_single_pass(
         self, df: DataFrame, plan: DomainPlan, map_checks: List[MapCheck]

@@ -36,7 +36,7 @@ def violations_frame(
     suite's map checks — write it wherever you like. Non-map checks
     (aggregates, uniqueness, referential) don't emit per-row
     violations here; uniqueness violations are obtainable exactly
-    from the two-phase agg, referential ones from the anti-join.
+    from the uniqueness key count, referential ones from the anti-join.
 
     Deferred checks (z-score) need resolved stats for their condition:
     those stats come from one eager, column-pruned ``df.agg`` here."""

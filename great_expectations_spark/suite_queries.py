@@ -366,16 +366,16 @@ def quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale the engine uses approx_percentile with bounded error; the
     oracle pins the exact variant."""
     li = _t(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.expr("percentile(l_extendedprice, 0.25)"), 4).alias(
-            "price_p25"
-        ),
-        F.round(F.expr("percentile(l_extendedprice, 0.50)"), 4).alias(
-            "price_p50"
-        ),
-        F.round(F.expr("percentile(l_extendedprice, 0.75)"), 4).alias(
-            "price_p75"
-        ),
+    # one percentile aggregate builds the value map once for all three
+    qs = li.agg(
+        F.expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75))")
+        .alias("q")
+    )
+    return qs.select(
+        *[
+            F.round(F.col("q")[i], 4).alias(name)
+            for i, name in enumerate(("price_p25", "price_p50", "price_p75"))
+        ]
     )
 
 
@@ -2889,17 +2889,15 @@ def doc_winnow_fingerprints(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Winnowing fingerprints (functions/fingerprint.py: 16-bit
-    k-gram hashes, k=7, window w=5 minima) summarized per doc —
-    single projection, no UDF, no shuffle; the guarantee is that any
+    k-gram hashes, k=7, window w=5 minima) summarized per doc — two
+    projections, no UDF, no shuffle; the guarantee is that any
     >= 11-char shared substring yields a common fingerprint."""
     from .functions.fingerprint import winnow_fingerprints
 
     d = _t(spark, sf_dir, "documents").where(
         (F.length("text") >= 7) & (F.col("doc_id") % 10 == 0)
     )
-    fps = d.select(
-        "doc_id", winnow_fingerprints(F.col("text")).alias("fps")
-    )
+    fps = winnow_fingerprints(d, "text", keep=["doc_id"])
     return fps.select(
         "doc_id",
         F.size("fps").cast("long").alias("n_fp"),

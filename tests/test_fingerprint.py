@@ -5,8 +5,6 @@ substring of length >= k+w-1 yields a common fingerprint)."""
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from great_expectations_spark.functions.fingerprint import (
     winnow_fingerprints,
 )
@@ -35,9 +33,7 @@ def spark_winnow(spark, texts):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "id long, text string"
     )
-    rows = df.select(
-        "id", winnow_fingerprints(F.col("text")).alias("fps")
-    ).collect()
+    rows = winnow_fingerprints(df, "text", keep=["id"]).collect()
     return {r.id: list(r.fps) for r in rows}
 
 
