@@ -25,8 +25,7 @@ fixed small number of Spark jobs:
                                        per-partition job returning the
                                        deferred counts and samples,
                                        column-pruned to their columns
-                                       (_run_deferred; shared with the
-                                       checkpoint runner's finalize)
+                                       (_run_deferred)
   phase 3  job checks                  uniqueness (a key count; its
                                        partial count and shuffle width
                                        follow the check's previous
@@ -42,11 +41,20 @@ Catalyst handles predicate pushdown + column pruning from the fused
 expression set; the stats pass never references unneeded columns (at
 scale: never reads the image `bytes` column unless a payload check is
 in the suite).
+
+SparkValidator._compile is the one place configs compile, bind their
+$PARAMETER kwargs and group into row_condition domains; the
+checkpoint runner and the violation sink compile through it too.
+_validate_domain is the one finalize: the checkpoint runner passes
+its resumable group grid as the domain's scan, and everything after
+the partition rows (merge, leftover agg, deferred job, job checks,
+EVRs) is shared.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 import traceback
 from collections import defaultdict
@@ -84,6 +92,22 @@ from .single_pass import (
     run_single_pass,
     violation_collect_expr,
 )
+
+
+def _start_thread(fn, holder=None):
+    """Run ``fn`` on a daemon thread; its exception, if any, goes to
+    ``holder["error"]`` (dropped without a holder)."""
+
+    def _run():
+        try:
+            fn()
+        except Exception as exc:  # noqa: BLE001 - reported via holder
+            if holder is not None:
+                holder["error"] = exc
+
+    t = threading.Thread(target=_run, daemon=True)
+    t.start()
+    return t
 
 
 def _considered_stat_key(consider_key: str) -> str:
@@ -139,13 +163,29 @@ def collect_agg_exprs(
     return agg_exprs
 
 
+def single_pass_rows(
+    df: DataFrame, partials, merges, violation_exprs, caps, n_parts
+) -> List[Any]:
+    """One single-pass job over ``df`` (plans/single_pass.py): its
+    partition rows in ascending pid order, the order every violation
+    sample is concatenated in."""
+    rows = run_single_pass(
+        df,
+        partials,
+        violation_exprs,
+        merges=merges,
+        viol_caps={f"v{i}": cap for i, cap in caps.items()},
+        n_parts=n_parts,
+    )
+    return sorted(rows, key=lambda r: r["__pid"])
+
+
 def _concat_samples(
     rows: List[Any], map_checks: List[MapCheck], caps: Dict[int, int]
 ) -> Dict[int, List[Any]]:
     """Each check's violation sample from single-pass rows: partition
-    slices concatenated in ascending pid order (deterministic), capped
-    and decoded. Checks without a cap (BOOLEAN_ONLY) get []."""
-    rows_sorted = sorted(rows, key=lambda r: r["__pid"])
+    slices concatenated in the order the caller gives, capped and
+    decoded. Checks without a cap (BOOLEAN_ONLY) get []."""
     out: Dict[int, List[Any]] = {}
     for chk in map_checks:
         cap = caps.get(chk.index)
@@ -153,7 +193,7 @@ def _concat_samples(
             out[chk.index] = []
             continue
         merged: List[Any] = []
-        for r in rows_sorted:
+        for r in rows:
             merged.extend(r[f"v{chk.index}"] or [])
             if len(merged) >= cap:
                 break
@@ -253,8 +293,6 @@ class SparkValidator:
 
     def validate(self) -> ExpectationSuiteValidationResult:
         t0 = time.perf_counter()
-        evrs: Dict[int, ExpectationValidationResult] = {}
-
         if self._compiled is not None:
             exc_entries = self._compiled.exc_entries
             domains = self._compiled.domains
@@ -262,7 +300,34 @@ class SparkValidator:
             exc_entries, domains = self._clock(
                 "compile", lambda: self._compile(self.schema)
             )
+        evrs = self._compile_errors(exc_entries)
+        for dom in domains:
+            self._run_domain(dom, evrs)
+        return self._suite_result(
+            evrs,
+            validation_time_s=round(time.perf_counter() - t0, 3),
+            engine="great_expectations_spark",
+        )
 
+    # -- internals --------------------------------------------------------------
+
+    def _suite_result(self, evrs, **meta) -> ExpectationSuiteValidationResult:
+        """The suite result of ``evrs`` (by expectation index); its meta
+        carries this validator's phase times and engine decisions."""
+        return ExpectationSuiteValidationResult.from_results(
+            [evrs[i] for i in sorted(evrs)],
+            meta={
+                **meta,
+                "phase_times": dict(self.phase_times),
+                "decisions": list(self.decisions),
+                "expectation_suite_name": self.suite.name,
+            },
+        )
+
+    def _compile_errors(self, exc_entries) -> Dict[int, Any]:
+        """Exception EVRs (by index) for configs that failed to
+        compile, or the error itself when catch_exceptions is off."""
+        evrs: Dict[int, ExpectationValidationResult] = {}
         for i, cfg, exc, tb in exc_entries:
             if not self.catch_exceptions:
                 if self._compiled is not None:
@@ -277,55 +342,47 @@ class SparkValidator:
                     ) from exc
                 raise exc
             evrs[i] = exception_result(cfg, exc, tb)
+        return evrs
 
-        for dom in domains:
-            if dom.error is not None:
-                # an unparseable condition (bad SQL, bad DSL) yields
-                # exception EVRs for its domain's checks, not an
-                # aborted validate; the stored instance is never
-                # re-raised (it is shared across batches when
-                # precompiled — raising would grow its __traceback__
-                # per batch)
-                exc, tb = dom.error
-                if not self.catch_exceptions:
-                    if self._compiled is not None:
-                        raise RuntimeError(
-                            f"row_condition {dom.rc!r} failed to "
-                            f"compile: {exc!r}"
-                        ) from exc
-                    raise exc
-                for chk in dom.checks:
-                    if chk.index not in evrs:
-                        evrs[chk.index] = exception_result(chk.config, exc, tb)
-                continue
+    def _run_domain(self, dom: "_Domain", evrs, scan=None) -> bool:
+        """Validate one row_condition domain into ``evrs``. A domain
+        that fails as a whole (an unparseable condition, a failed
+        scan) yields exception EVRs for its checks and returns False.
+        ``scan`` replaces the default single-pass scan (see
+        _validate_domain)."""
+        if dom.error is not None:
+            # an unparseable condition (bad SQL, bad DSL) yields
+            # exception EVRs for its domain's checks, not an aborted
+            # validate; a precompiled instance is never re-raised (it
+            # is shared across batches — raising would grow its
+            # __traceback__ per batch)
+            exc, tb = dom.error
+            if not self.catch_exceptions:
+                if self._compiled is not None:
+                    raise RuntimeError(
+                        f"row_condition {dom.rc!r} failed to "
+                        f"compile: {exc!r}"
+                    ) from exc
+                raise exc
+        else:
             try:
                 df = (
                     self.df.filter(dom.cond)
                     if dom.cond is not None
                     else self.df
                 )
-                self._validate_domain(df, dom.checks, evrs, plan=dom.plan)
-            except Exception as exc:  # noqa: BLE001
+                self._validate_domain(
+                    df, dom.checks, evrs, plan=dom.plan, scan=scan
+                )
+                return True
+            except Exception as e:  # noqa: BLE001
                 if not self.catch_exceptions:
                     raise
-                tb = traceback.format_exc()
-                for chk in dom.checks:
-                    if chk.index not in evrs:
-                        evrs[chk.index] = exception_result(chk.config, exc, tb)
-
-        ordered = [evrs[i] for i in sorted(evrs)]
-        return ExpectationSuiteValidationResult.from_results(
-            ordered,
-            meta={
-                "validation_time_s": round(time.perf_counter() - t0, 3),
-                "phase_times": dict(self.phase_times),
-                "decisions": list(self.decisions),
-                "expectation_suite_name": self.suite.name,
-                "engine": "great_expectations_spark",
-            },
-        )
-
-    # -- internals --------------------------------------------------------------
+                exc, tb = e, traceback.format_exc()
+        for chk in dom.checks:
+            if chk.index not in evrs:
+                evrs[chk.index] = exception_result(chk.config, exc, tb)
+        return False
 
     def _rf_for(self, chk) -> dict:
         rf = chk.config.kwargs.get("result_format")
@@ -336,13 +393,15 @@ class SparkValidator:
             return self.complete_cap
         return max(rf["partial_unexpected_count"], 1)
 
-    def _compile(self, schema):
+    def _compile(self, schema, urn_resolver=None):
         """Compile the suite's configs into checks and group them by
         row_condition domain. Returns (exc_entries, domains) where
         exc_entries is [(index, cfg, exc, traceback_str)] for configs
         that failed to compile, and domains is a list of _Domain with
         the filter Column prebuilt (or its parse error recorded).
-        Pure driver-side work — no Spark job."""
+        ``urn_resolver`` resolves validation-result URN parameters
+        (the checkpoint runner passes its state store's). Pure
+        driver-side work — no Spark job."""
         exc_entries: List[Any] = []
         compiled: List[Any] = []
 
@@ -354,7 +413,9 @@ class SparkValidator:
                     for v in cfg.kwargs.values()
                 ):
                     bound, _ = build_evaluation_parameters(
-                        cfg.kwargs, self.evaluation_parameters
+                        cfg.kwargs,
+                        self.evaluation_parameters,
+                        urn_resolver=urn_resolver,
                     )
                     cfg = ExpectationConfiguration(
                         expectation_type=cfg.expectation_type,
@@ -416,25 +477,29 @@ class SparkValidator:
         )
 
     def _validate_domain(
-        self, df: DataFrame, checks: List[Any], evrs, plan: Optional[DomainPlan] = None
+        self,
+        df: DataFrame,
+        checks: List[Any],
+        evrs,
+        plan: Optional[DomainPlan] = None,
+        scan=None,
     ) -> None:
+        """Run one domain's checks over ``df`` into ``evrs``.
+
+        ``scan(df, plan)`` produces the domain's single-pass partition
+        rows, in the order their violation samples concatenate, and
+        the partition count the deferred job may reuse (or None). The
+        default is one job over ``df`` (_scan); the checkpoint runner
+        passes its resumable group grid. Everything after the rows —
+        merge, leftover agg, deferred job, job checks, EVRs — is this
+        one path for both."""
         schema_checks, map_checks, agg_checks, job_checks = split_checks(
             checks
         )
 
         # phase 0: schema checks — no Spark job
         for chk in schema_checks:
-            try:
-                success, result = chk.evaluate(df.schema)
-                evrs[chk.index] = ExpectationValidationResult(
-                    success=success, expectation_config=chk.config, result=result
-                )
-            except Exception as exc:  # noqa: BLE001
-                if not self.catch_exceptions:
-                    raise
-                evrs[chk.index] = exception_result(
-                    chk.config, exc, traceback.format_exc()
-                )
+            self._evr(evrs, chk, lambda chk=chk: chk.evaluate(df.schema))
 
         # phase 1: the fused stat-expression set — precompiled when a
         # CompiledSuite supplied the plan, else built now
@@ -453,22 +518,13 @@ class SparkValidator:
         cache.result_format = self.result_format
         cache.complete_cap = self.complete_cap
         cache.aux_tables = self.aux_tables
-        prefetch_threads: List[Any] = []
-        import threading as _threading
-
+        prefetched: Dict[int, Any] = {}
         for chk in job_checks:
-            if chk.prefetch is None:
-                continue
-
-            def _bg(chk=chk):
-                try:
-                    chk.prefetch(df, cache)
-                except Exception:  # noqa: BLE001 - run() re-raises
-                    pass
-
-            t = _threading.Thread(target=_bg, daemon=True)
-            t.start()
-            prefetch_threads.append(t)
+            if chk.prefetch is not None:
+                # a failed prefetch is left for run() to re-raise
+                prefetched[chk.index] = _start_thread(
+                    lambda chk=chk: chk.prefetch(df, cache)
+                )
 
         stats: Dict[str, Any] = {}
         unexpected_lists: Dict[int, List[Any]] = {}
@@ -476,7 +532,9 @@ class SparkValidator:
         if plan.agg_exprs:
             stats, unexpected_lists, n_parts = self._clock(
                 "single_pass",
-                lambda: self._run_single_pass(df, plan, map_checks),
+                lambda: self._run_single_pass(
+                    df, plan, map_checks, scan or self._scan
+                ),
             )
 
         # phase 1b: deferred map conditions (need merged stats first)
@@ -489,7 +547,6 @@ class SparkValidator:
                 )
             )
 
-        # map-check EVRs
         for chk in map_checks:
             try:
                 evrs[chk.index] = self._finalize_map_check(
@@ -501,102 +558,82 @@ class SparkValidator:
                 evrs[chk.index] = exception_result(
                     chk.config, exc, traceback.format_exc()
                 )
-
-        # agg-check EVRs
         for chk in agg_checks:
-            try:
-                success, result = chk.finalize(stats)
-                evrs[chk.index] = ExpectationValidationResult(
-                    success=success, expectation_config=chk.config, result=result
-                )
-            except Exception as exc:  # noqa: BLE001
-                if not self.catch_exceptions:
-                    raise
-                evrs[chk.index] = exception_result(
-                    chk.config, exc, traceback.format_exc()
-                )
+            self._evr(evrs, chk, lambda chk=chk: chk.finalize(stats))
 
-        # phase 3: job checks (prefetched Spark work is memoized in
-        # the cache; join the background threads first)
-        for t in prefetch_threads:
-            t.join()
+        # phase 3: job checks; each clock covers the wait for its own
+        # prefetch thread, whose Spark work is memoized in the cache
+        def _job(chk):
+            t = prefetched.get(chk.index)
+            if t is not None:
+                t.join()
+            return chk.run(df, stats, cache)
+
         for chk in job_checks:
-            try:
-                success, result = self._clock(
+            self._evr(
+                evrs,
+                chk,
+                lambda chk=chk: self._clock(
                     f"job:{chk.config.expectation_type}",
-                    lambda chk=chk: chk.run(df, stats, cache),
-                )
-                evrs[chk.index] = ExpectationValidationResult(
-                    success=success, expectation_config=chk.config, result=result
-                )
-            except Exception as exc:  # noqa: BLE001
-                if not self.catch_exceptions:
-                    raise
-                evrs[chk.index] = exception_result(
-                    chk.config, exc, traceback.format_exc()
-                )
+                    lambda: _job(chk),
+                ),
+            )
         # prefetch threads append in finishing order
         self.decisions.extend(sorted(cache.decisions, key=lambda d: d["op"]))
 
-    def _run_single_pass(
-        self, df: DataFrame, plan: DomainPlan, map_checks: List[MapCheck]
-    ):
-        """ONE per-partition agg job for stats + violation samples.
-
-        See plans/single_pass.py. Non-mergeable stats (countDistinct)
-        run in a leftover df.agg — Catalyst column-prunes it, so it
-        stays a cheap scalar scan that never reads payload columns.
-        All expressions come precompiled from the DomainPlan. Returns
-        (stats, violation samples, partition count); the count is
-        reused by the deferred job.
-        """
-        partials, merges, leftover = plan.partials, plan.merges, plan.leftover
-        caps, violation_exprs = plan.caps, plan.violation_exprs
-
-        # the leftover agg depends only on df — submit it on a worker
-        # thread so it runs concurrently with the single-pass job
-        leftover_holder: Dict[str, Any] = {}
-        leftover_thread = None
-        if leftover:
-            keys = list(leftover)
-            import threading as _threading
-
-            def _leftover():
-                try:
-                    leftover_holder["row"] = df.agg(
-                        *[
-                            leftover[k].alias(f"s{i}")
-                            for i, k in enumerate(keys)
-                        ]
-                    ).first()
-                except Exception as exc:  # noqa: BLE001
-                    leftover_holder["error"] = exc
-
-            leftover_thread = _threading.Thread(
-                target=_leftover, daemon=True
+    def _evr(self, evrs, chk, outcome) -> None:
+        """Store ``chk``'s EVR from ``outcome() -> (success, result)``,
+        or its exception EVR."""
+        try:
+            success, result = outcome()
+            evrs[chk.index] = ExpectationValidationResult(
+                success=success, expectation_config=chk.config, result=result
             )
-            leftover_thread.start()
+        except Exception as exc:  # noqa: BLE001
+            if not self.catch_exceptions:
+                raise
+            evrs[chk.index] = exception_result(
+                chk.config, exc, traceback.format_exc()
+            )
 
+    @staticmethod
+    def _scan(df: DataFrame, plan: DomainPlan):
+        """The in-process scan: one single-pass job over ``df``."""
         n_parts = df.rdd.getNumPartitions()
-        rows = run_single_pass(
-            df,
-            partials,
-            violation_exprs,
-            merges=merges,
-            viol_caps={f"v{i}": cap for i, cap in caps.items()},
-            n_parts=n_parts,
-        )
-        stats = merge_stat_rows(rows, merges, df.sparkSession)
+        return single_pass_rows(
+            df, plan.partials, plan.merges, plan.violation_exprs,
+            plan.caps, n_parts,
+        ), n_parts
 
+    def _run_single_pass(
+        self, df: DataFrame, plan: DomainPlan, map_checks: List[MapCheck],
+        scan,
+    ):
+        """Phase 1: the partition rows from ``scan`` merged into stats
+        and violation samples. Non-mergeable stats (countDistinct) run
+        in a leftover df.agg on a worker thread, concurrently with the
+        scan — Catalyst column-prunes it, so it stays a cheap scalar
+        scan that never reads payload columns. Returns (stats,
+        violation samples, the scan's partition count)."""
+        leftover = plan.leftover
+        keys = list(leftover)
+        holder: Dict[str, Any] = {}
+
+        def _leftover():
+            holder["row"] = df.agg(
+                *[leftover[k].alias(f"s{i}") for i, k in enumerate(keys)]
+            ).first()
+
+        leftover_thread = _start_thread(_leftover, holder) if keys else None
+        rows, n_parts = scan(df, plan)
+        stats = merge_stat_rows(rows, plan.merges, df.sparkSession)
         if leftover_thread is not None:
             self._clock("leftover_join", leftover_thread.join)
-            if "error" in leftover_holder:
-                raise leftover_holder["error"]
-            row = leftover_holder["row"]
+            if "error" in holder:
+                raise holder["error"]
             for i, k in enumerate(keys):
-                stats[k] = row[f"s{i}"]
-
-        return stats, _concat_samples(rows, map_checks, caps), n_parts
+                stats[k] = holder["row"][f"s{i}"]
+        return stats, _concat_samples(rows, map_checks, plan.caps), n_parts
 
     def _run_deferred(
         self,
@@ -609,8 +646,7 @@ class SparkValidator:
         condition, built against the already-merged ``stats``. Writes
         each check's unexpected count into ``stats`` and returns its
         bounded violation sample. Catalyst column-prunes the job to the
-        conditions' columns, so it never decodes payloads. Used by
-        validate and by the checkpoint runner's finalize; ``n_parts``
+        conditions' columns, so it never decodes payloads. ``n_parts``
         reuses the main pass's partition count."""
         if not deferred or not stats.get("table.row_count", 0):
             for chk in deferred:
@@ -635,13 +671,8 @@ class SparkValidator:
                 )
             )
         partials, merges, _ = plan_stat_partials(counts)
-        rows = run_single_pass(
-            df,
-            partials,
-            violation_exprs,
-            merges=merges,
-            viol_caps={f"v{i}": cap for i, cap in caps.items()},
-            n_parts=n_parts,
+        rows = single_pass_rows(
+            df, partials, merges, violation_exprs, caps, n_parts
         )
         stats.update(merge_stat_rows(rows, merges, df.sparkSession))
         return _concat_samples(rows, deferred, caps)

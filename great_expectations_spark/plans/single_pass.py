@@ -31,8 +31,10 @@ This is the literal realization of the target architecture: "all
 per-column stats run as a single fused multi-aggregate pass per
 partition ... and violation rows are emitted with the same
 per-partition pass/fail result schema" — and it is also how the run
-resumes from a checkpoint: the per-partition rows this pass produces
-ARE the lineage/metrics table (see checkpoint/).
+resumes from a checkpoint: the checkpoint runner runs this pass once
+per (group, domain), persists its per-partition rows as the run's
+resumable state and metrics table, and hands them to the planner's
+finalize like an in-process pass's rows (see checkpoint/).
 
 Stat-key contract (planner-internal names):
     table.row_count                 count          merge: sum

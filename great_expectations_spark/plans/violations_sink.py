@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.config import ExpectationSuite
-from ..operators.registry import get_compiler
-from .planner import split_checks
+from .planner import SparkValidator, split_checks
 
 
 def violations_frame(
@@ -38,48 +37,59 @@ def violations_frame(
     violations here; uniqueness violations are obtainable exactly
     from the uniqueness key count, referential ones from the anti-join.
 
-    Deferred checks (z-score) need resolved stats for their condition:
-    those stats come from one eager, column-pruned ``df.agg`` here."""
-    compiled = []
-    for i, cfg in enumerate(suite.expectations):
-        compiled.append(get_compiler(cfg.expectation_type)(i, cfg, df.schema))
-    _, map_checks, _, _ = split_checks(compiled)
-    if not map_checks:
-        raise ValueError("suite has no exportable map conditions")
-
-    stats: Dict[str, Any] = {}
-    needs = {
-        k: e for c in map_checks if c.deferred
-        for k, e in c.stat_needs.items()
-    }
-    if needs:
-        keys = list(needs)
-        row = df.agg(
-            *[needs[k].alias(f"s{i}") for i, k in enumerate(keys)]
-        ).first()
-        stats = {k: row[f"s{i}"] for i, k in enumerate(keys)}
-
-    entries = []
+    The suite compiles as in validate: ``$PARAMETER`` kwargs bind to
+    the suite's evaluation parameters, and each check sees only the
+    rows of its row_condition domain. A config or condition that
+    fails to compile raises. Deferred checks (z-score) need resolved
+    stats for their condition: those come from one eager,
+    column-pruned agg over each domain that has one."""
+    exc_entries, domains = SparkValidator(df, suite)._compile(df.schema)
+    if exc_entries:
+        raise exc_entries[0][2]
+    entries: Dict[int, Any] = {}
     meta: Dict[int, Any] = {}
-    for chk in map_checks:
-        cond, value = chk.build(stats)
-        full = (chk.consider() & cond) if chk.consider is not None else cond
-        entries.append(
-            F.when(
+    for dom in domains:
+        if dom.error is not None:
+            raise dom.error[0]
+        _, map_checks, _, _ = split_checks(dom.checks)
+        stats: Dict[str, Any] = {}
+        needs = {
+            k: e for c in map_checks if c.deferred
+            for k, e in c.stat_needs.items()
+        }
+        if needs:
+            keys = list(needs)
+            ddf = df.filter(dom.cond) if dom.cond is not None else df
+            row = ddf.agg(
+                *[needs[k].alias(f"s{i}") for i, k in enumerate(keys)]
+            ).first()
+            stats = {k: row[f"s{i}"] for i, k in enumerate(keys)}
+        for chk in map_checks:
+            cond, value = chk.build(stats)
+            full = (
+                (chk.consider() & cond) if chk.consider is not None else cond
+            )
+            if dom.cond is not None:
+                full = dom.cond & full
+            entries[chk.index] = F.when(
                 full,
                 F.struct(
                     F.lit(chk.index).cast("int").alias("check_index"),
                     value.alias("value"),
                 ),
             )
-        )
-        meta[chk.index] = chk.config
+            meta[chk.index] = chk.config
+    if not entries:
+        raise ValueError("suite has no exportable map conditions")
 
     id_cols = [F.col(c) for c in (id_columns or [])]
     exploded = df.select(
         *id_cols,
         F.explode(
-            F.filter(F.array(*entries), lambda x: x.isNotNull())
+            F.filter(
+                F.array(*[entries[i] for i in sorted(entries)]),
+                lambda x: x.isNotNull(),
+            )
         ).alias("__v"),
     ).select(
         *[F.col(c) for c in (id_columns or [])],

@@ -502,3 +502,77 @@ def test_checkpoint_urn_evaluation_parameters(spark, tmp_path):
     res_d = CheckpointRunner(spark, path, suite_d, state, "d1").run()
     assert not res_d.results[0].success
     assert "No value found" in str(res_d.results[0].exception_info)
+
+
+def _sample_key(v):
+    return json.dumps(v, sort_keys=True, default=str)
+
+
+@pytest.mark.parametrize("group_col", [None, "fmt"])
+def test_checkpoint_complete_matches_validate(spark, tmp_path, group_col):
+    """The runner finalizes through the planner. Ungrouped at
+    COMPLETE, every EVR equals validate's, sample order included.
+    Grouped, counts, observed values and the full unexpected_list
+    (as a multiset: groups concatenate in grid order) are kept. The
+    meta carries the validator's phase times and decisions."""
+    path = make_table(spark, tmp_path, n=1500)
+    df = spark.read.parquet(path)
+    suite = (
+        the_suite()
+        .expect("expect_column_value_z_scores_to_be_less_than",
+                column="w", threshold=1.0, double_sided=True, mostly=0.5)
+        .expect("expect_column_values_to_be_between", column="h",
+                min_value=1, max_value=20, row_condition="fmt = 'png'")
+    )
+    expected = ges.validate(df, suite, result_format="COMPLETE")
+    got = CheckpointRunner(
+        spark, path, suite, str(tmp_path / "state"), "rc",
+        group_col=group_col, result_format="COMPLETE",
+    ).run()
+
+    if group_col is None:
+        assert [r.to_json_dict() for r in got.results] == [
+            r.to_json_dict() for r in expected.results
+        ]
+    for e, g in zip(expected.results, got.results):
+        typ = e.expectation_config.expectation_type
+        assert e.success == g.success, typ
+        er, gr = e.result or {}, g.result or {}
+        assert set(er) == set(gr), typ
+        for k, v in er.items():
+            if k.startswith("partial_unexpected"):
+                continue  # the first K in concatenation order
+            if k == "unexpected_list":
+                assert sorted(map(_sample_key, gr[k])) == sorted(
+                    map(_sample_key, v)
+                ), typ
+            elif isinstance(v, float):
+                assert gr[k] == pytest.approx(v, rel=1e-9), (typ, k)
+            else:
+                assert gr[k] == v, (typ, k)
+    assert any(r.result.get("unexpected_list") for r in got.results)
+
+    times = got.meta["phase_times"]
+    assert {"compile", "single_pass", "deferred",
+            "job:expect_column_values_to_be_unique"} <= set(times)
+    assert [d["op"] for d in got.meta["decisions"]] == [
+        "dup_groups:image_id"
+    ]
+
+
+def test_only_the_planner_compiles():
+    """One compile path: inside the package, only plans/planner.py
+    compiles configs and binds $PARAMETER kwargs."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(ges.__file__).parent
+    call = re.compile(
+        r"(?<!def )\b(get_compiler|build_evaluation_parameters)\("
+    )
+    callers = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if call.search(p.read_text())
+    )
+    assert callers == ["plans/planner.py"]

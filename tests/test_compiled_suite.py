@@ -262,3 +262,38 @@ def test_compiled_sketch_partials(spark):
             "w", [0.4, 0.6], 0.0
         )
         assert lo <= med_c <= hi and lo <= med_r <= hi
+
+
+def test_job_clock_covers_its_prefetch_wait(spark):
+    """A job check's phase time includes the wait for its own
+    prefetch thread, so that wait is attributed to the check rather
+    than left unclocked."""
+    import time
+
+    from great_expectations_spark.operators.checks import JobCheck
+
+    df = spark.createDataFrame(BATCH_A, SCHEMA)
+    suite = ges.suite("clk").expect(
+        "expect_column_values_to_be_unique", column="x"
+    )
+    compiled = ges.compile_suite(suite, df.schema, spark)
+    slowed = 0
+    for dom in compiled.domains:
+        for chk in dom.checks:
+            if isinstance(chk, JobCheck) and chk.prefetch is not None:
+                def slow(df_, cache, orig=chk.prefetch):
+                    time.sleep(3.0)
+                    orig(df_, cache)
+
+                chk.prefetch = slow
+                slowed += 1
+    assert slowed == 1
+    res = compiled.validate(df)
+    assert res.results[0].success
+    # the prefetch starts before the single pass, so the 3 s it takes
+    # are covered by the single-pass clock and then by the job clock
+    times = res.meta["phase_times"]
+    assert set(times) == {
+        "single_pass", "job:expect_column_values_to_be_unique"
+    }, times
+    assert sum(times.values()) >= 2.95, times

@@ -74,3 +74,47 @@ def test_sink_exports_zscore_violations(spark):
     for i, r in enumerate(res.results):
         assert sink_counts.get(i, 0) == r.result["unexpected_count"], i
     assert sink_counts[0] > 0 and sink_counts[1] > 0
+
+
+def test_sink_applies_row_condition(spark):
+    """Each check exports only the rows of its row_condition domain,
+    and a deferred (z-score) check's stats are its domain's."""
+    df = spark.createDataFrame(
+        [(1, "a"), (2, None), (3, None)], "id int, s string"
+    )
+    s = ges.suite("rc").expect(
+        "expect_column_values_to_not_be_null", column="s",
+        row_condition="id > 2",
+    )
+    ids = [r["id"] for r in violations_frame(df, s, ["id"]).collect()]
+    assert ids == [3]
+    assert ges.validate(df, s).results[0].result["unexpected_count"] == 1
+
+    img = images_df(spark, 2000, 13)
+    z = ges.suite("rcz").expect(
+        "expect_column_value_z_scores_to_be_less_than", column="w",
+        threshold=0.5, double_sided=True, row_condition="fmt = 'png'",
+    )
+    n = violations_frame(img, z).count()
+    assert n > 0
+    assert n == ges.validate(img, z).results[0].result["unexpected_count"]
+
+
+def test_sink_binds_evaluation_parameters(spark):
+    """$PARAMETER kwargs bind to the suite's evaluation parameters as
+    in validate; one that cannot be bound still raises."""
+    df = spark.createDataFrame([(1,), (5,), (9,)], "id int")
+    s = ges.suite("ep").expect(
+        "expect_column_values_to_be_between", column="id",
+        min_value={"$PARAMETER": "lo"}, max_value=8,
+    )
+    s.evaluation_parameters = {"lo": 2}
+    ids = sorted(
+        r["id"] for r in violations_frame(df, s, ["id"]).collect()
+    )
+    assert ids == [1, 9]
+    assert ges.validate(df, s).results[0].result["unexpected_count"] == 2
+
+    s.evaluation_parameters = {}
+    with pytest.raises(Exception, match="No value found"):
+        violations_frame(df, s)
