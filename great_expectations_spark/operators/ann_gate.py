@@ -13,20 +13,19 @@ sample, compute the ANN candidate top-k for the configured method, and
 require recall@k strictly greater than ``min_recall``.
 
 Methods:
-- ``bucket``  — IVF-style probe of ONE existing bucket column: bucket
-  centroids are per-bucket mean embeddings, the query probes its
-  max-cosine centroid's bucket only. This is the production shape of
-  an IVF index whose partitions already exist (and the shape that
-  fails when the column is not geometric).
-- ``kmeans``  — learn the buckets first: deterministic fixed-iteration
-  Lloyd (seed = the K lowest-id vectors), then probe as above.
+- ``bucket``  — IVF-style probe of ONE existing bucket column: the
+  query probes its nearest bucket mean only. This is the production
+  shape of an IVF index whose partitions already exist (and the shape
+  that fails when the column is not geometric).
+- ``kmeans``  — learn the buckets first (fixed-iteration Lloyd, seed =
+  the K lowest-id vectors), then probe as above.
 
-Scale: the query sample is tiny and broadcast everywhere; the exact
-baseline is the only corpus-wide scan (one broadcast-nested-loop pass
-— at 10^12 rows you bound it by sampling queries exactly as here, the
-denominator is queries × k, never corpus-sized). The ANN side touches
-one bucket per query. Centroid means use the no-vector-explosion
-mapInPandas machinery shared with the audit queries.
+Kernels: the ann_recall audit query's own, from suite_queries —
+``cosine_topk`` (the exact baseline), ``_ivf_centroids`` and
+``kmeans_buckets`` (the buckets), ``ivf_topk`` (the probe) and
+``recall_counts`` (returned, hits and exact neighbors, counted in one
+job). ``method="bucket"|"kmeans"`` over the embeddings table gives
+the ``ivf``/``kmeans`` rows of ann_recall.
 
 Reference: the reference has no ANN surface (engine-original
 expectation); EVR shape follows its aggregate expectations
@@ -40,88 +39,8 @@ from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .checks import JobCheck, MetricCache
-
-
-def _kernels():
-    """suite_queries owns the shared vector kernels (_vec_cos,
-    _ivf_centroids, _kmeans_assign, _kmeans_update); import lazily so
-    operators.registry -> ann_gate import never pays (or cycles on)
-    the full query-library import at package-import time."""
-    from .. import suite_queries as sq
-
-    return sq
-
-
-def _exact_topk(
-    e: DataFrame, q: DataFrame, k: int
-) -> DataFrame:
-    """Brute-force cosine top-k: one corpus scan against the broadcast
-    query sample. Dead (zero-norm) vectors score NULL via try_divide
-    and are dropped before ranking — they never occupy a top-k slot."""
-    sq = _kernels()
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col("nid") != F.col("qid"))
-        .select(
-            "qid",
-            "nid",
-            sq._vec_cos(F.col("qv"), F.col("v")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.where(F.col("sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid")
-    )
-
-
-def _bucket_probe_topk(
-    e: DataFrame, q: DataFrame, cent: DataFrame, k: int
-) -> DataFrame:
-    """IVF probe: assign each query to its max-cosine centroid, then
-    exact top-k INSIDE that one bucket. `e` carries (nid, bid, v),
-    `cent` (bid, cvec); both query sample and centroids broadcast, so
-    the corpus-side join is bucket-pruned and shuffle-free."""
-    sq = _kernels()
-    w_assign = Window.partitionBy("qid").orderBy(
-        F.desc("csim"), F.asc("bid")
-    )
-    assigned = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "qid",
-            "qv",
-            "bid",
-            sq._vec_cos(F.col("qv"), F.col("cvec")).alias("csim"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") == 1)
-        .select("qid", "qv", F.col("bid").alias("qbid"))
-    )
-    scored = (
-        e.join(
-            F.broadcast(assigned),
-            (F.col("bid") == F.col("qbid"))
-            & (F.col("nid") != F.col("qid")),
-        )
-        .select(
-            "qid",
-            "nid",
-            sq._vec_cos(F.col("qv"), F.col("v")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.where(F.col("sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid")
-    )
 
 
 def ann_recall_at_k(
@@ -140,7 +59,8 @@ def ann_recall_at_k(
     over `df`. Returns {recall, hits, exact_neighbors, queries,
     returned, method, k}. recall is None when the query sample has no
     live (non-zero-norm) exact neighbors."""
-    sq = _kernels()
+    from .. import suite_queries as sq
+
     if method not in ("bucket", "kmeans"):
         raise ValueError(f"unknown ANN method {method!r}")
     base = df.select(
@@ -159,52 +79,21 @@ def ann_recall_at_k(
     q = base.where(F.col("nid").isin(query_ids)).select(
         F.col("nid").alias("qid"), F.col("v").alias("qv")
     )
-    # the exact set feeds two branches (hit join + denominator count);
-    # localCheckpoint so the brute-force pass executes once. It is
-    # queries × k rows — tiny.
-    exact = _exact_topk(base.select("nid", "v"), q, k).localCheckpoint()
-
     if method == "bucket":
-        cent = sq._ivf_centroids(
-            base.select(
-                F.col("bid").alias("label"), F.col("v").alias("embedding")
-            )
-        ).select(F.col("label").alias("bid"), "cvec")
-        ann = _bucket_probe_topk(base, q, cent, k)
-    else:  # kmeans: learn geometric buckets, then the same probe
-        ev = base.select(F.col("nid").alias("vec_id"), "v")
-        w0 = Window.orderBy("vec_id")
-        cent = (
-            ev.orderBy("vec_id")
-            .limit(kmeans_k)
-            .select(
-                (F.row_number().over(w0) - 1).cast("int").alias("cid"),
-                F.col("v").alias("cvec"),
-            )
-        )
-        assigned = None
-        for i in range(kmeans_iters):
-            assigned = sq._kmeans_assign(ev, cent)
-            if i < kmeans_iters - 1:
-                cent = sq._kmeans_update(assigned)
-        e_assigned = assigned.select(
-            F.col("vec_id").alias("nid"),
-            F.col("cid").alias("bid"),
-            "v",
-        )
-        cent_k = cent.select(F.col("cid").alias("bid"), "cvec")
-        ann = _bucket_probe_topk(e_assigned, q, cent_k, k)
-
-    exact_n = exact.count()
-    returned = ann.count()
-    hits = ann.join(exact, ["qid", "nid"], "left_semi").count()
-    recall = round(hits / exact_n, 4) if exact_n else None
+        cand, cent = base, sq._ivf_centroids(base)
+    else:
+        cand, cent = sq.kmeans_buckets(base, kmeans_k, kmeans_iters)
+    c = sq.recall_counts(
+        sq.ivf_topk(cand, q, cent, 1, k), sq.cosine_topk(base, q, k)
+    ).first()
+    exact_n = c.exact_neighbors
+    recall = round(c.hits / exact_n, 4) if exact_n else None
     return {
         "method": method,
         "k": k,
         "queries": len(query_ids),
-        "returned": returned,
-        "hits": hits,
+        "returned": c.returned,
+        "hits": c.hits,
         "exact_neighbors": exact_n,
         "recall": recall,
     }

@@ -320,11 +320,8 @@ def compile_duplicate_segment_rate(index, cfg, schema) -> JobCheck:
     is a repetition problem, not a corpus-dedup one).
 
     It runs the audit's kernels, suite_queries.segment_instances and
-    segment_dup_counts, over rows keyed by a monotonic id. The
-    instance table is persisted because both branches of
-    segment_dup_counts read it and share no exchange; the sums do not
-    depend on the id values, so the persist is a cost choice, not a
-    correctness pin. kwargs: column,
+    segment_dup_counts, over rows keyed by a monotonic id; the sums do
+    not depend on the id values. kwargs: column,
     segment_tokens (default 8), min_value/max_value bounds.
     """
     from ..core.result import validate_metric_value_between
@@ -343,11 +340,9 @@ def compile_duplicate_segment_rate(index, cfg, schema) -> JobCheck:
             .where(F.col("txt").isNotNull())
             .withColumn("rid", F.monotonically_increasing_id())
         )
-        inst = segment_instances(ids, ["rid"], "txt", seg_len).persist()
-        try:
-            agg = segment_dup_counts(inst).first()
-        finally:
-            inst.unpersist()
+        agg = segment_dup_counts(
+            segment_instances(ids, ["rid"], "txt", seg_len)
+        ).first()
         total = int(agg["segs"] or 0)
         dup = int(agg["dups"] or 0)
         rate = dup / total if total else 0.0

@@ -25,10 +25,10 @@ dedup_stream horizon and the batch LSH cap.
 Per-row signatures here use array expressions rather than the batch
 path's explode + two-phase agg: a stream stage must stay stateless
 before the keyed-state operator (an aggregate would be a second
-stateful operator), and per-micro-batch volumes make the interpreted
-lambda cost irrelevant. Band values are bit-for-bit the batch ones —
-tests/test_lsh_stream.py checks stream output against
-suite_queries._capped_band_pairs on the same corpus.
+stateful operator). Band values are bit-for-bit the batch ones —
+tests/test_lsh_stream.py checks them against
+suite_queries.dedup_minhash_signatures, and the stream's pairs
+against the batch operator, on the same corpus.
 
 Reference: the engine-side analogue of great_expectations
 expect_column_values_to_be_unique (core/expect_column_values_to_be_unique.py)
@@ -45,35 +45,40 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..suite_queries import _BANDS, _N_MINHASH
+from ..suite_queries import _BANDS, _N_MINHASH, _spark_shingles_col
 
 _OUT_SCHEMA = "doc_a long, doc_b long, band_idx int, bv string"
 _STATE_SCHEMA = "hub long, n long, members array<long>"
 
 
-def _band_values_col():
-    """array(band0..band3) per row, matching the batch signature
-    pipeline (suite_queries.dedup_minhash_signatures) exactly:
-    3-word shingles -> md5 -> 8 minima of disjoint 4-hex windows ->
-    band = first 12 hex of md5(mh_{2b} || mh_{2b+1})."""
-    words = F.split(F.col("text"), " ")
-    shingles = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(3)),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, F.lit(3))),
+def _band_rows(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, band_idx, bv) for every row of ``docs`` whose ``text``
+    has 3+ tokens, matching the batch signature pipeline
+    (suite_queries.dedup_minhash_signatures) exactly: its 3-word
+    shingles (_spark_shingles_col) -> md5 -> 8 minima of disjoint
+    4-hex windows -> band = first 12 hex of md5(mh_{2b} || mh_{2b+1}).
+
+    The md5 array is its own projection, built once per row before
+    the minima. Inlined, each of the 8 interpreted
+    array_min(transform(..)) calls would re-hash every shingle; Spark
+    keeps the two projections apart because the array is referenced
+    8 times."""
+    hs = docs.where(F.size(F.split(F.col("text"), " ")) >= 3).select(
+        *keep, F.transform(_spark_shingles_col(), F.md5).alias("hs")
     )
-    hs = F.transform(shingles, F.md5)
     mh = [
         F.array_min(
-            F.transform(hs, lambda h: F.substring(h, 4 * j + 1, 4))
+            F.transform("hs", lambda h: F.substring(h, 4 * j + 1, 4))
         )
         for j in range(_N_MINHASH)
     ]
-    return F.array(
+    bands = F.array(
         *[
             F.substring(F.md5(F.concat(mh[2 * b], mh[2 * b + 1])), 1, 12)
             for b in range(_BANDS)
         ]
     )
+    return hs.select(*keep, F.posexplode(bands).alias("band_idx", "bv"))
 
 
 def _make_bucket_fn(cap: int, horizon_ms: int):
@@ -153,15 +158,11 @@ def lsh_candidates_stream(
     within which near-dups matter (e.g. a crawl snapshot).
     """
     horizon_ms = _interval_ms(idle_horizon)
-    bands = (
-        stream.where(F.size(F.split(F.col("text"), " ")) >= 3)
-        .select(
-            "doc_id",
-            F.col(event_time_col).alias("ts"),
-            F.posexplode(_band_values_col()).alias("band_idx", "bv"),
-        )
-        .withWatermark("ts", watermark)
-    )
+    bands = _band_rows(
+        stream.select("doc_id", F.col(event_time_col).alias("ts"), "text"),
+        "doc_id",
+        "ts",
+    ).withWatermark("ts", watermark)
     return bands.groupBy("band_idx", "bv").applyInPandasWithState(
         _make_bucket_fn(bucket_cap, horizon_ms),
         _OUT_SCHEMA,

@@ -1920,6 +1920,98 @@ def embedding_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- similarity search over embeddings --------------------------------------
+# One kernel per step of the vector-search family; the registered
+# queries, ann_recall and expect_ann_recall_to_be_greater_than
+# (operators/ann_gate.py) all compose them. Frames use fixed names:
+# candidates (nid, v[, bid]), queries (qid, qv), centroids (bid, cvec).
+#   cosine_topk     exact cosine top-k, optionally within equal `bid`
+#   ivf_topk        probe the nearest `nprobe` centroids, then rank
+#                   inside those buckets with cosine_topk
+#   kmeans_buckets  learned buckets: seeded fixed-iteration Lloyd
+#   recall_counts   ANN rows vs the exact top-k, counted in one agg
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> Tuple[DataFrame, DataFrame]:
+    """The vector-search inputs over `embeddings`: the corpus as
+    (nid, v, bid), v the embedding as doubles and bid its label, and
+    the query sample (qid, qv), the vectors with vec_id < 10."""
+    base = _t(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.col("label").alias("bid"),
+    )
+    q = base.where(F.col("nid") < 10).select(
+        F.col("nid").alias("qid"), F.col("v").alias("qv")
+    )
+    return base, q
+
+
+def _norm(col: str) -> Column:
+    return F.sqrt(_vec_dot(F.col(col), F.col(col)))
+
+
+def _normed_queries(queries: DataFrame) -> DataFrame:
+    """The broadcast query side with its norm: every kernel that
+    scores queries builds this same frame, so a plan that ranks one
+    sample several times broadcasts (and scans) it once. A NULL norm
+    (NULL vector or element) would score NULL against everything, so
+    such a query is dropped here rather than by each ranking's
+    inferred filter, which would make the broadcasts differ."""
+    q = queries.withColumn("qnorm", _norm("qv"))
+    return F.broadcast(q.where(F.col("qnorm").isNotNull()))
+
+
+def _normed_cos(col: str, norm: str) -> Column:
+    """_vec_cos(qv, col) with both norms precomputed: the same float64
+    expression, so bit-identical sims. try_divide for the same
+    dead-vector reason as _vec_cos."""
+    return F.try_divide(
+        _vec_dot(F.col("qv"), F.col(col)), F.col("qnorm") * F.col(norm)
+    )
+
+
+def cosine_topk(
+    cand: DataFrame, queries: DataFrame, k: int, key: Optional[str] = None
+) -> DataFrame:
+    """(qid, [key,] nid, sim, rank): the exact cosine top-k candidates
+    of every query, itself excluded. The query side is tiny and
+    broadcast; without `key` each query scores every candidate (one
+    corpus pass), with it only the candidates whose `key` equals the
+    query's (its probed bucket). Dot products run as JVM array
+    expressions — no Python.
+
+    Norms are hoisted out of the pair join (_normed_cos): each is
+    computed once per row, not once per (row, query) pair. Dead
+    (zero-norm) vectors score NULL via try_divide and are dropped
+    BEFORE ranking, so they never occupy a top-k slot on a corpus with
+    fewer than k live candidates. Ties go to the lower nid."""
+    c = cand.withColumn("cnorm", _norm("v"))
+    q = _normed_queries(queries)
+    pairs = c.crossJoin(q) if key is None else c.join(q, key)
+    scored = pairs.where(F.col("nid") != F.col("qid")).select(
+        "qid",
+        *([key] if key else []),
+        "nid",
+        _normed_cos("v", "cnorm").alias("sim"),
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
+    return (
+        scored.where(F.col("sim").isNotNull())
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _topk_rows(top: DataFrame, bucket: Optional[str] = None) -> DataFrame:
+    """A kernel top-k under the registered queries' column names, sim
+    rounded to 6 decimals; `bucket` names the probed bid column."""
+    return top.select(
+        F.col("qid").alias("query_id"),
+        *([F.col("bid").alias(bucket)] if bucket else []),
+        F.col("nid").alias("neighbor_id"),
+        F.round("sim", 6).alias("sim"),
+        "rank",
+    )
 
 
 @register(
@@ -1941,54 +2033,16 @@ def embedding_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k (the exact baseline for ANN): the
-    query side is tiny and broadcast; the corpus is scanned once.
-    Dot products run as JVM array expressions — no Python."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-
-    # norms hoisted out of the crossJoin (see _kmeans_assign): the
-    # corpus norm is computed once per row, not once per (row, query)
-    q = q.withColumn("qnorm", F.sqrt(_vec_dot(F.col("qv"), F.col("qv"))))
-    c = c.withColumn("cnorm", F.sqrt(_vec_dot(F.col("cv"), F.col("cv"))))
-    # try_divide for the same dead-vector reason as _vec_cos
-    sim = F.try_divide(
-        _vec_dot(F.col("qv"), F.col("cv")),
-        F.col("qnorm") * F.col("cnorm"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("full_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("full_sim"), F.asc("neighbor_id")
-    )
-    return (
-        # dead (zero-norm) vectors score NULL sim via try_divide; drop
-        # them BEFORE ranking so they can never occupy a top-k slot on
-        # a tiny corpus with fewer than k live candidates
-        scored.where(F.col("full_sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("full_sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    """Brute-force cosine top-5 (the exact baseline for ANN):
+    cosine_topk with no bucket key, so the corpus is scanned once
+    against the broadcast query sample."""
+    base, q = _emb(spark, sf_dir)
+    return _topk_rows(cosine_topk(base, q, 5))
 
 
 def _ivf_centroids(e: DataFrame) -> DataFrame:
-    """Mean embedding per label WITHOUT exploding vectors to rows.
+    """(bid, cvec): the mean vector of each bucket of `e` (bid, v),
+    WITHOUT exploding vectors to rows.
 
     The previous build posexploded every vector (n x d Generate rows
     streaming through a hash agg; the shuffle itself was already
@@ -2016,8 +2070,8 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
         for pdf in batches:
             if len(pdf) and pid < 0:
                 pid = int(pdf["pid"].iloc[0])
-            for lab, grp in pdf.groupby("label"):
-                m = np.stack(grp["embedding"].values).astype("float64")
+            for lab, grp in pdf.groupby("bid"):
+                m = np.stack(grp["v"].values).astype("float64")
                 if lab in sums:
                     sums[lab] += m.sum(axis=0)
                     counts[lab] += len(m)
@@ -2027,7 +2081,7 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
         if sums:
             yield pd.DataFrame(
                 {
-                    "label": pd.array(list(sums), dtype="Int32"),
+                    "bid": pd.array(list(sums), dtype="Int32"),
                     "salt": pd.array(
                         [pid % 64] * len(sums), dtype="Int32"
                     ),
@@ -2039,10 +2093,9 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
             )
 
     part = (
-        e.select(
-            "label", "embedding", F.spark_partition_id().alias("pid")
-        ).mapInPandas(
-            partials, "label int, salt int, psum array<double>, pn long"
+        e.select("bid", "v", F.spark_partition_id().alias("pid"))
+        .mapInPandas(
+            partials, "bid int, salt int, psum array<double>, pn long"
         )
     )
     def fold_sum(col):
@@ -2059,22 +2112,46 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
             lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
         )
 
-    lvl1 = part.groupBy("label", "salt").agg(
+    lvl1 = part.groupBy("bid", "salt").agg(
         fold_sum(F.col("psum")).alias("psum"), F.sum("pn").alias("pn")
     )
     return (
-        lvl1.groupBy("label")
+        lvl1.groupBy("bid")
         .agg(
             fold_sum(F.col("psum")).alias("sumvec"),
             F.sum("pn").alias("n"),
         )
         .select(
-            "label",
+            "bid",
             F.transform(
                 F.col("sumvec"), lambda s: s / F.col("n")
             ).alias("cvec"),
         )
     )
+
+
+def ivf_topk(
+    cand: DataFrame, queries: DataFrame, cent: DataFrame, nprobe: int, k: int
+) -> DataFrame:
+    """(qid, bid, nid, sim, rank): IVF search. Each query probes its
+    `nprobe` max-cosine centroids (ties go to the lower bid), then
+    cosine_topk ranks only the candidates of those buckets: the
+    probed queries are broadcast, so the corpus side is bucket-pruned
+    and shuffle-free up to the ranking. The probe itself broadcasts
+    the queries, not the centroids, so it shares one query broadcast
+    with every other kernel that ranks the same sample. Candidates
+    carry one bid each, so a neighbor matches at most one probed
+    bucket and no dedup is needed before the top-k."""
+    w = Window.partitionBy("qid").orderBy(F.desc("csim"), F.asc("bid"))
+    probed = (
+        cent.withColumn("cnorm", _norm("cvec"))
+        .crossJoin(_normed_queries(queries))
+        .withColumn("csim", _normed_cos("cvec", "cnorm"))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= nprobe)
+        .select("qid", "qv", "bid")
+    )
+    return cosine_topk(cand, probed, k, "bid")
 
 
 @register(
@@ -2120,73 +2197,16 @@ def _ivf_centroids(e: DataFrame) -> DataFrame:
     QUALIFY rank <= 3
     """,
 )
-
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: k-means-free centroids (mean embedding per
     `label` cluster, built by _ivf_centroids without exploding
-    vectors), probe the single best cluster, exact top-k inside it.
+    vectors), probe the single best cluster, exact top-3 inside it.
     At scale: centroids are a broadcast table and the corpus is
     bucketed by cluster id, so each query touches one bucket instead
     of the full corpus."""
-    e = _t(spark, sf_dir, "embeddings")
-    cent = _ivf_centroids(e)
-
-
-    q = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w_assign = Window.partitionBy("query_id").orderBy(
-        F.desc("csim"), F.asc("label")
-    )
-    assigned = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            "label",
-            _vec_cos(F.col("qv"), F.col("cvec")).alias("csim"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") == 1)
-        .select("query_id", "qv", F.col("label").alias("assigned_label"))
-    )
-    cand = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    scored = (
-        cand.join(
-            F.broadcast(assigned),
-            (F.col("label") == F.col("assigned_label"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "assigned_label",
-            "neighbor_id",
-            _vec_cos(F.col("qv"), F.col("cv")).alias("full_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("full_sim"), F.asc("neighbor_id")
-    )
-    return (
-        # dead (zero-norm) vectors score NULL sim via try_divide; drop
-        # them BEFORE ranking so they can never occupy a top-k slot on
-        # a tiny corpus with fewer than k live candidates
-        scored.where(F.col("full_sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            "assigned_label",
-            "neighbor_id",
-            F.round("full_sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    base, q = _emb(spark, sf_dir)
+    top = ivf_topk(base, q, _ivf_centroids(base), 1, 3)
+    return _topk_rows(top, "assigned_label")
 
 
 @register(
@@ -2233,68 +2253,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe IVF ANN: same centroid build and bucketed probe as
-    ann_ivf_topk, but each query scans its TWO nearest buckets —
-    the standard recall fix for queries that land near a Voronoi
-    boundary (their true neighbors straddle two cells). Cost stays
-    bounded at 2/K of the corpus per query instead of 1/K; the probe
-    set is still a broadcast, and every neighbor's label matches at
-    most one probed bucket so no dedup pass is needed before the
-    global top-k."""
-    e = _t(spark, sf_dir, "embeddings")
-    cent = _ivf_centroids(e)
-    q = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    w_assign = Window.partitionBy("query_id").orderBy(
-        F.desc("csim"), F.asc("label")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qv",
-            "label",
-            _vec_cos(F.col("qv"), F.col("cvec")).alias("csim"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") <= 2)
-        .select("query_id", "qv", F.col("label").alias("probe_label"))
-    )
-    cand = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    scored = cand.join(
-        F.broadcast(probed),
-        (F.col("label") == F.col("probe_label"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        "probe_label",
-        "neighbor_id",
-        _vec_cos(F.col("qv"), F.col("cv")).alias("full_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("full_sim"), F.asc("neighbor_id")
-    )
-    return (
-        # dead (zero-norm) vectors score NULL sim via try_divide; drop
-        # them BEFORE ranking so they can never occupy a top-k slot on
-        # a tiny corpus with fewer than k live candidates
-        scored.where(F.col("full_sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            "probe_label",
-            "neighbor_id",
-            F.round("full_sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    """Multi-probe IVF ANN: ann_ivf_topk with each query scanning its
+    TWO nearest buckets — the standard recall fix for queries that
+    land near a Voronoi boundary (their true neighbors straddle two
+    cells). Cost stays bounded at 2/K of the corpus per query instead
+    of 1/K."""
+    base, q = _emb(spark, sf_dir)
+    top = ivf_topk(base, q, _ivf_centroids(base), 2, 3)
+    return _topk_rows(top, "probe_label")
 
 
 # --- label-free ANN: deterministic k-means|| -style bucketing ---------------
@@ -2311,52 +2277,70 @@ _KMEANS_ITERS = 2
 
 
 def _kmeans_assign(ev: DataFrame, cent: DataFrame) -> DataFrame:
-    """Assign every vector to its max-cosine centroid (ties -> lowest
-    cid). Centroids are a broadcast K-row table, so the crossJoin is
-    row-local (BroadcastNestedLoop over K rows, no shuffle of the
-    corpus); the argmax is a map-side-combined max(struct) hash agg —
-    one slim (vec_id, v, cid) row per vector crosses the wire."""
-    # hoist norms OUT of the crossJoin: _vec_cos inline would
-    # recompute the vector norm K times per vector and the centroid
-    # norm once per corpus row; higher-order array expressions are
-    # interpreter-evaluated, so those redundant dot products are the
-    # assignment's dominant cost. sqrt(dot(x,x))*sqrt(dot(y,y)) is the
-    # same float64 expression either way — bit-identical sims.
-    evn = ev.withColumn("vnorm", F.sqrt(_vec_dot(F.col("v"), F.col("v"))))
-    centn = cent.withColumn(
-        "cnorm", F.sqrt(_vec_dot(F.col("cvec"), F.col("cvec")))
-    )
+    """(nid, v, bid): every vector of `ev` (nid, v) assigned to its
+    max-cosine centroid (ties -> lowest bid). Centroids are a
+    broadcast K-row table, so the crossJoin is row-local
+    (BroadcastNestedLoop over K rows, no shuffle of the corpus); the
+    argmax is a map-side-combined max(struct) hash agg — one slim
+    (nid, v, bid) row per vector crosses the wire. Norms are hoisted
+    as in cosine_topk: higher-order array expressions are
+    interpreter-evaluated, so redundant dot products would be the
+    assignment's dominant cost."""
+    evn = ev.withColumn("vnorm", _norm("v"))
+    centn = cent.withColumn("cnorm", _norm("cvec"))
     scored = evn.crossJoin(F.broadcast(centn)).select(
-        "vec_id",
+        "nid",
         "v",
-        "cid",
+        "bid",
         F.try_divide(
             _vec_dot(F.col("v"), F.col("cvec")),
             F.col("vnorm") * F.col("cnorm"),
         ).alias("sim"),
     )
-    best = scored.groupBy("vec_id").agg(
+    best = scored.groupBy("nid").agg(
         F.max(
-            F.struct(F.col("sim"), (-F.col("cid")).alias("ncid"))
+            F.struct(F.col("sim"), (-F.col("bid")).alias("nbid"))
         ).alias("m"),
         F.first("v").alias("v"),
     )
     return best.select(
-        "vec_id", "v", (-F.col("m.ncid")).cast("int").alias("cid")
+        "nid", "v", (-F.col("m.nbid")).cast("int").alias("bid")
     )
 
 
 def _kmeans_update(assigned: DataFrame) -> DataFrame:
-    """New centroids = per-cluster mean, via the same
-    no-vector-explosion machinery as _ivf_centroids (mapInPandas
-    numpy partials + salted two-level fold), rounded to 9 decimals."""
-    cent = _ivf_centroids(
-        assigned.select(F.col("cid").alias("label"), F.col("v").alias("embedding"))
-    )
-    return cent.select(
-        F.col("label").alias("cid"),
+    """New centroids = per-bucket mean (_ivf_centroids), rounded to 9
+    decimals."""
+    return _ivf_centroids(assigned).select(
+        "bid",
         F.transform(F.col("cvec"), lambda x: F.round(x, 9)).alias("cvec"),
     )
+
+
+def kmeans_buckets(
+    cand: DataFrame, k: int, iters: int
+) -> Tuple[DataFrame, DataFrame]:
+    """Learned IVF buckets for candidates (nid, v): `iters` Lloyd
+    assignments seeded with the k lowest-nid vectors. Returns
+    (assigned (nid, v, bid), cent (bid, cvec)): the final assignment
+    and the centroids it was made against, so ivf_topk over them with
+    nprobe=1 probes each corpus query's own bucket. The last update's
+    centroids would never be consumed, so they are never built."""
+    ev = cand.select("nid", "v")
+    w0 = Window.orderBy("nid")
+    cent = (
+        ev.orderBy("nid")
+        .limit(k)
+        .select(
+            (F.row_number().over(w0) - 1).cast("int").alias("bid"),
+            F.col("v").alias("cvec"),
+        )
+    )
+    for i in range(iters):
+        assigned = _kmeans_assign(ev, cent)
+        if i < iters - 1:
+            cent = _kmeans_update(assigned)
+    return assigned, cent
 
 
 def _kmeans_duck_assign(cent_cte: str) -> str:
@@ -2412,78 +2396,15 @@ _KMEANS_DUCK_UPDATE = """
 )
 def ann_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-contained ANN over an UNLABELED corpus: learn IVF buckets
-    with deterministic fixed-iteration k-means (seed = the K lowest
-    vec_ids' vectors — the reproducible stand-in for k-means||
-    oversampling), assign every vector, then probe the query's
-    cluster for exact top-k. Per Lloyd iteration the corpus moves
-    through one broadcast crossJoin (row-local) and one slim
-    map-side-combined argmax shuffle; centroid means come from the
-    mapInPandas partial machinery (_ivf_centroids) — no n x d row
-    explosion anywhere. A production run would persist the final
-    assignment as the IVF index; this query keeps it lazy so the
-    oracle can mirror the whole dataflow."""
-    e = _t(spark, sf_dir, "embeddings")
-    ev = e.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    w0 = Window.orderBy("vec_id")
-    cent = (
-        ev.orderBy("vec_id")
-        .limit(_KMEANS_K)
-        .select(
-            (F.row_number().over(w0) - 1).cast("int").alias("cid"),
-            F.col("v").alias("cvec"),
-        )
-    )
-    # loop: a1 = assign(c0), c1 = update(a1), a2 = assign(c1) —
-    # `assigned` ends as a2, matching the oracle's a2 CTE; the last
-    # update's centroids are never consumed and never execute
-    assigned = None
-    for i in range(_KMEANS_ITERS):
-        assigned = _kmeans_assign(ev, cent)
-        if i < _KMEANS_ITERS - 1:
-            cent = _kmeans_update(assigned)
-    q = assigned.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("cid").alias("qcid"),
-    )
-    cand = assigned.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cid"),
-        F.col("v").alias("cv"),
-    )
-    scored = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("cid") == F.col("qcid"))
-            & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("qcid").alias("assigned_cid"),
-            "neighbor_id",
-            _vec_cos(F.col("qv"), F.col("cv")).alias("full_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("full_sim"), F.asc("neighbor_id")
-    )
-    return (
-        # dead (zero-norm) vectors score NULL sim via try_divide; drop
-        # them BEFORE ranking so they can never occupy a top-k slot on
-        # a tiny corpus with fewer than k live candidates
-        scored.where(F.col("full_sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select(
-            "query_id",
-            "assigned_cid",
-            "neighbor_id",
-            F.round("full_sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    with kmeans_buckets (seed = the K lowest vec_ids' vectors — the
+    reproducible stand-in for k-means|| oversampling), then probe the
+    query's bucket for exact top-3. No n x d row explosion anywhere.
+    A production run would persist the final assignment as the IVF
+    index; this query keeps it lazy so the oracle can mirror the
+    whole dataflow."""
+    base, q = _emb(spark, sf_dir)
+    cand, cent = kmeans_buckets(base, _KMEANS_K, _KMEANS_ITERS)
+    return _topk_rows(ivf_topk(cand, q, cent, 1, 3), "assigned_cid")
 
 
 # --- ANN recall accounting ---------------------------------------------------
@@ -2491,6 +2412,27 @@ def ann_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top-k ships with a measured recall@k against the exact brute-force
 # baseline, so a bucketing change that quietly destroys recall fails
 # parity/monotonicity checks instead of shipping. One row per method.
+
+
+def recall_counts(ann: DataFrame, exact: DataFrame, *by: str) -> DataFrame:
+    """(*by, queries, returned, hits, exact_neighbors): per `by` group
+    of the ANN rows (qid, nid), the queries that returned rows, the
+    rows, and the rows that are also in the exact top-k (qid, nid);
+    exact_neighbors is the size of the exact set. The exact set is
+    queries x k rows; its hit join and its count read one ranking
+    exchange, so the exact pass runs once without a checkpoint."""
+    hit = exact.select("qid", "nid", F.lit(1).alias("hit"))
+    n = exact.agg(F.count(F.lit(1)).alias("exact_neighbors"))
+    return (
+        ann.join(F.broadcast(hit), ["qid", "nid"], "left")
+        .groupBy(*by)
+        .agg(
+            F.countDistinct("qid").alias("queries"),
+            F.count(F.lit(1)).alias("returned"),
+            F.count("hit").alias("hits"),
+        )
+        .crossJoin(F.broadcast(n))
+    )
 
 
 def _ann_recall_duck() -> str:
@@ -2538,61 +2480,35 @@ def _ann_recall_duck() -> str:
 @register("ann_recall", _ann_recall_duck())
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@3 of each ANN variant (ivf single-probe, multi-probe,
-    label-free k-means) against the exact brute-force top-3
-    (embedding_cosine_topk rank<=3). The exact set per query is tiny
-    and broadcast; each ANN result LEFT-joins it and one hash agg per
-    method counts hits — no extra corpus scan beyond what the four
-    underlying queries already do. At 100 TB this runs on a sampled
-    query set exactly as here (10 queries), so cost is bounded by the
-    ANN probes themselves."""
-    # the exact baseline feeds TWO plan branches (the hit join and
-    # the denominator agg); localCheckpoint it so the brute-force
-    # corpus crossJoin executes once, not once per branch (the same
-    # single-execution pattern as _cluster_keep_table). It is tiny:
-    # queries x k rows.
-    exact3 = (
-        embedding_cosine_topk(spark, sf_dir)
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-        .localCheckpoint()
-    )
-    methods = [
-        ("ivf", ann_ivf_topk),
-        ("multiprobe", ann_multiprobe_topk),
-        ("kmeans", ann_kmeans_topk),
+    label-free k-means) against the exact brute-force top-3. One base
+    frame feeds every kernel: the label centroids and the query
+    sample are built once for ivf and multiprobe, and recall_counts
+    counts all three methods in one agg. At 100 TB this runs on a
+    sampled query set exactly as here (10 queries), so cost is
+    bounded by the ANN probes themselves."""
+    base, q = _emb(spark, sf_dir)
+    cent = _ivf_centroids(base)
+    kcand, kcent = kmeans_buckets(base, _KMEANS_K, _KMEANS_ITERS)
+    runs = [
+        ("ivf", base, cent, 1),
+        ("multiprobe", base, cent, 2),
+        ("kmeans", kcand, kcent, 1),
     ]
-    un = None
-    for name, fn in methods:
-        d = fn(spark, sf_dir).select(
-            F.lit(name).alias("method"), "query_id", "neighbor_id"
+    ann = None
+    for name, cand, c, nprobe in runs:
+        d = ivf_topk(cand, q, c, nprobe, 3).select(
+            F.lit(name).alias("method"), "qid", "nid"
         )
-        un = d if un is None else un.unionByName(d)
-    exact_n = exact3.agg(
-        F.count(F.lit(1)).cast("bigint").alias("exact_neighbors")
-    )
-    return (
-        un.join(F.broadcast(exact3), ["query_id", "neighbor_id"], "left")
-        .groupBy("method")
-        .agg(
-            F.countDistinct("query_id").cast("bigint").alias("queries"),
-            F.count(F.lit(1)).cast("bigint").alias("returned"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("hits"),
-        )
-        .crossJoin(F.broadcast(exact_n))
-        .select(
-            "method",
-            "queries",
-            "returned",
-            "hits",
-            "exact_neighbors",
-            # try_divide: a method with zero exact neighbors (tiny
-            # or degenerate corpus) reports NULL recall, not a crash
-            F.round(
-                F.try_divide("hits", "exact_neighbors"), 4
-            ).alias("recall"),
-        )
+        ann = d if ann is None else ann.unionByName(d)
+    return recall_counts(ann, cosine_topk(base, q, 3), "method").select(
+        "method",
+        "queries",
+        "returned",
+        "hits",
+        "exact_neighbors",
+        # try_divide: a method with zero exact neighbors (tiny or
+        # degenerate corpus) reports NULL recall, not a crash
+        F.round(F.try_divide("hits", "exact_neighbors"), 4).alias("recall"),
     )
 
 
@@ -4184,10 +4100,13 @@ def segment_instances(
 def segment_dup_counts(inst: DataFrame, *by: str) -> DataFrame:
     """(*by, segs, dups) from segment_instances rows: instances per
     ``by`` group, and those whose hash occurs in at least two rows
-    (within-row repetition never counts)."""
-    nrows = inst.groupBy("h").agg(F.count(F.lit(1)).alias("nrows"))
+    (within-row repetition never counts). The rows per hash are a
+    window count over the instances, not a join with their own
+    per-hash agg: pruning makes the two branches of such a join
+    differ, so they share no exchange and the input is read twice."""
+    nrows = F.count(F.lit(1)).over(Window.partitionBy("h"))
     return (
-        inst.join(nrows, "h")
+        inst.withColumn("nrows", nrows)
         .groupBy(*by)
         .agg(
             F.sum("c").alias("segs"),
@@ -4264,13 +4183,11 @@ def segment_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     only when >= 2 distinct docs carry it.
 
     100 TB shape: segment_instances + segment_dup_counts, the kernels
-    expect_column_duplicate_segment_rate_to_be_between also calls:
-    two hash aggs on 16-byte keys joined on the hash. The two
-    branches share NO exchange — pruning empties the docs-per-hash
-    branch's (hash, doc) agg functions, so the tokenize/explode/md5
-    scan runs twice (the final plan reads `text` in two of its three
-    FileScans). No window, no sort, no driver state; the per-source
-    report is a ~|sources|-row final agg. The reference has no corpus-dedup
+    expect_column_duplicate_segment_rate_to_be_between also calls: a
+    hash agg on (16-byte hash, doc) keys, then a per-hash window count
+    over its output, so `text` is tokenized, exploded and hashed in
+    one FileScan. No driver state; the per-source report is a
+    ~|sources|-row final agg. The reference has no corpus-dedup
     audit; expectation-parity anchor for the accounting style:
     unexpected-count fractions in map metrics
     (great_expectations/expectations/metrics/map_metric_provider.py).

@@ -313,9 +313,10 @@ def test_split_leakage_rate_expectation(spark):
 
 @pytest.fixture(scope="module")
 def fuzz_dir(spark, tmp_path_factory):
-    """The differential fuzz gate's seed-11 corpus, so its adversarial
-    shapes reach each expectation's own rate arithmetic."""
-    from test_oracle_fuzz import _gen_corpus
+    """The differential fuzz gate's seed-11 corpora (documents and
+    embeddings), so its adversarial shapes reach each expectation's
+    own rate arithmetic."""
+    from test_oracle_fuzz import _gen_corpus, _gen_embeddings
 
     d = str(tmp_path_factory.mktemp("fuzz11"))
     spark.createDataFrame(
@@ -323,6 +324,9 @@ def fuzz_dir(spark, tmp_path_factory):
         "doc_id long, text string, lang string, source string,"
         " n_chars long",
     ).coalesce(3).write.mode("overwrite").parquet(d + "/documents.parquet")
+    spark.createDataFrame(
+        _gen_embeddings(11), "vec_id long, embedding array<float>, label int"
+    ).coalesce(3).write.mode("overwrite").parquet(d + "/embeddings.parquet")
     return d
 
 
@@ -413,6 +417,33 @@ def _gate_agrees(spark, sf_dir, docs):
     return "expect_image_metadata_to_pass_quality_gate", frame, exp, check
 
 
+def _ann_agrees(method, row):
+    """expect_ann_recall_to_be_greater_than(method=...) against the
+    ann_recall query's `row`: same queries (the 10 smallest ids are
+    vec_id < 10 on both corpora), same counts, same recall."""
+
+    def family(spark, sf_dir, docs):
+        frame = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        exp = dict(
+            min_recall=0.0, method=method, k=3, n_queries=10,
+            kmeans_k=sq._KMEANS_K, kmeans_iters=sq._KMEANS_ITERS,
+        )
+        audit = {
+            r.method: r for r in sq.ann_recall(spark, sf_dir).collect()
+        }[row]
+
+        def check(r):
+            d = r.result["details"]
+            assert (d["returned"], d["hits"], d["exact_neighbors"]) == (
+                audit.returned, audit.hits, audit.exact_neighbors,
+            )
+            assert r.result["observed_value"] == audit.recall
+
+        return "expect_ann_recall_to_be_greater_than", frame, exp, check
+
+    return family
+
+
 def _assert_agrees(spark, family, sf_dir):
     import great_expectations_spark as ges
 
@@ -434,6 +465,8 @@ _FAMILIES = {
     "phash": _phash_agrees,
     "segment": _segment_agrees,
     "gate": _gate_agrees,
+    "ann_bucket": _ann_agrees("bucket", "ivf"),
+    "ann_kmeans": _ann_agrees("kmeans", "kmeans"),
 }
 
 
@@ -450,8 +483,8 @@ _FAMILIES = {
 def test_expectation_matches_audit_query(spark, fuzz_dir, family, corpus):
     """Each declarative face and its oracle-gated audit query agree
     on the same documents: the expectation's totals equal the query's
-    rows summed (leakage, segment, gate) or its distinct pair ids
-    (phash)."""
+    rows summed (leakage, segment, gate), its distinct pair ids
+    (phash) or its row for the same ANN method (ann_*)."""
     _assert_agrees(spark, family, SF if corpus == "sf0.001" else fuzz_dir)
 
 

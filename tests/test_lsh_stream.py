@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from great_expectations_spark import suite_queries as sq
 from great_expectations_spark.streaming.lsh_stream import (
-    _band_values_col,
+    _band_rows,
     _interval_ms,
     lsh_candidates_stream,
 )
@@ -70,10 +70,7 @@ def test_stream_bands_match_batch_signatures(spark, tmp_path):
     }
     stream_vals = {
         (r.doc_id, r.band_idx): r.bv
-        for r in df.select(
-            "doc_id",
-            F.posexplode(_band_values_col()).alias("band_idx", "bv"),
-        ).collect()
+        for r in _band_rows(df, "doc_id").collect()
     }
     assert stream_vals == batch
 

@@ -197,3 +197,56 @@ def test_unigram_lm_caches_counts_and_broadcasts_model(spark):
     # as broadcasts; token-level rows are never shuffled to a join
     assert "BroadcastHashJoin" in tree and "LeftOuter" in tree
     assert "SortMergeJoin" not in tree and "Python" not in tree
+
+
+# --- scan allow-list -----------------------------------------------------------
+# Parquet FileScans in each query's final AQE plan at sf0.001, and the
+# reason for every scan past the first. The query sample (vec_id < 10)
+# is a filter pushed into its own scan; a FileScan is never shared,
+# only an exchange above it is.
+_SCAN_ALLOWED = {
+    "embedding_cosine_topk": (2, "corpus + query sample"),
+    "ann_ivf_topk": (3, "corpus + query sample + label-centroid build"),
+    "ann_multiprobe_topk": (
+        3, "corpus + query sample + label-centroid build"
+    ),
+    "ann_kmeans_topk": (
+        4, "query sample + k-means seed (sort-limit) + one corpus pass"
+        " per Lloyd assignment (2)",
+    ),
+    "ann_recall": (
+        8, "exact corpus pass + one query sample, broadcast to every"
+        " ranking + ivf and multiprobe each join the corpus to their"
+        " own probes + one label-centroid build + k-means seed and 2"
+        " assignment passes",
+    ),
+    "segment_dedup_stats": (
+        2, "text for the segments + source alone for docs per source"
+    ),
+}
+
+
+def _final_scans(df):
+    """(FileScan column lists, localCheckpoint scan count) of the
+    final AQE plan, after running `df`."""
+    import re
+
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    cols = [
+        {c.split("#")[0] for c in m.split(",")}
+        for m in re.findall(r"FileScan parquet \[([^\]]*)\]", final)
+    ]
+    return cols, final.count("Scan ExistingRDD")
+
+
+def test_scan_allow_list(spark):
+    for name, (allowed, reason) in _SCAN_ALLOWED.items():
+        cols, checkpoints = _final_scans(getattr(sq, name)(spark, SF))
+        assert len(cols) <= allowed, (name, len(cols), reason)
+        assert checkpoints == 0, name
+        if name == "segment_dedup_stats":
+            # tokenize/explode/md5 runs once: one scan reads `text`
+            assert sum("text" in c for c in cols) == 1, cols
