@@ -39,8 +39,23 @@ from typing import Any, Dict, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, ShortType, StructType
 
 from .checks import JobCheck, MetricCache
+
+
+def _check_bucket_type(schema: StructType, bucket_column: str) -> None:
+    """The bucket probe carries labels as `bid int` (_ivf_centroids),
+    so only byte, short and int label columns are accepted."""
+    if bucket_column not in schema.fieldNames():
+        return  # left to Spark's own unresolved-column error
+    dtype = schema[bucket_column].dataType
+    if not isinstance(dtype, (ByteType, ShortType, IntegerType)):
+        raise ValueError(
+            f"bucket_column {bucket_column!r} has type "
+            f"{dtype.simpleString()}; the bucket method needs a byte, "
+            "short or int label column"
+        )
 
 
 def ann_recall_at_k(
@@ -63,6 +78,8 @@ def ann_recall_at_k(
 
     if method not in ("bucket", "kmeans"):
         raise ValueError(f"unknown ANN method {method!r}")
+    if method == "bucket":
+        _check_bucket_type(df.schema, bucket_column)
     base = df.select(
         F.col(id_column).alias("nid"),
         F.col(embedding_column).cast("array<double>").alias("v"),
@@ -106,22 +123,33 @@ def compile_ann_recall_greater_than(index, cfg, schema) -> JobCheck:
     ('bucket'|'kmeans'), k, id_column, embedding_column,
     bucket_column, query_ids | n_queries, kmeans_k, kmeans_iters.
     A sample with zero live exact neighbors fails (recall None):
-    a gate that cannot measure must not pass."""
+    a gate that cannot measure must not pass. A kmeans_iters below 1,
+    or a bucket_column that is not byte, short or int, fails to
+    compile with a ValueError."""
+    from .. import suite_queries as sq
+
     kw = cfg.kwargs
     min_recall = float(kw["min_recall"])
+    method = kw.get("method", "bucket")
+    bucket_column = kw.get("bucket_column", "label")
+    kmeans_iters = int(kw.get("kmeans_iters", 2))
+    if method == "bucket":
+        _check_bucket_type(schema, bucket_column)
+    elif method == "kmeans":
+        sq.check_kmeans_iters(kmeans_iters)
 
     def run(df: DataFrame, stats: Dict[str, Any], cache: MetricCache):
         out = ann_recall_at_k(
             df,
             id_column=kw.get("id_column", "vec_id"),
             embedding_column=kw.get("embedding_column", "embedding"),
-            bucket_column=kw.get("bucket_column", "label"),
-            method=kw.get("method", "bucket"),
+            bucket_column=bucket_column,
+            method=method,
             k=int(kw.get("k", 3)),
             query_ids=kw.get("query_ids"),
             n_queries=int(kw.get("n_queries", 10)),
             kmeans_k=int(kw.get("kmeans_k", 8)),
-            kmeans_iters=int(kw.get("kmeans_iters", 2)),
+            kmeans_iters=kmeans_iters,
         )
         recall = out["recall"]
         success = recall is not None and recall > min_recall

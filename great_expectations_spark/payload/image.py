@@ -14,18 +14,19 @@ additions for the image+caption table (BASELINE.json north_star):
                                                lossy-codec PSNR needs a
                                                real decoder — see codec)
 
-All run as pandas UDFs over Arrow batches (never per-row Python), and
-are compiled as MapChecks so their counts and bounded violation
-samples fuse into the suite's single per-partition pass, where each
-payload is decoded once. Columns are pruned so suites WITHOUT payload
-checks never read `bytes`.
+All run as Arrow UDFs over the batch kernels of payload/codec.py
+(never per-row Python, never a pandas conversion), and are compiled
+as MapChecks so their counts and bounded violation samples fuse into
+the suite's single per-partition pass, where each payload is decoded
+once. Columns are pruned so suites WITHOUT payload checks never read
+`bytes`.
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, Tuple
+from typing import Any, Dict
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,7 +40,7 @@ from pyspark.sql.types import (
 
 from ..operators.checks import MapCheck
 from ..operators.common import decode_single, get_mostly, json_value
-from .codec import decode_image, phash_from_pixels
+from .codec import decode_batch, psnr_batch
 
 
 # Fused single-decode feature extractor: every image check derives its
@@ -58,74 +59,15 @@ _IMAGE_FEATURES_T = StructType(
 )
 
 
-@F.pandas_udf(_IMAGE_FEATURES_T)
-def _image_features(payload: pd.Series) -> pd.DataFrame:
-    """Fused decode + phash over one Arrow batch.
-
-    Header parsing/validation is per row (cheap struct/bytes ops);
-    the pixel math — the actual CPU — is vectorized by stacking all
-    same-shape images of the batch into one (k, h, w) array and
-    computing the 8x8 mean-pool, per-image median threshold, and bit
-    packing as whole-group numpy ops. A web corpus has few distinct
-    decoded shapes per batch (here {8,16,24,32}^2), so this replaces
-    ~6 numpy dispatches per IMAGE with ~6 per GROUP — measured ~4x
-    less Python CPU per scan than the per-row loop it replaced
-    (equivalence is tested against phash_from_pixels, including on
-    shapes not divisible by 8, which fall back to the per-row path).
-    """
-    import numpy as np
-
-    k = len(payload)
-    oks, ws, hs, fmts = [None] * k, [None] * k, [None] * k, [None] * k
-    phs = [None] * k
-    groups: Dict[Tuple[int, int], Tuple[list, list]] = {}
-    for i, b in enumerate(payload):
-        if b is None:
-            continue
-        try:
-            fmt, w, h, px = decode_image(bytes(b))
-        except ValueError:
-            oks[i] = False
-            continue
-        oks[i] = True
-        ws[i] = w
-        hs[i] = h
-        fmts[i] = fmt
-        if h % 8 == 0 and w % 8 == 0:
-            idxs, pxs = groups.setdefault((h, w), ([], []))
-            idxs.append(i)
-            pxs.append(px)
-        else:  # general path, identical math (phash_from_pixels)
-            phs[i] = phash_from_pixels(px)
-    for (h, w), (idxs, pxs) in groups.items():
-        arr = np.stack(pxs)  # (g, h, w) uint8
-        g = arr.shape[0]
-        grid = arr.reshape(g, 8, h // 8, 8, w // 8).mean(axis=(2, 4))
-        flat = grid.reshape(g, 64)
-        med = np.median(flat, axis=1, keepdims=True)
-        bits = (flat > med).astype(np.uint8)
-        packed = np.packbits(bits, axis=1)  # (g, 8) MSB-first
-        vals = (
-            np.frombuffer(packed.tobytes(), dtype=">u8")
-            .astype(np.uint64)
-            .view(np.int64)
-        )
-        for j, i in enumerate(idxs):
-            phs[i] = int(vals[j])
-    # explicit nullable dtypes are load-bearing: an object-dtype
-    # Series that contains a None routes the Arrow conversion through
-    # float64 inference, silently corrupting int64 values above 2^53
-    # (observed on PySpark 4.1: ~512-ulp errors on 62-bit phashes ->
-    # mass false violations, nondeterministic by batch)
-    return pd.DataFrame(
-        {
-            "ok": pd.array(oks, dtype="boolean"),
-            "w": pd.array(ws, dtype="Int32"),
-            "h": pd.array(hs, dtype="Int32"),
-            "fmt": pd.array(fmts, dtype="string"),
-            "phash": pd.array(phs, dtype="Int64"),
-        }
-    )
+@F.arrow_udf(_IMAGE_FEATURES_T)
+def _image_features(payload: pa.Array) -> pa.Array:
+    """Fused decode + phash over one Arrow batch: codec.decode_batch
+    parses every header from the BinaryArray's offsets and data
+    buffers and pools each same-shape group with one phash_batch, so
+    no per-row Python and no pandas conversion runs in the worker.
+    Bit-identical to decode_image + phash_from_pixels per image
+    (tests/test_split_query_media.py)."""
+    return decode_batch(payload)
 
 
 def _image_map_check(
@@ -264,22 +206,9 @@ def compile_pixels_match_reference(index, cfg, schema):
     min_psnr = float(cfg.kwargs.get("min_psnr", 40.0))
     mostly = get_mostly(cfg.kwargs)
 
-    @F.pandas_udf("double")
-    def _psnr_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        from .codec import decode_image as dec, psnr as _psnr
-
-        out = []
-        for pa, pb in zip(a, b):
-            if pa is None or pb is None:
-                out.append(None)
-                continue
-            try:
-                _, _, _, xa = dec(bytes(pa))
-                _, _, _, xb = dec(bytes(pb))
-                out.append(_psnr(xa, xb))
-            except ValueError:
-                out.append(0.0)
-        return pd.Series(out, dtype="float64")
+    @F.arrow_udf("double")
+    def _psnr_pair(a: pa.Array, b: pa.Array) -> pa.Array:
+        return psnr_batch(a, b)
 
     def run(df, stats: Dict[str, Any], cache):
         rf = parse_result_format(

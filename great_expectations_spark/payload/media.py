@@ -131,8 +131,8 @@ def audio_features(payload: pd.Series) -> pd.DataFrame:
         except ValueError:
             oks.append(False); srs.append(None); ns.append(None)
             durs.append(None); rmss.append(None)
-    # explicit nullable dtypes (see payload/image.py: object-dtype
-    # with None corrupts int64 via float64 Arrow inference)
+    # explicit nullable dtypes: an object-dtype Series holding None
+    # goes through float64 Arrow inference and corrupts int64 values
     return pd.DataFrame(
         {
             "ok": pd.array(oks, dtype="boolean"),

@@ -2317,6 +2317,12 @@ def _kmeans_update(assigned: DataFrame) -> DataFrame:
     )
 
 
+def check_kmeans_iters(iters: int) -> None:
+    """k-means needs at least one assignment to return buckets."""
+    if iters < 1:
+        raise ValueError(f"k-means needs iters >= 1, got {iters}")
+
+
 def kmeans_buckets(
     cand: DataFrame, k: int, iters: int
 ) -> Tuple[DataFrame, DataFrame]:
@@ -2326,6 +2332,7 @@ def kmeans_buckets(
     and the centroids it was made against, so ivf_topk over them with
     nprobe=1 probes each corpus query's own bucket. The last update's
     centroids would never be consumed, so they are never built."""
+    check_kmeans_iters(iters)
     ev = cand.select("nid", "v")
     w0 = Window.orderBy("nid")
     cent = (

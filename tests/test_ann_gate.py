@@ -110,3 +110,61 @@ def test_strict_greater_and_unmeasurable_sample(spark):
     ).validate()
     assert not res2.results[0].success
     assert res2.results[0].result["observed_value"] is None
+
+
+def _vectors(spark, label_type):
+    rows = [(i, i % 3, [1.0, float(i), 0.0]) for i in range(12)]
+    return spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<double>"
+    ).selectExpr(
+        "vec_id", f"cast(label as {label_type}) as label", "embedding"
+    )
+
+
+@pytest.mark.parametrize("iters", [0, -1])
+def test_kmeans_iters_below_one_is_an_exception_evr(spark, iters):
+    """k-means with no assignment has no buckets: the gate fails to
+    compile with a ValueError (an exception EVR, no Spark job), and the
+    kernel itself raises the same error."""
+    from great_expectations_spark import suite_queries as sq
+
+    df = _vectors(spark, "int")
+    r = ges.SparkValidator(
+        df,
+        ges.suite("km").expect(
+            "expect_ann_recall_to_be_greater_than",
+            min_recall=0.0, method="kmeans", kmeans_iters=iters,
+        ),
+    ).validate().results[0]
+    assert r.exception_info["raised_exception"]
+    msg = f"k-means needs iters >= 1, got {iters}"
+    assert r.exception_info["exception_message"] == msg
+    base = df.selectExpr("vec_id as nid", "embedding as v")
+    with pytest.raises(ValueError, match="iters >= 1"):
+        sq.kmeans_buckets(base, 2, iters)
+
+
+@pytest.mark.parametrize("label_type", ["string", "bigint"])
+def test_bucket_label_type_is_rejected(spark, label_type):
+    """The bucket probe emits `bid int`: a string or long label column
+    is rejected by the gate compiler with a ValueError naming the type,
+    not left to crash in the Python worker."""
+    df = _vectors(spark, label_type)
+    r = ges.SparkValidator(
+        df,
+        ges.suite("bt").expect(
+            "expect_ann_recall_to_be_greater_than",
+            min_recall=0.0, method="bucket", n_queries=2,
+        ),
+    ).validate().results[0]
+    assert r.exception_info["raised_exception"]
+    assert f"has type {label_type}" in r.exception_info["exception_message"]
+    with pytest.raises(ValueError, match=f"has type {label_type}"):
+        ann_recall_at_k(df, method="bucket", n_queries=2)
+
+
+@pytest.mark.parametrize("label_type", ["tinyint", "smallint"])
+def test_small_int_bucket_labels_are_accepted(spark, label_type):
+    r = ann_recall_at_k(_vectors(spark, label_type), method="bucket",
+                        n_queries=2)
+    assert r["recall"] is not None

@@ -250,3 +250,50 @@ def test_scan_allow_list(spark):
         if name == "segment_dedup_stats":
             # tokenize/explode/md5 runs once: one scan reads `text`
             assert sum("text" in c for c in cols) == 1, cols
+
+
+def test_flagship_suite_decodes_once_per_scan(spark, tmp_path, monkeypatch):
+    """PLANS.md §2: the flagship suite's four image checks share one
+    decode. Its single-pass plan holds exactly one ArrowEvalPython,
+    which evaluates one UDF, and reads `bytes` in one FileScan."""
+    import re
+
+    import bench
+    from pyspark.sql import functions as F
+
+    from great_expectations_spark.data.images import write_images_table
+    from great_expectations_spark.plans import planner as pl
+
+    path = str(tmp_path / "images")
+    write_images_table(spark, path, n_rows=500, seed=1)
+    df = spark.read.parquet(path)
+    plans = []
+    orig_run = pl.run_single_pass
+
+    def run_spy(df_, partials, violation_exprs, **kw):
+        job = df_.groupBy(F.spark_partition_id().alias("__pid")).agg(
+            *[e.alias(a) for a, e in partials.items()], *violation_exprs
+        )
+        qe = job._jdf.queryExecution()
+        plans.append(
+            (qe.optimizedPlan().toString(), qe.executedPlan().toString())
+        )
+        return orig_run(df_, partials, violation_exprs, **kw)
+
+    monkeypatch.setattr(pl, "run_single_pass", run_spy)
+    res = ges.validate(df, bench.image_suite(), result_format="SUMMARY")
+    assert all(
+        not r.exception_info.get("raised_exception") for r in res.results
+    )
+    assert len(plans) == 1
+    optimized, executed = plans[0]
+    evals = re.findall(r"ArrowEvalPython \[([^\]]*)\]", optimized)
+    assert len(evals) == 1, optimized
+    # one evaluated UDF: one "name(args)#id" entry, the fused decode
+    assert len(re.findall(r"\)#\d+", evals[0])) == 1, evals
+    assert evals[0].startswith("_image_features("), evals
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", executed)
+    with_bytes = [
+        s for s in scans if "bytes" in {c.split("#")[0] for c in s.split(",")}
+    ]
+    assert len(with_bytes) == 1, executed

@@ -21,6 +21,45 @@ def test_psnr_math():
     assert psnr(a, b[:8, :]) == 0.0  # shape mismatch
 
 
+def test_psnr_batch_matches_reference():
+    """codec.psnr_batch (the check's Arrow UDF body) equals psnr over
+    decode_image per row: null for a null side, 0.0 for an undecodable
+    side or a shape mismatch, inf for identical pixels, NaN for two
+    empty images; also on a slice with a non-zero offset."""
+    import math
+
+    import pyarrow as pa
+
+    from great_expectations_spark.payload.codec import psnr_batch
+
+    img = [encode_image(i, 8 + i % 3, 16, "png") for i in range(40)]
+    a = img + [None, img[0], b"FIMGbad", img[1], encode_image(1, 0, 5, "png")]
+    b = [encode_image(i + (i % 2), 8 + i % 3, 16, "png") for i in range(40)]
+    b += [img[0], None, img[2], encode_image(1, 16, 8, "png"),
+          encode_image(2, 0, 5, "png")]
+
+    def want(x, y):
+        if x is None or y is None:
+            return None
+        try:
+            return psnr(decode_image(x)[3], decode_image(y)[3])
+        except ValueError:
+            return 0.0
+
+    def same(g, e):
+        return g == e or (isinstance(g, float) and math.isnan(g)
+                          and math.isnan(e))
+
+    pa_a, pa_b = pa.array(a, pa.binary()), pa.array(b, pa.binary())
+    for lo in (0, 7):
+        got = psnr_batch(pa_a.slice(lo), pa_b.slice(lo)).to_pylist()
+        exp = [want(x, y) for x, y in zip(a[lo:], b[lo:])]
+        assert all(same(g, e) for g, e in zip(got, exp)), (got, exp)
+    # every outcome above is exercised
+    assert None in exp and 0.0 in exp and math.inf in exp
+    assert math.isnan(exp[-1]) and any(0 < e < 40 for e in exp[:40])
+
+
 def test_pixels_match_reference(spark):
     raw = images_df(spark, n_rows=400, seed=42).where(
         # keep only healthy payloads: defect rows are other checks' job

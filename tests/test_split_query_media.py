@@ -234,14 +234,18 @@ def test_real_decode_is_stubbed():
 
 
 def test_image_features_vectorized_equivalence(spark):
-    """The grouped-stack phash vectorization must be bit-identical to
-    phash_from_pixels per image — including decode failures, nulls,
-    and shapes not divisible by 8 (per-row fallback path)."""
+    """The Arrow batch decode must be bit-identical to decode_image +
+    phash_from_pixels per image: decode failures (short header, bad
+    magic, truncated body, non-UTF-8 fmt, a 65535x65535 header), nulls,
+    sides below 8 and not multiples of 8, one large image, and a slice
+    with a non-zero offset."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from great_expectations_spark.payload import image as im
     from great_expectations_spark.payload.codec import (
+        HEADER,
+        MAGIC,
         decode_image,
         encode_image,
         phash_from_pixels,
@@ -255,22 +259,49 @@ def test_image_features_vectorized_equivalence(spark):
         payloads.append(encode_image(seed=i, w=w, h=h, fmt="jpeg"))
     payloads += [None, b"FIMGbad", b"",
                  encode_image(seed=7, w=12, h=20, fmt="png")]
+    good = encode_image(seed=3, w=16, h=16, fmt="webp")
+    payloads += [
+        good[: HEADER.size - 1],  # short header
+        b"XIMG" + good[4:],  # bad magic
+        good[:-1],  # truncated body
+        HEADER.pack(MAGIC, b"\xff\xfe\0\0", 2, 2) + bytes(4),  # bad UTF-8
+        HEADER.pack(MAGIC, b"jpeg", 65535, 65535) + bytes(64),
+        encode_image(seed=11, w=512, h=384, fmt="png"),
+    ]
+    for side in range(1, 8):  # empty blocks: the hash is 0
+        payloads.append(encode_image(seed=side, w=side, h=side, fmt="png"))
+        payloads.append(encode_image(seed=side, w=side, h=20, fmt="gif"))
+    for w, h in [(9, 13), (17, 8), (40, 33), (100, 7)]:
+        payloads.append(encode_image(seed=w * h, w=w, h=h, fmt="webp"))
 
-    out = im._image_features.func(pd.Series(payloads, dtype=object))
-    for i, b in enumerate(payloads):
-        want_ok = want_ph = None
-        if b is not None:
-            try:
-                _, w, h, px = decode_image(bytes(b))
-                want_ok, want_ph = True, phash_from_pixels(px)
-            except ValueError:
-                want_ok = False
-        got_ok = out["ok"][i]
-        got_ph = out["phash"][i]
-        assert (got_ok is pd.NA and want_ok is None) or got_ok == want_ok
-        assert (got_ph is pd.NA and want_ph is None) or int(
-            got_ph
-        ) == want_ph, i
+    def check(arr, want):
+        out = im._image_features.func(arr)
+        assert len(out) == len(want)
+        fields = {k: out.field(k).to_pylist() for k in
+                  ("ok", "w", "h", "fmt", "phash")}
+        for i, b in enumerate(want):
+            want_ok = want_ph = want_meta = None
+            if b is not None:
+                try:
+                    fmt, w, h, px = decode_image(bytes(b))
+                    want_ok, want_ph = True, phash_from_pixels(px)
+                    want_meta = (w, h, fmt)
+                except ValueError:
+                    want_ok = False
+            got_ok = fields["ok"][i]
+            got_ph = fields["phash"][i]
+            assert (got_ok is None and want_ok is None) or got_ok == want_ok
+            assert (got_ph is None and want_ph is None) or int(
+                got_ph
+            ) == want_ph, i
+            got_meta = (fields["w"][i], fields["h"][i], fields["fmt"][i])
+            assert got_meta == (want_meta or (None, None, None)), i
+
+    arr = pa.array(payloads, pa.binary())
+    check(arr, payloads)
+    # a non-zero offset into the offsets buffer and validity bitmap
+    check(arr.slice(321), payloads[321:])
+    check(pa.chunked_array([arr.slice(0, 7), arr.slice(7)]), payloads)
 
 
 def test_query_template_reserved_keys_rejected(spark):
